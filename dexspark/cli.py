@@ -1222,7 +1222,7 @@ def main(argv: list[str] | None = None) -> int:
         # trigger sizing from the deployment's own lineage history
         # (O(epochs); null fields when history can't separate the
         # per-trigger constant — see health.trigger_advice)
-        h["trigger_advice"] = trigger_advice(spark, args.warehouse)
+        h["trigger_advice"] = trigger_advice(spark, args.warehouse, io=table.io)
         if args.binlog:
             # optional consumer-lag section: one O(binlog) scan
             h["lag"] = binlog_lag(spark, table, args.binlog)

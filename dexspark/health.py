@@ -8,10 +8,11 @@ the six sinks to query. ``warehouse_health`` assembles it:
 
 - table: manifest-only :meth:`LakeTable.stats` (zero Spark jobs) plus
   the epoch exactly-once state;
-- per-sink: epoch-partition counts from a driver listing (no jobs)
-  and bounded row counts (lineage is O(groups)-sized by design; the
-  quarantine/applied sinks are sized by the retention window, not
-  stream lifetime, so a count over them is a bounded job);
+- per-sink: epoch-partition counts from a driver listing through the
+  table's :class:`~dexspark.lake.FileIO` (no jobs) and bounded row
+  counts (lineage is O(groups)-sized by design; the quarantine/applied
+  sinks are sized by the retention window, not stream lifetime, so a
+  count over them is a bounded job);
 - quarantine: top fail reasons (explode + groupBy, one bounded job) —
   the "what is breaking right now" answer.
 
@@ -26,15 +27,17 @@ import os
 
 from pyspark.sql import SparkSession, functions as F
 
+from .lake import FileIO, default_io
 
-def _epoch_dirs(path: str) -> tuple[int, int] | None:
+
+def _epoch_dirs(path: str, io: FileIO) -> tuple[int, int] | None:
     """(non-negative epoch partitions, fallback partitions) — the
     negative/NULL space holds unattributable anomaly rows and is a
     distinct health signal from stream progress."""
-    if not os.path.isdir(path):
+    if not io.is_dir(path):
         return None
     pos = neg = 0
-    for d in os.listdir(path):
+    for d in io.list_dir(path):
         if not d.startswith("batch_epoch="):
             continue
         try:
@@ -47,21 +50,15 @@ def _epoch_dirs(path: str) -> tuple[int, int] | None:
     return pos, neg
 
 
-def _sink_rollup(spark: SparkSession, path: str, count_rows: bool = True):
-    counts = _epoch_dirs(path)
+def _sink_rollup(spark: SparkSession, path: str, io: FileIO):
+    counts = _epoch_dirs(path, io)
     if counts is None:
         return None
-    out = {"epochs": counts[0], "fallback_epochs": counts[1]}
-    if count_rows:
-        # a healthy run can leave the sink dir EMPTY (zero quarantined
-        # rows); spark.read.parquet on it cannot infer a schema and
-        # would crash the health check for the healthiest deployment
-        out["rows"] = (
-            0
-            if counts == (0, 0)
-            else spark.read.parquet(path).count()
-        )
-    return out
+    # a healthy run can leave the sink dir EMPTY (zero quarantined
+    # rows); spark.read.parquet on it cannot infer a schema and would
+    # crash the health check for the healthiest deployment
+    rows = 0 if counts == (0, 0) else spark.read.parquet(path).count()
+    return {"epochs": counts[0], "fallback_epochs": counts[1], "rows": rows}
 
 
 def warehouse_health(
@@ -71,7 +68,9 @@ def warehouse_health(
     top_reasons: int = 10,
 ) -> dict:
     """Health snapshot for a table + its warehouse sinks. ``table`` is
-    a :class:`~dexspark.lake.LakeTable` (may be a branch view)."""
+    a :class:`~dexspark.lake.LakeTable` (may be a branch view); the
+    sinks are listed through its FileIO."""
+    io = table.io
     w, tail = table.epoch_state()
     health: dict = {
         "table": {
@@ -83,26 +82,26 @@ def warehouse_health(
     }
     sinks = health["sinks"]
     for name in ("lineage", "applied", "profile"):
-        sinks[name] = _sink_rollup(spark, os.path.join(warehouse, name))
+        sinks[name] = _sink_rollup(spark, os.path.join(warehouse, name), io)
 
     sk_path = os.path.join(warehouse, "profile_sketch")
-    live = _epoch_dirs(sk_path)
+    live = _epoch_dirs(sk_path, io)
     if live is None:
         sinks["profile_sketch"] = None
     else:
         sinks["profile_sketch"] = {
             "live_epochs": live[0],
-            "packed": os.path.isdir(os.path.join(sk_path, "_packed")),
+            "packed": io.is_dir(os.path.join(sk_path, "_packed")),
         }
 
     q_path = os.path.join(warehouse, "quarantine")
-    q = _quarantine_rollup(spark, q_path, top_reasons)
+    q = _quarantine_rollup(spark, q_path, top_reasons, io)
     sinks["quarantine"] = q
     return health
 
 
-def _quarantine_rollup(spark: SparkSession, q_path: str, top_reasons: int):
-    q = _sink_rollup(spark, q_path)
+def _quarantine_rollup(spark: SparkSession, q_path: str, top_reasons: int, io: FileIO):
+    q = _sink_rollup(spark, q_path, io)
     if q is not None and q.get("rows") == 0:
         q["top_reasons"] = []
     elif q is not None:
@@ -167,6 +166,7 @@ def quarantine_drift(
     warehouse: str,
     epoch_a: int,
     epoch_b: int,
+    io: FileIO | None = None,
 ) -> dict:
     """Error-mix drift between two epochs of the quarantine sink:
     per-reason FRACTIONS of that epoch's reason occurrences (a row
@@ -179,9 +179,10 @@ def quarantine_drift(
     drift`. One bounded job over two epoch partitions (partition
     pruning reaches the scan). A missing or EMPTY quarantine (the
     healthy case) reports zero occurrences and zero drift instead of
-    failing schema inference."""
+    failing schema inference. ``io`` lists the sink (default:
+    :func:`~dexspark.lake.default_io`)."""
     q_path = os.path.join(warehouse, "quarantine")
-    if _epoch_dirs(q_path) in (None, (0, 0)):
+    if _epoch_dirs(q_path, io or default_io()) in (None, (0, 0)):
         return {
             "epoch_a": int(epoch_a),
             "epoch_b": int(epoch_b),
@@ -229,6 +230,7 @@ def trigger_advice(
     spark: SparkSession,
     warehouse: str,
     target_overhead: float = 0.1,
+    io: FileIO | None = None,
 ) -> dict:
     """Trigger sizing advice from the stream's OWN lineage sink.
 
@@ -251,7 +253,8 @@ def trigger_advice(
     null when the sink is missing or has <3 distinct batch sizes (a
     one-size history cannot separate slope from intercept — run with
     varied trigger sizes, or accept the cross-deployment default of
-    sizing compute ≥ ~10x the constant)."""
+    sizing compute ≥ ~10x the constant). ``io`` lists the sink
+    (default: :func:`~dexspark.lake.default_io`)."""
     path = os.path.join(warehouse, "lineage")
     empty = {
         "batches": 0,
@@ -262,7 +265,7 @@ def trigger_advice(
         "recommended_min_events_per_trigger": None,
         "target_overhead": target_overhead,
     }
-    if _epoch_dirs(path) in (None, (0, 0)):
+    if _epoch_dirs(path, io or default_io()) in (None, (0, 0)):
         return empty
     rows = (
         spark.read.parquet(path)

@@ -52,6 +52,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from .events import _all_nullable
 from .schema import SchemaEvolutionError, evolution_actions, reconcile
 
 _SNAP_DIR = "_snapshots"
@@ -62,6 +63,24 @@ _TOMBSTONE = "_tombstone"  # MOR delete marker column inside commit files
 
 class ConcurrentCommitError(RuntimeError):
     pass
+
+
+# Footer key under which Spark's parquet writer stores the row schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> T.StructType:
+    """Read schema of one Spark-written parquet file, from its footer.
+
+    This is the schema ``spark.read.parquet(path).schema`` infers (the
+    writer's row schema, made nullable), obtained with one driver-side
+    footer read instead of a Spark schema-inference job."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_schema(path).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        raise ValueError(f"{path}: parquet footer carries no Spark row schema")
+    return _all_nullable(T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY])))
 
 
 def _json_scalar(v) -> bool:
@@ -575,6 +594,19 @@ class LakeTable:
     def _bucket_col(self, df: DataFrame, key: str, n: int) -> DataFrame:
         return df.withColumn("_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n)).cast("int"))
 
+    def _empty(self, schema: T.StructType) -> DataFrame:
+        """Empty frame of ``schema``. ``limit(0)`` lets the optimizer
+        replace the Python-backed RDD with an empty local relation, so
+        a plan holding it runs no task for it and starts no Python
+        worker."""
+        return self.spark.createDataFrame([], schema).limit(0)
+
+    def _scan_commit(self, files: list[str]) -> DataFrame:
+        """Scan one commit's data files. A commit's files come from one
+        Spark write and share its schema, so one footer supplies the
+        read schema and Spark runs no schema-inference job."""
+        return self.spark.read.schema(_footer_schema(files[0])).parquet(*files)
+
     # ------------------------------------------- column identity (renames)
     # Iceberg tracks columns by FIELD ID so renames are metadata-only
     # and a re-added name never resurrects dropped data. The manifest
@@ -678,7 +710,9 @@ class LakeTable:
 
         Files are grouped by commit (a commit's files share one schema)
         and each group is aligned to the table schema — this is how old
-        int32 files coexist with a widened int64 column.
+        int32 files coexist with a widened int64 column. Each group's
+        read schema comes from one file's parquet footer, so building
+        the DataFrame launches no Spark job.
 
         Copy-on-write snapshots read shuffle-free (pure union of
         aligned scans). Buckets carrying merge-on-read deltas
@@ -689,7 +723,9 @@ class LakeTable:
         the result through the shuffle-free union path, so at 10^10
         rows a day of MOR merges touching 1% of buckets costs a
         reconstruction shuffle of 1% of the table, not all of it.
-        ``compact()`` folds MOR history back into plain files.
+        ``compact()`` folds MOR history back into plain files. The
+        reconstruction passes the grouping key through as is, so a
+        filter on the key reaches every commit's parquet scan.
 
         ``key_range=(lo, hi)`` additionally drops files whose manifest
         zone map (``file_bounds``, see :meth:`_file_bounds_of`)
@@ -721,13 +757,13 @@ class LakeTable:
                 commit = rel.split("/")[1]  # data/commit-XXXX/...
                 target.setdefault(commit, []).append(os.path.join(self.root, rel))
         if not by_commit and not clean_by_commit:
-            return self.spark.createDataFrame([], schema)
+            return self._empty(schema)
         al, cm = self._aliases_of(m), m.get("columns_meta") or {}
         clean = None
         if clean_by_commit:
             parts = [
                 self._align(
-                    self.spark.read.parquet(*files),
+                    self._scan_commit(files),
                     schema,
                     aliases=al,
                     cmeta=cm,
@@ -750,7 +786,7 @@ class LakeTable:
         # optimistic race at; the manifest's commit_versions map holds
         # its true (logical) commit order.
         for commit, files in by_commit.items():
-            df = self.spark.read.parquet(*files)
+            df = self._scan_commit(files)
             tomb = (
                 F.coalesce(F.col(_TOMBSTONE), F.lit(False))
                 if _TOMBSTONE in df.columns
@@ -781,11 +817,20 @@ class LakeTable:
             F.struct(*data_cols, _TOMBSTONE),
             F.struct(F.col("_commit"), ~F.col(_TOMBSTONE)),
         ).alias("_w")
+        # The key comes from the grouping column, not from ``_w``: a
+        # filter on a grouping column passes through the aggregate and
+        # the union into every commit's parquet scan. That is exact,
+        # because all rows of one key fall into one group.
         recon = (
             out.groupBy(key)
             .agg(winner)
             .filter(~F.col(f"_w.{_TOMBSTONE}"))
-            .select(*[F.col(f"_w.{c}").alias(c) for c in data_cols])
+            .select(
+                *[
+                    F.col(key).alias(c) if c == key else F.col(f"_w.{c}").alias(c)
+                    for c in data_cols
+                ]
+            )
         )
         # keys are bucket-disjoint (bucket = hash(key) mod n), so the
         # clean-bucket union and the MOR reconstruction never overlap
@@ -795,15 +840,17 @@ class LakeTable:
         """Point read by merge key: O(1/num_buckets) of the table.
 
         Computes the key's bucket with the SAME JVM expression the
-        writer uses (a one-row Spark job — never a reimplementation of
-        xxhash64 in Python, which could silently diverge), prunes the
-        snapshot to that bucket, and filters. Catalyst pushes the
-        equality through the MOR reconstruction aggregate (a filter on
-        the grouping key) and the union down to the parquet scans,
-        where row-group stats — and the key bloom filter, when the
-        table carries the ``bloom_filter_key`` property — skip the
-        files that cannot contain it. At 4096 buckets + blooms a point
-        read touches a handful of row groups out of 10^10 rows.
+        writer uses, evaluated on the driver over a local relation (no
+        Spark job, and never a reimplementation of xxhash64 in Python,
+        which could silently diverge). The snapshot is pruned to that
+        bucket and to the files whose zone map can hold the key, then
+        filtered. The equality passes through the MOR reconstruction
+        aggregate (it filters the grouping key) and the union into
+        every parquet scan's pushed filters, where row-group stats —
+        and the key bloom filter, when the table carries the
+        ``bloom_filter_key`` property — skip row groups that cannot
+        contain it. Building the DataFrame launches no Spark job;
+        collecting it runs only the scan and reconstruction jobs.
         """
         return self.lookup_many([value])
 
@@ -812,37 +859,43 @@ class LakeTable:
 
         The probe primitive for batch-vs-index workloads (a
         micro-batch checking itself against a persisted dedup/ANN
-        index): ONE job computes every probe key's bucket with the
-        writer's own JVM expression, the snapshot is pruned to exactly
-        those buckets plus the probe set's [min, max] zone-map window,
-        and the row filter keeps only the probed keys. Cost scales
-        with |values| x (table fraction per bucket), independent of
-        corpus size — never a full index scan per batch.
+        index). The probe keys go to the JVM as an Arrow-backed local
+        relation, and the writer's own bucket expression is evaluated
+        over it on the driver, with no Spark job. The snapshot is
+        pruned to exactly those buckets plus the probe set's
+        [min, max] zone-map window, and the row filter keeps only the
+        probed keys. Cost scales with |values| x (table fraction per
+        bucket), independent of corpus size — never a full index scan
+        per batch.
 
         ``values`` must be driver-sized (a batch's key set, not a
-        table). Small sets filter via ``isin`` (pushed to parquet
-        row-group stats + the key bloom filter when the table carries
-        ``bloom_filter_key``); large sets switch to a broadcast
-        semi-join to keep the filter expression tree bounded.
+        table). Small sets filter via ``isin``, which reaches every
+        parquet scan's pushed filters (row-group stats, plus the key
+        bloom filter when the table carries ``bloom_filter_key``);
+        large sets switch to a broadcast semi-join to keep the filter
+        expression tree bounded.
         """
         key = self.key
         vals = list(dict.fromkeys(values))  # dedupe, keep determinism
         if not vals:
             return self.read(buckets=[])
         key_type = next(f.dataType for f in self.schema.fields if f.name == key)
+        # A pandas frame goes to the JVM through Arrow as a local
+        # relation: the bucket projection below is evaluated on the
+        # driver by the writer's own JVM expression, with no Spark job.
+        import pandas as pd
+
         probe = self.spark.createDataFrame(
-            [(v,) for v in vals], T.StructType([T.StructField(key, key_type, False)])
+            pd.DataFrame({key: vals}), T.StructType([T.StructField(key, key_type, True)])
         )
         nb = self.num_buckets
         buckets = sorted(
-            r["b"]
-            for r in probe.select(
-                F.pmod(F.xxhash64(F.col(key).cast(key_type)), F.lit(nb))
-                .cast("int")
-                .alias("b")
-            )
-            .distinct()
-            .collect()
+            {
+                r[0]
+                for r in probe.select(
+                    F.pmod(F.xxhash64(F.col(key)), F.lit(nb)).cast("int")
+                ).collect()
+            }
         )
         rng = None
         if all(_json_scalar(v) and v is not None for v in vals):
@@ -1405,7 +1458,7 @@ class LakeTable:
         n = keys.count()
         if n == 0:
             return {"version": self.manifest()["version"], "keys_deleted": 0}
-        empty = self.spark.createDataFrame([], self.schema)
+        empty = self._empty(self.schema)
         out = self.merge(empty, delete_keys=keys, mode=mode)
         out["keys_deleted"] = n
         return out
@@ -2605,7 +2658,7 @@ class LakeTable:
                 files = self._commit_files(m, v)
                 if not files:
                     continue
-                df = self.spark.read.parquet(*files)
+                df = self._scan_commit(files)
                 tomb = (
                     F.coalesce(F.col(_TOMBSTONE), F.lit(False))
                     if _TOMBSTONE in df.columns
@@ -2676,7 +2729,7 @@ class LakeTable:
             ]
         )
         if not parts:
-            return self.spark.createDataFrame([], final_schema)
+            return self._empty(final_schema)
         # commits before a schema evolution lack the new columns, and
         # commits before a rename carry the OLD name: align each part
         # (alias-aware) before the union, or a renamed column would

@@ -216,25 +216,29 @@ def score_dsir(
     downstream selection treats it by noise alone rather than crashing
     or silently dropping it (callers gate empties with textquality)."""
     lut = F.lit([float(x) for x in model.log_ratio])
-    # fresh temp name against the caller's schema (engine rule)
-    bname = "_b"
-    while bname in df.columns:
+    # fresh temp names against the caller's schema (engine rule);
+    # case-insensitive, like Spark's column resolution
+    taken = {c.lower() for c in df.columns}
+    bname, wname = "_b", "_wtmp"
+    while bname in taken:
         bname += "_"
+    while wname in taken:
+        wname += "_"
     from pyspark.sql.types import ArrayType
 
     if isinstance(df.schema[text_col].dataType, ArrayType):
         words = F.transform(F.col(text_col), lambda x: x.cast("string"))
     else:
         words = F.split(F.col(text_col), " ")
-    staged = df.withColumn("_wtmp", words).withColumn(
-        bname, _bucket_arrays(F.col("_wtmp"), model.n_buckets, model.k_grams)
+    staged = df.withColumn(wname, words).withColumn(
+        bname, _bucket_arrays(F.col(wname), model.n_buckets, model.k_grams)
     )
     log_w = F.aggregate(
         F.transform(F.col(bname), lambda b: F.element_at(lut, b + 1)),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    return staged.withColumn("log_w", log_w).drop(bname, "_wtmp")
+    return staged.withColumn("log_w", log_w).drop(bname, wname)
 
 
 def _gumbel(key: Column, seed: int) -> Column:

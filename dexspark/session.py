@@ -11,6 +11,27 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Default driver heap: this share of physical memory, rounded down to
+# 256 MB, within [HEAP_FLOOR_MB, HEAP_CAP_MB]. Local mode runs all
+# executors inside the driver JVM, but the host also carries Python
+# workers, off-heap buffers, tmpfs shuffle scratch and sometimes more
+# drivers (concurrent writers each start their own JVM).
+HEAP_SHARE = 0.25
+HEAP_FLOOR_MB = 1024
+HEAP_CAP_MB = 24 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` sized to this host's MemTotal; 4g when
+    the memory size cannot be read."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "4g"
+    mb = int(total_kb / 1024 * HEAP_SHARE) // 256 * 256
+    return f"{max(HEAP_FLOOR_MB, min(HEAP_CAP_MB, mb))}m"
+
 
 def get_spark(
     app_name: str = "dexspark",
@@ -35,7 +56,11 @@ def get_spark(
         # file pruning; Spark 4.1 gates pushFilters behind this conf).
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("DEXSPARK_DRIVER_MEM", "24g"))
+        # DEXSPARK_DRIVER_MEM (e.g. "24g") overrides the host-sized default
+        .config(
+            "spark.driver.memory",
+            os.environ.get("DEXSPARK_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     # Shuffle/spill scratch on tmpfs when available: this sandbox's
     # buffered disk writes cap at ~90MB/s, which would put a serial

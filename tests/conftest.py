@@ -23,3 +23,24 @@ def spark():
 @pytest.fixture()
 def tmp_warehouse(tmp_path):
     return str(tmp_path)
+
+
+@pytest.fixture()
+def footer_schemas_ok(spark):
+    """Check that every data file a LakeTable has written reads, under
+    its footer-derived schema, exactly as Spark's schema inference
+    would read it."""
+    from dexspark.lake import _footer_schema
+
+    def check(table):
+        files = [
+            os.path.join(d, f)
+            for d, _, fs in os.walk(os.path.join(table.root, "data"))
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+        assert files
+        for f in files:
+            assert _footer_schema(f) == spark.read.parquet(f).schema, f
+
+    return check

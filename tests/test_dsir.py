@@ -187,6 +187,21 @@ def test_edge_docs(spark, corpora):
     assert got[2] > 0  # a pure target word scores positive
 
 
+
+def test_score_keeps_caller_columns_named_like_temps(spark, corpora):
+    """A caller's own ``_wtmp`` / ``_b`` columns survive scoring
+    untouched, and the scores match those of the plain frame."""
+    t, r, _, raw_texts = corpora
+    model = learn_dsir(t, r, n_buckets=B, k_grams=KG)
+    mine = r.withColumn("_wtmp", F.lit("keep")).withColumn("_B", F.col("doc_id") * 2)
+    got = score_dsir(mine, model).collect()
+    assert len(got) == len(raw_texts)
+    for row in got:
+        assert row["_wtmp"] == "keep" and row["_B"] == row["doc_id"] * 2
+        assert math.isclose(
+            row["log_w"], _py_logw(raw_texts[row["doc_id"]], model.log_ratio), rel_tol=1e-9
+        )
+
 def test_model_round_trip():
     m = DsirModel(log_ratio=[0.5, -1.25], n_buckets=2, k_grams=(1,), alpha=0.5)
     m2 = DsirModel.from_dict(m.to_dict())

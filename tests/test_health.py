@@ -6,7 +6,7 @@ import os
 from dexspark import gen
 from dexspark.config import EngineConfig
 from dexspark.health import warehouse_health
-from dexspark.lake import LakeTable
+from dexspark.lake import FileIO, LakeTable, LocalFileIO
 from dexspark.schema import sequences_schema
 from dexspark.stream import CdcEngine
 
@@ -303,3 +303,70 @@ def test_trigger_advice_in_cli_health(spark, tmp_warehouse, capsys):
         "per_trigger_fixed_ms", "us_per_event",
         "recommended_min_events_per_trigger", "target_overhead",
     }
+
+
+# ------------------------------------------------------ FileIO seam
+
+
+class _ListingIO(FileIO):
+    """Listing-only FileIO over an in-memory directory tree."""
+
+    def __init__(self, tree):
+        self.tree = tree
+        self.listed = []
+
+    def is_dir(self, path):
+        return path in self.tree
+
+    def list_dir(self, path):
+        self.listed.append(path)
+        return sorted(self.tree.get(path, ()))
+
+
+def test_sink_listing_goes_through_fileio(spark, tmp_path):
+    """Epoch partitions are counted from the FileIO's listing, not the
+    local disk: the fake store's dirs exist nowhere on disk."""
+    from dexspark.health import _epoch_dirs, quarantine_drift, trigger_advice
+
+    wh = str(tmp_path / "store")
+    q = os.path.join(wh, "quarantine")
+    io = _ListingIO(
+        {
+            q: [
+                "batch_epoch=0",
+                "batch_epoch=7",
+                "batch_epoch=-1",
+                "batch_epoch=__HIVE_DEFAULT_PARTITION__",
+                "_SUCCESS",
+            ],
+            os.path.join(wh, "lineage"): [],
+        }
+    )
+    assert _epoch_dirs(q, io) == (2, 2)
+    assert _epoch_dirs(os.path.join(wh, "applied"), io) is None
+    assert io.listed == [q]
+    # an empty lineage sink in the store is "no history", no Spark read
+    assert trigger_advice(spark, wh, io=io)["batches"] == 0
+    assert io.listed[-1] == os.path.join(wh, "lineage")
+    # a store without a quarantine sink reports zero drift
+    assert quarantine_drift(spark, wh, 0, 1, io=_ListingIO({}))["drift_l1"] == 0.0
+
+
+def test_health_lists_sinks_through_table_fileio(spark, tmp_warehouse):
+    """warehouse_health lists the sinks through the table's FileIO."""
+
+    class Recording(LocalFileIO):
+        def __init__(self):
+            self.listed = []
+
+        def list_dir(self, path):
+            self.listed.append(path)
+            return super().list_dir(path)
+
+    root = os.path.join(tmp_warehouse, "t4")
+    LakeTable.create(spark, root, sequences_schema(), key="doc_id", num_buckets=2)
+    os.makedirs(os.path.join(tmp_warehouse, "quarantine"))
+    io = Recording()
+    h = warehouse_health(spark, LakeTable(spark, root, io=io), tmp_warehouse)
+    assert h["sinks"]["quarantine"]["rows"] == 0
+    assert os.path.join(tmp_warehouse, "quarantine") in io.listed

@@ -27,10 +27,40 @@ def table(spark, tmp_warehouse):
     return t
 
 
-def test_create_and_read(table):
+def test_create_and_read(table, footer_schemas_ok):
     rows = _rows(table)
     assert set(rows) == {"a", "b", "c"}
     assert rows["a"]["tokens"] == [1, 2]
+    footer_schemas_ok(table)  # overwrite
+
+
+def test_footer_schemas_of_every_data_write_path(spark, table, footer_schemas_ok):
+    """MOR merge with tombstones, COW merge with deletes, compact,
+    rebucket and rewrite_payload all write files whose footer schema
+    is the one Spark infers; the snapshot reads right after each."""
+    want = _rows(table)
+    ups = spark.createDataFrame([("d", [7], 1, "web")], schema=sequences_schema())
+    dels = spark.createDataFrame([("b",)], "doc_id string")
+    table.merge(ups, dels, epochs=[1], mode="mor")
+    want.pop("b")
+    want["d"] = {"doc_id": "d", "tokens": [7], "n_tok": 1, "source": "web"}
+    assert _rows(table) == want
+    ups = spark.createDataFrame([("e", [8], 1, "books")], schema=sequences_schema())
+    table.merge(ups, spark.createDataFrame([("c",)], "doc_id string"), epochs=[2])
+    want.pop("c")
+    want["e"] = {"doc_id": "e", "tokens": [8], "n_tok": 1, "source": "books"}
+    assert _rows(table) == want
+    table.merge(ups.withColumn("source", F.lit("wiki")), epochs=[3], mode="mor")
+    want["e"]["source"] = "wiki"
+    assert table.compact()["compacted"]
+    assert _rows(table) == want
+    assert table.rebucket(8)["rebucketed"]
+    assert _rows(table) == want
+    table.rewrite_payload({"tokens": F.transform("tokens", lambda t: t + 1)})
+    for r in want.values():
+        r["tokens"] = [t + 1 for t in r["tokens"]]
+    assert _rows(table) == want
+    footer_schemas_ok(table)
 
 
 def test_merge_upsert_insert_delete(spark, table):
@@ -141,7 +171,7 @@ def test_epoch_below_base_straggler_not_swallowed(spark, table):
     assert table.epoch_state() == (5, [])
 
 
-def test_additive_schema_evolution(spark, table):
+def test_additive_schema_evolution(spark, table, footer_schemas_ok):
     evolved = T.StructType(
         list(sequences_schema().fields) + [T.StructField("lang", T.StringType(), True)]
     )
@@ -151,9 +181,10 @@ def test_additive_schema_evolution(spark, table):
     rows = _rows(table)
     assert rows["x"]["lang"] == "en"
     assert rows["a"]["lang"] is None  # old rows null-filled
+    footer_schemas_ok(table)
 
 
-def test_int_widening(spark, table):
+def test_int_widening(spark, table, footer_schemas_ok):
     widened = T.StructType(
         [
             T.StructField("doc_id", T.StringType(), False),
@@ -169,6 +200,7 @@ def test_int_widening(spark, table):
     assert rows["y"]["tokens"] == [2**40]
     assert rows["a"]["tokens"] == [1, 2]  # old int32 data still readable
     assert dict(table.read().dtypes)["n_tok"] == "bigint"
+    footer_schemas_ok(table)  # int32 and int64 files side by side
 
 
 def test_reconcile_rejects_narrowing():
@@ -246,6 +278,8 @@ def test_vacuum_removes_expired_and_orphans(spark, table):
     assert _rows(table) == want  # current snapshot fully intact
     with pytest.raises(FileNotFoundError):
         table.manifest(v_old)  # expired version no longer readable
+    with pytest.raises(FileNotFoundError):
+        table.read(version=v_old)
 
 
 def test_vacuum_default_spares_young_dirs(spark, table):
@@ -467,6 +501,68 @@ def test_lookup_prunes_to_one_bucket_and_pushes_filter(spark, tmp_path):
     assert len(got) == 1 and got[0]["source"] == "s2"
     plan = t.lookup("doc-123")._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "doc-123" in plan
+
+
+def _jobs_run(spark, fn):
+    """(fn's result, number of Spark jobs fn launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_reads_plan_without_jobs(spark, tmp_path):
+    """At merge-on-read depth 4, building read() and changes() frames
+    launches no Spark job (schemas come from parquet footers, bucket
+    ids from a local relation); a lookup runs only the jobs of the
+    reconstruction itself, and its key equality reaches every parquet
+    scan through the reconstruction aggregate."""
+    import re
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), sequences_schema(), num_buckets=4)
+    t.overwrite(
+        spark.range(200).select(
+            F.concat(F.lit("doc-"), F.col("id")).alias("doc_id"),
+            F.array(F.col("id").cast("int")).alias("tokens"),
+            F.lit(1).alias("n_tok"),
+            F.lit("s").alias("source"),
+        )
+    )
+    v0 = t.current_version()
+    for i in range(4):
+        t.merge(
+            spark.createDataFrame([("doc-7", [i], 1, f"m{i}")], schema=sequences_schema()),
+            spark.createDataFrame([(f"doc-{i + 20}",)], "doc_id string"),
+            mode="mor",
+        )
+    assert max(t.mor_buckets().values()) == 4
+    assert _jobs_run(spark, t.read)[1] == 0
+    assert _jobs_run(spark, lambda: t.changes(v0))[1] == 0
+    df, planning = _jobs_run(spark, lambda: t.lookup("doc-7"))
+    assert planning == 0
+    rows, reconstruction = _jobs_run(spark, df.collect)
+    assert [r["source"] for r in rows] == ["m3"]
+    rows, total = _jobs_run(spark, lambda: t.lookup("doc-7").collect())
+    assert [r["source"] for r in rows] == ["m3"] and total == reconstruction
+    assert _jobs_run(spark, lambda: t.lookup_many(["doc-7", "doc-20"]).collect())[1] == total
+    plan = t.lookup("doc-7")._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 5  # the overwrite and the four merge-on-read commits
+    for ln in scans:
+        pushed = re.search(r"PushedFilters: \[([^\]]*)\]", ln).group(1)
+        assert "EqualTo(doc_id,doc-7)" in pushed, ln
+    # the empty side of the overwrite's diff against the table's first,
+    # empty version plans as an empty local relation: no Python-backed
+    # RDD, so running it starts no Python worker
+    plan = t.changes(v0 - 1)._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
 
 
 def test_bloom_filter_property_writes_blooms(spark, tmp_path):

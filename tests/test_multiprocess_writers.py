@@ -100,3 +100,20 @@ def test_two_process_concurrent_merges(spark, tmp_path):
     # minimum; rebases may add none — versions are unique, not dense)
     merge_ops = [h for h in hist if h["operation"].startswith("merge-")]
     assert len(merge_ops) == 2 * batches
+
+
+def test_default_driver_heap_fits_host(tmp_path):
+    """Each writer JVM above takes the host-sized default heap: a
+    quarter of MemTotal in 256 MB steps, 1 GB floor, 24 GB cap."""
+    from dexspark.session import default_driver_memory
+
+    def heap(total_kb):
+        p = tmp_path / f"meminfo-{total_kb}"
+        p.write_text(f"MemFree:         1024 kB\nMemTotal:       {total_kb} kB\n")
+        return default_driver_memory(str(p))
+
+    assert heap(15 * 1024 * 1024) == "3840m"
+    assert heap(15 * 1024 * 1024 + 900 * 1024) == "3840m"
+    assert heap(128 * 1024 * 1024) == "24576m"
+    assert heap(2 * 1024 * 1024) == "1024m"
+    assert default_driver_memory(str(tmp_path / "absent")) == "4g"

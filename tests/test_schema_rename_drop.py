@@ -32,7 +32,7 @@ def t(spark, tmp_path):
     return t
 
 
-def test_rename_is_metadata_only_and_reads_old_files(t, spark):
+def test_rename_is_metadata_only_and_reads_old_files(t, spark, footer_schemas_ok):
     v_before = t.current_version()
     t.rename_column("n_tok", "tok_count")
     # no data commit happened
@@ -43,6 +43,16 @@ def test_rename_is_metadata_only_and_reads_old_files(t, spark):
     # time travel: the pre-rename snapshot still shows the old name
     old = t.read(version=v_before)
     assert "n_tok" in old.columns and "tok_count" not in old.columns
+    # a file written under the new name beside the old-name files
+    t.merge(
+        spark.createDataFrame(
+            [("d7", [7], 1, "b")],
+            "doc_id string, tokens array<int>, tok_count int, source string",
+        ),
+        mode="mor",
+    )
+    assert t.read().filter(F.col("tok_count") == 1).count() == 7
+    footer_schemas_ok(t)
 
 
 def test_stale_producer_old_name_lands_in_renamed_column(t, spark):
@@ -81,7 +91,7 @@ def test_rename_collision_guards(t):
         t.rename_column("nope", "x")
 
 
-def test_drop_then_readd_does_not_resurrect(t, spark):
+def test_drop_then_readd_does_not_resurrect(t, spark, footer_schemas_ok):
     t.drop_column("source")
     assert "source" not in t.read().columns
     # re-add the SAME name via additive evolution on a merge
@@ -91,6 +101,7 @@ def test_drop_then_readd_does_not_resurrect(t, spark):
     # rows untouched since the drop must read null, even though the
     # old files still physically hold 'a'
     assert all(got[f"d{i}"] is None for i in range(1, 6))
+    footer_schemas_ok(t)
 
 
 def test_drop_key_refused(t):
