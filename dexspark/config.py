@@ -219,8 +219,9 @@ class EngineConfig:
     # judge post-images. Cost: one extra bucket-pruned read per batch.
     # Deltas vs the default path: validation rejects are per RESOLVED
     # KEY (the whole key's window is withheld, quarantined as the
-    # resolved row rendered to JSON), and applied_lineage is not
-    # emitted (a resolved row has no single parent event).
+    # resolved row rendered to JSON). applied_lineage raises
+    # ValueError: a resolved row has no single parent event, and
+    # without that sink reprocess_quarantine's stale guard is off.
     patch_events: bool = False
     # Corpus-level near-duplicate gate (operators/dedup_index.py):
     # when on, each batch's winning upserts are MinHash-signed and

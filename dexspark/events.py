@@ -301,8 +301,7 @@ def compact_binlog(
     from .validate import FAIL_COL, validate_frame
 
     rules = rules or RuleSet()
-    reader = read_binlog_parquet if _dir_looks_parquet(in_dir) else read_binlog
-    parsed = reader(spark, in_dir, payload_schema)
+    parsed = open_binlog(spark, in_dir, payload_schema)
     ev = classify(parsed, op_whitelist=rules.op_whitelist)
     flat = ev.select(
         "raw", "event_class", "op", "doc_id", F.col("payload.*"),
@@ -389,7 +388,29 @@ def binlog_looks_parquet(path: str) -> bool:
     )
 
 
-_dir_looks_parquet = binlog_looks_parquet
+def open_binlog(
+    spark: SparkSession,
+    path: str,
+    payload_schema: T.StructType | None = None,
+    format: str | None = None,
+    stream: bool = False,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Read a change-log directory with the reader its encoding needs:
+    ``format`` "parquet" (structured log) or "json" (ndjson), sniffed
+    by :func:`binlog_looks_parquet` when omitted. ``stream`` opens the
+    Structured Streaming tail instead of a batch read."""
+    if format is None:
+        format = "parquet" if binlog_looks_parquet(path) else "json"
+    parquet = format == "parquet"
+    if stream:
+        reader = read_binlog_parquet_stream if parquet else read_binlog_stream
+        return reader(
+            spark, path, payload_schema,
+            max_files_per_trigger=max_files_per_trigger,
+        )
+    reader = read_binlog_parquet if parquet else read_binlog
+    return reader(spark, path, payload_schema)
 
 
 def parse_kafka_values(

@@ -133,13 +133,10 @@ def binlog_lag(spark: SparkSession, table, binlog: str) -> dict:
     is auto-sniffed like every other consumer (``apply_binlog``,
     the router): a structured parquet log read as JSON would count
     every event unattributable."""
-    from .events import binlog_looks_parquet, read_binlog, read_binlog_parquet
+    from .events import open_binlog
 
-    reader = (
-        read_binlog_parquet if binlog_looks_parquet(binlog) else read_binlog
-    )
     w, tail = table.epoch_state()
-    ev = reader(spark, binlog).select("batch_epoch")
+    ev = open_binlog(spark, binlog).select("batch_epoch")
     e = F.col("batch_epoch")
     pending = e.isNotNull() & (e >= 0) & (e > w)
     if tail:  # committed out-of-order epochs above the watermark

@@ -185,32 +185,3 @@ def resolve_patch_batch(table, events: DataFrame, schema=None) -> dict:
     dels = j.filter(F.col("_final_delete")).select(key)
     return {"ups": ups, "dels": dels, "touched": touched, "num_buckets": nb}
 
-
-def apply_patches(
-    table,
-    events: DataFrame,
-    mode: str = "cow",
-    epochs: list[int] | None = None,
-    validate=None,
-) -> dict:
-    """Fold a patch-event batch into ``table`` (resolve + merge).
-
-    ``validate``: optional callable ``DataFrame -> DataFrame`` applied
-    to the RESOLVED post-image rows before the merge (rules must judge
-    whole rows; a fragment can't satisfy ``n_tok == size(tokens)``).
-    Returns the merge info dict.
-    """
-    r = resolve_patch_batch(table, events)
-    ups = r["ups"].drop("_last_commit_ts", "_last_lsn")
-    if EPOCH_COL in ups.columns:
-        ups = ups.drop(EPOCH_COL)
-    if validate is not None:
-        ups = validate(ups)
-    return table.merge(
-        ups,
-        delete_keys=r["dels"],
-        mode=mode,
-        epochs=epochs,
-        affected_buckets=r["touched"],
-        affected_buckets_nb=r["num_buckets"],
-    )

@@ -48,9 +48,9 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from .events import binlog_looks_parquet, read_binlog, read_binlog_parquet
+from .events import open_binlog
 from .lineage import write_quarantine
-from .stream import BatchMetrics, CdcEngine
+from .stream import BatchMetrics, CdcEngine, start_tail
 from .validate import FAIL_COL
 
 
@@ -419,14 +419,13 @@ class RoutedEngine:
         faster than checkpoint-sharing for the replay shape (BENCH.md
         routed A/B). Logs whose layout doesn't name epochs fall back
         to the shared-scan path."""
-        if format is None:
-            format = "parquet" if binlog_looks_parquet(binlog_path) else "json"
-        reader = read_binlog_parquet if format == "parquet" else read_binlog
         # routes may carry different payload schemas; parse with the
         # first route's (schema reconcile inside each engine handles
         # additive drift route-by-route)
         any_engine = next(iter(self.routes.values()))
-        parsed = reader(self.spark, binlog_path, any_engine.payload_schema)
+        parsed = open_binlog(
+            self.spark, binlog_path, any_engine.payload_schema, format
+        )
         epochs = self._epochs_from_listing(binlog_path)
         return self.apply_batch(
             parsed, extra_epochs=epochs, share_scan=epochs is None
@@ -449,57 +448,33 @@ class RoutedEngine:
         checkpoint once); each route's epoch markers keep its own
         table idempotent, so redelivery after a crash converges every
         route independently."""
-        from .events import read_binlog_parquet_stream, read_binlog_stream
-
-        if format is None:
-            format = "parquet" if binlog_looks_parquet(binlog_path) else "json"
-        stream_reader = (
-            read_binlog_parquet_stream if format == "parquet" else read_binlog_stream
-        )
         any_engine = next(iter(self.routes.values()))
-        parsed = stream_reader(
+        parsed = open_binlog(
             self.spark,
             binlog_path,
             any_engine.payload_schema,
+            format,
+            stream=True,
             max_files_per_trigger=max_files_per_trigger,
         )
-
         # per-route pinned fresh-epoch filters: plan literals stay
-        # identical across triggers (see CdcEngine.apply_batch)
+        # identical across triggers (see CdcEngine.pinned_fresh_filter)
         pinned = {
-            name: eng._fresh_epoch_filter()
-            for name, eng in self.routes.items()
-            if not eng.config.patch_events
+            name: eng.pinned_fresh_filter() for name, eng in self.routes.items()
         }
 
         def _process(batch_df: DataFrame, epoch_id: int) -> None:
             self.apply_batch(batch_df, defer_boundary=True, fresh_filters=pinned)
 
-        writer = parsed.writeStream.foreachBatch(_process).option(
-            "checkpointLocation", checkpoint_path
+        return start_tail(
+            parsed, _process, checkpoint_path, available_now, processing_time
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
 
     def flush_epoch_markers(self) -> dict[str, list[int]]:
         """End-of-stream: commit every route's deferred boundary
         markers (manifest-only; see CdcEngine.flush_epoch_markers)."""
         return {n: e.flush_epoch_markers() for n, e in self.routes.items()}
 
-    def run_until_caught_up(
-        self,
-        binlog_path: str,
-        checkpoint_path: str,
-        max_files_per_trigger: int | None = None,
-    ) -> None:
-        q = self.run_stream(
-            binlog_path,
-            checkpoint_path,
-            available_now=True,
-            max_files_per_trigger=max_files_per_trigger,
-        )
-        q.awaitTermination()
-        self.flush_epoch_markers()
+    # the engine's drain: availableNow tail, then flush the deferred
+    # boundary markers (it calls only run_stream + flush_epoch_markers)
+    run_until_caught_up = CdcEngine.run_until_caught_up

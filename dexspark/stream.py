@@ -7,52 +7,55 @@ Pipeline per micro-batch (SURVEY.md §3.1 "new-engine trace"):
       -> drop already-committed epochs          (exactly-once, idempotent;
                                                  known from the manifest,
                                                  no scan needed)
-      -> payload validation                     (validate.py, V8/V10/V11/V13...)
-      -> quarantine tagging                     (V17 error accumulation)
-      -> per-key last-writer-wins dedup         (A5; skew-proof aggregate)
+      -> resolve events to per-key post-images  (validation V8/V10/V11/V13,
+                                                 quarantine tagging V17,
+                                                 dedup A5 or composition)
       -> schema reconcile + MERGE               (J2/J3/J4; lake.py)
       -> lineage + epoch markers                (A4; lineage.py)
 
-Execution shape per batch: the change log is scanned and parsed
-EXACTLY ONCE. That one scan feeds a single grouping-sets aggregate
-(set 1 = per-key dedup, with quarantined/skipped events passing
-through under unique synthetic keys; set 2 = the per-(epoch,
-partition, source, class) lineage rollup), whose small output is
-locally checkpointed and fan-consumed by the stats collect, the MERGE
-inputs, and the quarantine write. Shuffle budget: ONE shuffle at that
-aggregate (map-side partial aggregation collapses hot keys before the
-exchange) and ONE join + bucket-write shuffle at the merge. Filters
-and column pruning reach the scans; validation is whole-stage-codegen
-Column exprs (or mapInArrow masks when configured); no per-row Python
-anywhere; lineage is written driver-side (pyarrow) because its rollup
-is already collected.
+One shell, two resolvers. :meth:`CdcEngine.apply_batch` is the only
+exactly-once protocol: the fresh-epoch filter, deferred boundary
+markers, the batch-content fallback partition, sinks written before
+the marker-committing merge, merge maintenance, ``BatchMetrics`` and
+lineage. The one step that varies is "resolve events to per-key
+post-images", and it is one of two resolvers, each returning a
+:class:`_Resolved` record:
+
+* ``_resolve_lww`` (default): per-event validation, then per-key
+  last-writer-wins. The change log is scanned and parsed EXACTLY
+  ONCE; that scan feeds a single grouping-sets aggregate (set 1 =
+  per-key dedup, with quarantined/skipped events passing through
+  under unique synthetic keys; set 2 = the per-(epoch, partition,
+  source, class) lineage rollup), whose small output is locally
+  checkpointed and fan-consumed by the stats collect, the MERGE
+  inputs and the quarantine write. Shuffle budget: ONE shuffle at
+  that aggregate (map-side partial aggregation collapses hot keys
+  before the exchange) and ONE join + bucket-write shuffle at the
+  merge. Validation is whole-stage-codegen Column exprs (or
+  mapInArrow masks when configured); no per-row Python anywhere.
+* ``_resolve_patch`` (``EngineConfig.patch_events``): partial images
+  compose per key in (commit_ts, lsn) order against the affected
+  buckets (operators/patch.py), and validation judges the resolved
+  post-images, so rejects are per key.
+
+Lineage is written driver-side (pyarrow) because its rollup is already
+collected.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from .config import EngineConfig
-from .events import (
-    binlog_looks_parquet,
-    classify,
-    parse_envelopes,
-    read_binlog,
-    read_binlog_parquet,
-    read_binlog_parquet_stream,
-    read_binlog_stream,
-)
+from .events import classify, open_binlog, parse_envelopes
 from .lake import LakeTable
 from .lineage import write_applied, write_lineage_rows, write_quarantine
 from .validate import FAIL_COL, validate_frame
-
-
-# one sniffing rule engine-wide (see events.binlog_looks_parquet)
-_looks_parquet = binlog_looks_parquet
 
 
 def _no_marker_epoch():
@@ -62,6 +65,91 @@ def _no_marker_epoch():
     partition."""
     e = F.col("batch_epoch")
     return e.isNull() | (e < 0)
+
+
+def _fallback_epoch(xor: int | None, n: int | None) -> int:
+    """The batch-content fallback partition of unattributable rows,
+    from an order-independent signature of their multiset (``xor`` of
+    per-row 64-bit hashes, ``n`` rows): identical redelivery lands in
+    the same partition (dynamic overwrite is a no-op rewrite, keeping
+    the quarantine exactly-once), while any different batch lands in
+    a different 62-bit partition — collision odds ~2^-62 per pair vs
+    ~2^-20 for the old min-hash % 1e6 scheme, which could silently
+    erase an earlier batch's rows on collision. Names are persisted:
+    redelivery across an upgrade must keep hitting the same one."""
+    if xor is None:
+        return -1
+    combined = (int(xor) * 0x9E3779B97F4A7C15 + int(n or 0)) % (1 << 63)
+    return -1 - (combined % (1 << 62))
+
+
+_META_COLS = (
+    "raw", "event_class", "op", "doc_id",
+    "commit_ts", "lsn", "batch_epoch", "envelope_fail", "_pid", FAIL_COL,
+)
+
+
+def _gated_events(
+    ev: DataFrame, rules, validator: str, *extra: Column
+) -> tuple[DataFrame, list[str]]:
+    """Flatten classified events (envelope + ``payload.*`` + ``extra``),
+    run the payload rules, and gate ``fail_reasons``: envelope rejects
+    carry their envelope failure; only apply-upserts keep payload-rule
+    failures (deletes have no payload to validate). Returns the gated
+    frame and the payload column names."""
+    flat = ev.select(
+        "raw", "event_class", "op", "doc_id", F.col("payload.*"),
+        "commit_ts", "lsn", "batch_epoch", "envelope_fail", *extra,
+    )
+    payload_cols = [c for c in flat.columns if c not in _META_COLS]
+    gated = validate_frame(flat, rules, validator).withColumn(
+        FAIL_COL,
+        F.when(F.col("event_class") == "reject", F.array("envelope_fail"))
+        .when(
+            (F.col("event_class") == "apply") & (F.col("op") != "delete"),
+            F.col(FAIL_COL),
+        ),
+    )
+    return gated, payload_cols
+
+
+def _collect_fused(rows: DataFrame, one: DataFrame) -> tuple[list, object]:
+    """ONE driver round-trip for a small frame's ``rows`` and a
+    one-row aggregate ``one`` over the same materialized batch (e.g.
+    the lineage rollup and the batch stats): the union collapses two
+    per-trigger jobs into one."""
+    out = (
+        rows.withColumn("_row_kind", F.lit("lin"))
+        .unionByName(
+            one.withColumn("_row_kind", F.lit("stats")),
+            allowMissingColumns=True,
+        )
+        .collect()
+    )
+    return (
+        [r for r in out if r["_row_kind"] == "lin"],
+        next(r for r in out if r["_row_kind"] == "stats"),
+    )
+
+
+def start_tail(
+    parsed: DataFrame,
+    process,
+    checkpoint_path: str,
+    available_now: bool,
+    processing_time: str,
+):
+    """Start a ``foreachBatch`` tail of ``parsed`` calling
+    ``process(batch_df, epoch_id)`` per trigger: availableNow drains
+    the backlog and stops; otherwise a processing-time trigger."""
+    writer = parsed.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_path
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
 
 
 @dataclass
@@ -74,6 +162,35 @@ class BatchMetrics:
     epochs: list[int] = field(default_factory=list)
     wall_ms: int = 0
     phase_ms: dict = field(default_factory=dict)  # per-phase wall (debug)
+
+
+@dataclass
+class _Resolved:
+    """A resolver's output: everything :meth:`CdcEngine.apply_batch`
+    needs from the mode-specific step. ``lin_groups`` empty means the
+    batch held no fresh events (the other fields stay unset)."""
+
+    lin_groups: list
+    # multiset signature of the unattributable quarantine rows
+    # (see _fallback_epoch)
+    q_xor: int | None = None
+    q_n: int = 0
+    upserts: DataFrame | None = None  # doc_id + payload columns
+    deletes: DataFrame | None = None  # doc_id
+    buckets: list[int] = field(default_factory=list)
+    num_buckets: int = 0  # the bucket count ``buckets`` were hashed for
+    # raw, doc_id, fail_reasons, batch_epoch (NULL / negative epochs
+    # are mapped to the fallback partition by the shell)
+    quarantine: DataFrame | None = None
+    # sink inputs, built only when their sink is configured: the
+    # applied-lineage rows (LWW only) and the upserts about to merge
+    # plus batch_epoch (the profile)
+    applied: DataFrame | None = None
+    profile: DataFrame | None = None
+    rows_merged: int = 0
+    val_rejects: int = 0
+    phase: str = ""  # phase_ms key of the resolve step
+    pinned: list = field(default_factory=list)  # checkpoints to unpersist
 
 
 class CdcEngine:
@@ -125,7 +242,17 @@ class CdcEngine:
                     else None
                 ),
             )
+        if self.config.patch_events and self.config.applied_lineage:
+            # a resolved post-image has no single parent event, so patch
+            # mode writes no applied sink — and reprocess_quarantine's
+            # stale-event guard, which reads it, would be silently off
+            raise ValueError(
+                "applied_lineage is not supported with patch_events"
+            )
         self._nd_sig = self._nd_band = None
+        # the gate's checkpointed batch signatures, handed from
+        # _gate_near_dups to the post-merge index fold
+        self._last_gate_sigs = None
         if self.config.near_dup_gate:
             if self.config.patch_events:
                 raise ValueError(
@@ -175,17 +302,28 @@ class CdcEngine:
         # bkey posting rows), so compact()'s per-key-winner rewrite is
         # exact.
         for t in (self._nd_sig, self._nd_band):
-            if (
-                self.config.compact_every
-                and int(t.manifest().get("mor_depth", 0))
-                >= self.config.compact_every
-            ):
-                t.compact(min_depth=self.config.compact_every)
-            if self.config.vacuum_keep_last > 0:
-                t.vacuum(
-                    keep_last=self.config.vacuum_keep_last,
-                    min_age_seconds=self.config.vacuum_min_age_seconds,
-                )
+            self._maintain(t, int(t.manifest().get("mor_depth", 0)))
+
+    def _maintain(self, t: LakeTable, mor_depth: int) -> None:
+        """Post-merge maintenance of ``t`` whose deepest bucket is now
+        ``mor_depth`` MOR deltas deep. Compaction touches ONLY the
+        buckets whose depth reached ``compact_every`` — the pause is
+        O(hot buckets), never a full-table rewrite. Then the snapshot
+        retention policy (expire + orphan GC); min_age spares a
+        concurrent writer's in-flight commit dirs (see
+        EngineConfig.vacuum_min_age_seconds). Retention is skipped on
+        a BRANCH handle (write-audit-publish staging): it is a
+        whole-table op that must run from the main handle — and
+        expiring main history out from under an unpublished fork is
+        the operator's call, not the stager's."""
+        every = self.config.compact_every
+        if every and mor_depth >= every:
+            t.compact(min_depth=every)
+        if self.config.vacuum_keep_last > 0 and t.branch is None:
+            t.vacuum(
+                keep_last=self.config.vacuum_keep_last,
+                min_age_seconds=self.config.vacuum_min_age_seconds,
+            )
 
     def _gate_near_dups(self, latest: DataFrame, payload_cols) -> DataFrame:
         """Re-classify near-duplicate upserts in ``latest`` as
@@ -358,6 +496,30 @@ class CdcEngine:
         self._deferred_epochs = {e for e in pending if e > cutoff}
         return sorted(e for e in pending if e <= cutoff)
 
+    def pinned_fresh_filter(self) -> F.Column | None:
+        """The already-committed filter a stream pins at its start and
+        passes to every trigger's :meth:`apply_batch`, or None for a
+        live per-trigger filter. The live filter embeds the advancing
+        watermark as plan literals, so every trigger generates
+        different whole-stage code and recompiles the scan stage;
+        pinning keeps the per-trigger plans byte-identical — codegen
+        cache hits instead of compiles. Safe under last-writer-wins
+        because (a) the pin absorbs everything committed BEFORE the
+        stream started (the crash-restart replay case — a restart
+        re-pins at its own start), and (b) within a run the only
+        events a live filter would additionally drop are a same-batch
+        retry's — whose re-application is content-idempotent
+        (identical winners, identical MERGE), the same trade already
+        accepted for the deferred boundary epoch. A producer violating
+        epoch-monotone delivery (late file for an epoch marked
+        mid-run) gets its events applied rather than silently
+        swallowed — arguably the safer failure mode. Patch mode gets
+        no pin: patches COMPOSE, so re-application there is not
+        idempotent and the live filter stays load-bearing."""
+        if self.config.patch_events:
+            return None
+        return self._fresh_epoch_filter()
+
     def apply_batch(
         self,
         parsed: DataFrame,
@@ -366,6 +528,12 @@ class CdcEngine:
         fresh_filter: F.Column | None = None,
     ) -> BatchMetrics:
         """Apply one micro-batch of parsed change events exactly-once.
+
+        The one exactly-once shell of both event modes: classify, drop
+        already-committed epochs, resolve events to per-key post-images
+        (``_resolve_lww``, or ``_resolve_patch`` under
+        ``EngineConfig.patch_events``), write the sinks, MERGE with the
+        epoch markers, maintain the table, then metrics and lineage.
 
         ``extra_epochs``: epochs known (by the caller) to be fully
         delivered to THIS engine in this batch even if none of their
@@ -395,25 +563,8 @@ class CdcEngine:
         epoch in it is complete by construction.
 
         ``fresh_filter``: a PINNED already-committed filter computed
-        once at stream start (see run_stream). The live filter embeds
-        the advancing watermark as plan literals, so every trigger
-        generates different whole-stage code and recompiles the scan
-        stage; pinning keeps the per-trigger plans byte-identical —
-        codegen cache hits instead of compiles. Safe because (a) the
-        pin absorbs everything committed BEFORE the stream started
-        (the crash-restart replay case — a restart re-pins at its own
-        start), and (b) within a run the only events a live filter
-        would additionally drop are a same-batch retry's — whose
-        re-application is content-idempotent under LWW (identical
-        winners, identical MERGE), the same trade already accepted
-        for the deferred boundary epoch. A producer violating
-        epoch-monotone delivery (late file for an epoch marked
-        mid-run) gets its events applied rather than silently
-        swallowed — arguably the safer failure mode. NOT used by the
-        patch path: patches COMPOSE, so re-application there is not
-        idempotent and the live filter stays load-bearing."""
-        if self.config.patch_events:
-            return self._apply_batch_patch(parsed, defer_boundary, extra_epochs)
+        once at stream start; None uses the live filter. Whether a
+        stream may pin is decided by :meth:`pinned_fresh_filter`."""
         t0 = time.monotonic()
         phases: dict[str, int] = {}
 
@@ -422,64 +573,222 @@ class CdcEngine:
             phases[name] = int((now - since) * 1000)
             return now
 
-        rules = self.config.rules
-        ev = classify(parsed, op_whitelist=rules.op_whitelist)
-
-        # ONE full scan per batch. Committed epochs are known from the
-        # table manifest (driver-side, no scan), so the batch filters
-        # them out up front; everything else — validation, last-writer-
-        # wins dedup, quarantine staging, AND the per-(epoch, partition,
-        # source, class) lineage rollup — rides a single scan + shuffle
-        # via GROUPING SETS: set 1 groups by the dedup key (quarantined
-        # and skipped events pass through under unique synthetic keys
-        # 'q#'+lsn, or 'q#'+xxhash64(raw) for malformed lines with no
-        # lsn), set 2 groups by the lineage dimensions. Full-batch
-        # persistence was measured NOT to pay off (block-cache build
-        # flat ~13s at any core count; a staging parquet write costs
-        # more than the scan it saves — see BENCH notes), but the
-        # post-aggregate output is tiny (one row per touched key + one
-        # per quarantined/skipped event + lineage groups) and is cached
-        # for its consumers: stats, merge inputs, quarantine write.
-        # Already-committed filter stays O(1)-sized no matter how many
-        # epochs the table has applied: a high-watermark comparison
-        # plus an isin over the (bounded-by-reordering) out-of-order
-        # tail. A flat isin over every epoch ever committed would grow
-        # the predicate/plan linearly with stream lifetime (10^5-10^6
+        ev = classify(parsed, op_whitelist=self.config.rules.op_whitelist)
+        # Committed epochs are known from the table manifest
+        # (driver-side, no scan), so the batch filters them out up
+        # front. The filter stays O(1)-sized no matter how many epochs
+        # the table has applied: a high-watermark comparison plus an
+        # isin over the (bounded-by-reordering) out-of-order tail. A
+        # flat isin over every epoch ever committed would grow the
+        # predicate/plan linearly with stream lifetime (10^5-10^6
         # literals after a year of micro-batches).
         live = ev.filter(
             fresh_filter if fresh_filter is not None
             else self._fresh_epoch_filter()
         )
+        res = None
+        try:
+            if self.config.patch_events:
+                res = self._resolve_patch(live)
+            else:
+                res = self._resolve_lww(live)
+            lin_groups = res.lin_groups
+            # markers live in the non-negative epoch space only: NULL
+            # epochs (malformed lines) and negative epochs (producer
+            # bug, rejected at classify) are never committed as markers
+            new_epochs = sorted(
+                {
+                    int(r["_epoch"])
+                    for r in lin_groups
+                    if r["_epoch"] is not None and int(r["_epoch"]) >= 0
+                }
+                | self._already_committed_filtered(extra_epochs)
+            )
+            to_mark = self._marks_for(new_epochs, defer_boundary)
+            if not lin_groups:  # empty binlog or every epoch already committed
+                # the router may still owe this route markers for
+                # epochs that routed zero events here (manifest-only)
+                if to_mark:
+                    self.table.mark_epochs(to_mark)
+                return BatchMetrics(
+                    epochs=to_mark, wall_ms=int((time.monotonic() - t0) * 1000)
+                )
+            by_class: dict[str, int] = {}
+            for r in lin_groups:
+                by_class[r["_class"]] = by_class.get(r["_class"], 0) + r["_n_events"]
+            n_env_rejects = by_class.get("reject", 0)
+            td = _mark(res.phase, t0)
 
-        flat = live.select(
-            "raw",
-            "event_class",
-            "op",
-            "doc_id",
-            F.col("payload.*"),
-            "commit_ts",
-            "lsn",
-            "batch_epoch",
-            "envelope_fail",
+            fallback_epoch = _fallback_epoch(res.q_xor, res.q_n)
+            # Sink ordering is load-bearing: the quarantine and
+            # applied-lineage writes must COMPLETE before the merge
+            # commits the epoch markers. The markers are the redelivery
+            # gate — once an epoch is committed, a replayed batch is
+            # filtered out up front, so any sink row that hadn't landed
+            # by then (crash, write failure) would be lost FOREVER, not
+            # re-derived. Writing sinks first keeps the crash window
+            # safe in both directions: crash before the merge -> no
+            # markers, full batch redelivery, dynamic-overwrite sinks
+            # rewrite identical content; crash after -> everything
+            # landed. The sink writes (independent targets) still
+            # overlap each other via driver threads; the merge is
+            # serialized after them (measured sink cost: ~10ms/batch,
+            # negligible against the merge).
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                # a batch that quarantined nothing skips the write job
+                # outright — the counts already proved the frame empty,
+                # so launching a job to re-discover that is pure
+                # per-trigger overhead (safe: dynamic overwrite of an
+                # empty frame writes no partitions anyway)
+                futures = []
+                if n_env_rejects + res.val_rejects:
+                    # NULL and negative epochs both route to the
+                    # batch-content fallback partition: a producer's
+                    # negative epoch would otherwise collide with the
+                    # fallback namespace across batches
+                    quarantined = res.quarantine.withColumn(
+                        "batch_epoch",
+                        F.when(F.col("batch_epoch") >= 0, F.col("batch_epoch"))
+                        .otherwise(F.lit(fallback_epoch)),
+                    )
+                    futures.append(
+                        pool.submit(
+                            write_quarantine,
+                            quarantined,
+                            self.quarantine_path,
+                            self.config.rules,
+                        )
+                    )
+                if self.config.applied_lineage and new_epochs:
+                    futures.append(
+                        pool.submit(write_applied, res.applied, self.applied_path)
+                    )
+                if self.config.profile and new_epochs:
+                    # per-epoch data profile of the upserts about to
+                    # merge — a sink like the others (before markers,
+                    # dynamic overwrite => identical on redelivery);
+                    # reads the checkpointed batch frame, not the source
+                    from .lineage import _write_epoch_partitioned
+                    from .operators.profile import profile_events, sketch_events
+
+                    futures.append(
+                        pool.submit(
+                            _write_epoch_partitioned,
+                            profile_events(res.profile),
+                            self.profile_path,
+                        )
+                    )
+                    # mergeable distinct sketches beside the profile
+                    # (same crash ordering + dynamic-overwrite
+                    # idempotence; estimate-identical on redelivery);
+                    # global + per-source keys in one sink
+                    sk = sketch_events(res.profile)
+                    if "source" in res.profile.columns:
+                        sk = sk.unionByName(
+                            sketch_events(res.profile, group_col="source")
+                        )
+                    _write_epoch_partitioned(sk, self.sketch_path)
+                for f in futures:
+                    f.result()
+            # merge only when there are fresh epochs — a pure
+            # redelivery (every epoch already in the manifest) must not
+            # bump the table version. The marker list may be a strict
+            # subset of the fresh epochs (deferred boundary).
+            if new_epochs:
+                merge_info = self.table.merge(
+                    res.upserts,
+                    res.deletes,
+                    epochs=to_mark,
+                    affected_buckets=res.buckets,
+                    affected_buckets_nb=res.num_buckets,
+                    mode=self.config.merge_mode,
+                )
+                self._maintain(
+                    self.table,
+                    merge_info.get("mor_depth", 0)
+                    if self.config.merge_mode == "mor"
+                    else 0,
+                )
+                # fold this batch's merge into the near-dup index so
+                # the NEXT batch's gate sees it (crash here self-heals:
+                # _gate_near_dups re-syncs before probing). The gate's
+                # checkpointed batch signatures ride along so the fold
+                # signs nothing; sigs_version pins them to THIS merge's
+                # commit — any other pending window ignores them.
+                if self._nd_band is not None:
+                    self._sync_dedup_indexes(
+                        sigs=self._last_gate_sigs,
+                        sigs_version=self.table.current_version(),
+                    )
+                    self._last_gate_sigs = None
+            tm = _mark("merge_and_quarantine", td)
+
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            metrics = BatchMetrics(
+                events_seen=sum(by_class.values()),
+                # validation rejects were classified 'apply' upstream
+                events_applied=by_class.get("apply", 0) - res.val_rejects,
+                rejects=n_env_rejects + res.val_rejects,
+                skipped=by_class.get("skip", 0),
+                rows_merged=res.rows_merged,
+                epochs=new_epochs,
+                wall_ms=wall_ms,
+            )
+            # lineage from the collected rollup — driver-side write
+            lin_rows = [
+                (
+                    # negative producer epochs are unattributable too:
+                    # same fallback namespace as the quarantine rows
+                    int(r["_epoch"])
+                    if r["_epoch"] is not None and int(r["_epoch"]) >= 0
+                    else fallback_epoch,
+                    int(r["_pid"]),
+                    r["_src"],
+                    int(r["_n_events"]),
+                    int(r["_n_events"]) if r["_class"] == "apply" else 0,
+                    int(r["_n_events"]) if r["_class"] == "reject" else 0,
+                    int(r["_n_events"]) if r["_class"] == "skip" else 0,
+                    int(res.rows_merged),
+                    int(wall_ms),
+                )
+                for r in lin_groups
+            ]
+            write_lineage_rows(lin_rows, self.lineage_path)
+            self._expire_sinks()
+            self._emit_outbox()
+            self._sync_corpus()
+            _mark("sinks", tm)
+            metrics.phase_ms = phases
+            return metrics
+        finally:
+            if res is not None:
+                for df in res.pinned:
+                    df.unpersist()
+
+    def _resolve_lww(self, live: DataFrame) -> _Resolved:
+        """Last-writer-wins resolver (the default): validate every
+        event, then keep each key's latest (commit_ts, lsn) image.
+
+        ONE full scan per batch: validation, last-writer-wins dedup,
+        quarantine staging AND the per-(epoch, partition, source,
+        class) lineage rollup ride a single scan + shuffle via
+        GROUPING SETS: set 1 groups by the dedup key (quarantined and
+        skipped events pass through under unique synthetic keys
+        'q#'+lsn, or 'q#'+xxhash64(raw) for malformed lines with no
+        lsn), set 2 groups by the lineage dimensions. Full-batch
+        persistence was measured NOT to pay off (block-cache build
+        flat ~13s at any core count; a staging parquet write costs
+        more than the scan it saves — see BENCH notes), but the
+        post-aggregate output is tiny (one row per touched key + one
+        per quarantined/skipped event + lineage groups) and is
+        checkpointed for its consumers: stats, merge inputs,
+        quarantine write. Validation rejects are per EVENT."""
+        gated, payload_cols = _gated_events(
+            live,
+            self.config.rules,
+            self.config.validator,
             # input-partition provenance, captured at scan time (A4)
             F.spark_partition_id().alias("_pid"),
-        )
-        meta_cols = (
-            "raw", "event_class", "op", "doc_id",
-            "commit_ts", "lsn", "batch_epoch", "envelope_fail", "_pid", FAIL_COL,
-        )
-        payload_cols = [c for c in flat.columns if c not in meta_cols]
-        # fail_reasons for every row, then gated: envelope rejects carry
-        # their envelope failure; only apply-upserts keep payload-rule
-        # failures (deletes have no payload to validate).
-        validated = validate_frame(flat, rules, self.config.validator)
-        gated = validated.withColumn(
-            FAIL_COL,
-            F.when(F.col("event_class") == "reject", F.array("envelope_fail"))
-            .when(
-                (F.col("event_class") == "apply") & (F.col("op") != "delete"),
-                F.col(FAIL_COL),
-            ),
         )
         is_q = (F.col("event_class") == "reject") | F.coalesce(
             F.size(FAIL_COL) > 0, F.lit(False)
@@ -532,8 +841,7 @@ class CdcEngine:
         # merge job silently re-ran the full JSON scan+aggregate while
         # a plain count hit the cache). Checkpointing truncates the
         # lineage so every consumer reads the materialized blocks by
-        # construction. Blocks are freed by the ContextCleaner when the
-        # batch's DataFrame is garbage-collected.
+        # construction.
         agg = (
             staged.groupingSets(
                 [["_qkey"], ["_epoch", "_pid", "_src", "_class"]],
@@ -551,295 +859,240 @@ class CdcEngine:
         )
         if self._nd_band is not None:
             latest = self._gate_near_dups(latest, payload_cols)
-        try:
-            # ONE collect retrieves BOTH the lineage rollup (set-2
-            # rows) and the batch stats (a global agg over the deduped
-            # set-1 rows): two driver round-trips per trigger were pure
-            # fixed cost — both sides read the same checkpointed
-            # blocks, so the union collapses them into a single job.
-            lin_frame = (
-                agg.filter(F.col("_qkey").isNull())
-                .select("_epoch", "_pid", "_src", "_class", "_n_events")
-                .withColumn("_row_kind", F.lit("lin"))
-            )
-            is_good = ~F.col("_is_q") & (F.col("event_class") == "apply")
-            # batch stats over the deduped rows: merged-row count, the
-            # affected-bucket set (passed into merge so it skips its own
-            # distinct+collect job), and the quarantined-event count
-            # (exact even for collapsed duplicate groups, via _n_events).
-            nb = self.table.num_buckets
-            stats_frame = latest.agg(
-                F.sum(is_good.cast("long")).alias("rows_merged"),
-                F.collect_set(
-                    F.when(
-                        is_good,
-                        F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int"),
-                    )
-                ).alias("buckets"),
-                F.sum(
-                    F.when(F.col("_is_q"), F.col("_n_events")).otherwise(F.lit(0))
-                ).alias("q_events"),
-                # order-independent full-width signature of the whole
-                # unattributable-row MULTISET: XOR of per-group 64-bit
-                # hashes folding in each group's duplicate count (a
-                # distinct-only XOR would collide {r1,r1,r2} with
-                # {r1,r2,r2} — same distincts, same total), plus the
-                # total count. Negative-epoch rejects are unattributable
-                # too: their epoch is in the fallback namespace, not the
-                # marker space.
-                F.bit_xor(
-                    F.when(
-                        F.col("_is_q") & _no_marker_epoch(),
-                        F.xxhash64("raw", "_n_events"),
-                    )
-                ).alias("q_xor"),
-                F.sum(
-                    F.when(
-                        F.col("_is_q") & _no_marker_epoch(),
-                        F.col("_n_events"),
-                    ).otherwise(F.lit(0))
-                ).alias("q_null_n"),
-            ).withColumn("_row_kind", F.lit("stats"))
-            all_rows = lin_frame.unionByName(
-                stats_frame, allowMissingColumns=True
-            ).collect()
-            lin_groups = [r for r in all_rows if r["_row_kind"] == "lin"]
-            stats = next(r for r in all_rows if r["_row_kind"] == "stats")
-
-            # markers live in the non-negative epoch space only: NULL
-            # epochs (malformed lines) and negative epochs (producer
-            # bug, rejected at classify) are never committed as markers
-            new_epochs = sorted(
-                {
-                    int(r["_epoch"])
-                    for r in lin_groups
-                    if r["_epoch"] is not None and int(r["_epoch"]) >= 0
-                }
-                | self._already_committed_filtered(extra_epochs)
-            )
-            by_class: dict[str, int] = {}
-            for r in lin_groups:
-                by_class[r["_class"]] = by_class.get(r["_class"], 0) + r["_n_events"]
-            if not lin_groups:  # empty binlog or every epoch already committed
-                # the router may still owe this route markers for
-                # epochs that routed zero events here (manifest-only)
-                marked = self._marks_for(new_epochs, defer_boundary)
-                if marked:
-                    self.table.mark_epochs(marked)
-                return BatchMetrics(
-                    epochs=marked, wall_ms=int((time.monotonic() - t0) * 1000)
+        is_good = ~F.col("_is_q") & (F.col("event_class") == "apply")
+        # batch stats over the deduped rows: merged-row count, the
+        # affected-bucket set (passed into merge so it skips its own
+        # distinct+collect job), and the quarantined-event count
+        # (exact even for collapsed duplicate groups, via _n_events).
+        nb = self.table.num_buckets
+        stats_frame = latest.agg(
+            F.sum(is_good.cast("long")).alias("rows_merged"),
+            F.collect_set(
+                F.when(
+                    is_good,
+                    F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int"),
                 )
-            to_mark = self._marks_for(new_epochs, defer_boundary)
-
-            upserts = latest.filter(is_good & (F.col("op") != "delete")).select(
-                "doc_id", *payload_cols
-            )
-            delete_keys = latest.filter(is_good & (F.col("op") == "delete")).select(
+            ).alias("buckets"),
+            F.sum(
+                F.when(F.col("_is_q"), F.col("_n_events")).otherwise(F.lit(0))
+            ).alias("q_events"),
+            # order-independent full-width signature of the whole
+            # unattributable-row MULTISET: XOR of per-group 64-bit
+            # hashes folding in each group's duplicate count (a
+            # distinct-only XOR would collide {r1,r1,r2} with
+            # {r1,r2,r2} — same distincts, same total), plus the
+            # total count. Negative-epoch rejects are unattributable
+            # too: their epoch is in the fallback namespace, not the
+            # marker space.
+            F.bit_xor(
+                F.when(
+                    F.col("_is_q") & _no_marker_epoch(),
+                    F.xxhash64("raw", "_n_events"),
+                )
+            ).alias("q_xor"),
+            F.sum(
+                F.when(
+                    F.col("_is_q") & _no_marker_epoch(),
+                    F.col("_n_events"),
+                ).otherwise(F.lit(0))
+            ).alias("q_null_n"),
+        )
+        lin_groups, stats = _collect_fused(
+            agg.filter(F.col("_qkey").isNull()).select(
+                "_epoch", "_pid", "_src", "_class", "_n_events"
+            ),
+            stats_frame,
+        )
+        n_env_rejects = sum(
+            r["_n_events"] for r in lin_groups if r["_class"] == "reject"
+        )
+        ups = latest.filter(is_good & (F.col("op") != "delete"))
+        return _Resolved(
+            lin_groups=lin_groups,
+            q_xor=stats["q_xor"],
+            q_n=int(stats["q_null_n"] or 0),
+            upserts=ups.select("doc_id", *payload_cols),
+            deletes=latest.filter(is_good & (F.col("op") == "delete")).select(
                 "doc_id"
-            )
-            rows_merged = int(stats["rows_merged"] or 0)
-            affected_buckets = sorted(stats["buckets"])
-            n_quarantined = int(stats["q_events"] or 0)
-            td = _mark("scan_validate_dedup", t0)
-
-            # Unattributable rows (malformed JSON -> no epoch) get a
-            # fallback partition derived from a full-width hash of the
-            # ENTIRE unattributable-row multiset: identical redelivery
-            # lands in the same partition (dynamic overwrite is a no-op
-            # rewrite, keeping the quarantine exactly-once), while any
-            # different batch lands in a different 62-bit partition —
-            # collision odds ~2^-62 per pair vs ~2^-20 for the old
-            # min-hash % 1e6 scheme, which could silently erase an
-            # earlier batch's rows on collision.
-            if stats["q_xor"] is not None:
-                combined = (
-                    int(stats["q_xor"]) * 0x9E3779B97F4A7C15
-                    + int(stats["q_null_n"] or 0)
-                ) % (1 << 63)
-                fallback_epoch = -1 - (combined % (1 << 62))
-            else:
-                fallback_epoch = -1
-            quarantined = (
+            ),
+            buckets=sorted(stats["buckets"]),
+            num_buckets=nb,
+            quarantine=(
                 latest.filter(F.col("_is_q"))
                 # re-expand collapsed duplicates (same qkey) so the
                 # quarantine stays one row per rejected event
-                .withColumn("_i", F.explode(F.sequence(F.lit(1), F.col("_n_events"))))
-                .select(
-                    "raw",
-                    "doc_id",
-                    FAIL_COL,
-                    # NULL and negative epochs both route to the
-                    # batch-content fallback partition: a producer's
-                    # negative epoch would otherwise collide with the
-                    # fallback namespace across batches
-                    F.when(F.col("batch_epoch") >= 0, F.col("batch_epoch"))
-                    .otherwise(F.lit(fallback_epoch))
-                    .alias("batch_epoch"),
+                .withColumn(
+                    "_i", F.explode(F.sequence(F.lit(1), F.col("_n_events")))
                 )
-            )
-
-            # Sink ordering is load-bearing: the quarantine and
-            # applied-lineage writes must COMPLETE before the merge
-            # commits the epoch markers. The markers are the redelivery
-            # gate — once an epoch is committed, a replayed batch is
-            # filtered out up front, so any sink row that hadn't landed
-            # by then (crash, write failure) would be lost FOREVER, not
-            # re-derived. Writing sinks first keeps the crash window
-            # safe in both directions: crash before the merge -> no
-            # markers, full batch redelivery, dynamic-overwrite sinks
-            # rewrite identical content; crash after -> everything
-            # landed. The two sink writes (independent targets) still
-            # overlap each other via driver threads; the merge is
-            # serialized after them (measured sink cost: ~10ms/batch,
-            # negligible against the merge).
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                # a batch that quarantined nothing skips the write job
-                # outright — the stats row already proved the frame
-                # empty, so launching a job to re-discover that is pure
-                # per-trigger overhead (safe: dynamic overwrite of an
-                # empty frame writes no partitions anyway)
-                f_quar = (
-                    pool.submit(
-                        write_quarantine,
-                        quarantined,
-                        self.quarantine_path,
-                        self.config.rules,
-                    )
-                    if n_quarantined
-                    else None
+                .select("raw", "doc_id", FAIL_COL, "batch_epoch")
+            ),
+            applied=(
+                latest.filter(is_good).select(
+                    "doc_id", "lsn", "op", "commit_ts", "batch_epoch"
                 )
-                f_applied = f_prof = None
-                if self.config.applied_lineage and new_epochs:
-                    applied_rows = latest.filter(is_good).select(
-                        "doc_id", "lsn", "op", "commit_ts", "batch_epoch"
-                    )
-                    f_applied = pool.submit(
-                        write_applied, applied_rows, self.applied_path
-                    )
-                if self.config.profile and new_epochs:
-                    # per-epoch data profile of the APPLIED upserts —
-                    # a sink like the others (before markers, dynamic
-                    # overwrite => identical on redelivery); reads the
-                    # checkpointed batch frame, not the source
-                    from .lineage import _write_epoch_partitioned
-                    from .operators.profile import (
-                        profile_events,
-                        sketch_events,
-                    )
+                if self.config.applied_lineage else None
+            ),
+            profile=(
+                ups.select("doc_id", *payload_cols, "batch_epoch")
+                if self.config.profile else None
+            ),
+            rows_merged=int(stats["rows_merged"] or 0),
+            val_rejects=int(stats["q_events"] or 0) - n_env_rejects,
+            phase="scan_validate_dedup",
+            pinned=[agg],
+        )
 
-                    applied_good = latest.filter(
-                        is_good & (F.col("op") != "delete")
-                    ).select("doc_id", *payload_cols, "batch_epoch")
-                    prof = profile_events(applied_good)
-                    f_prof = pool.submit(
-                        _write_epoch_partitioned, prof, self.profile_path
-                    )
-                    # mergeable distinct sketches beside the profile
-                    # (same crash ordering + dynamic-overwrite
-                    # idempotence; estimate-identical on redelivery);
-                    # global + per-source keys in one sink
-                    sk = sketch_events(applied_good)
-                    if "source" in applied_good.columns:
-                        sk = sk.unionByName(
-                            sketch_events(applied_good, group_col="source")
-                        )
-                    _write_epoch_partitioned(sk, self.sketch_path)
-                for f in (f_quar, f_applied, f_prof):
-                    if f is not None:
-                        f.result()
-            # merge only when there are fresh epochs — a pure
-            # redelivery (every epoch already in the manifest) must not
-            # bump the table version. The marker list may be a strict
-            # subset of the fresh epochs (deferred boundary).
-            if new_epochs:
-                merge_info = self.table.merge(
-                    upserts,
-                    delete_keys,
-                    epochs=to_mark,
-                    affected_buckets=affected_buckets,
-                    affected_buckets_nb=nb,
-                    mode=self.config.merge_mode,
-                )
-                # bound the merge-on-read reconstruction depth:
-                # compact ONLY the buckets whose per-bucket delta depth
-                # reached the threshold — the maintenance pause is
-                # O(hot buckets), never a full-table rewrite
-                if (
-                    self.config.merge_mode == "mor"
-                    and self.config.compact_every
-                    and merge_info.get("mor_depth", 0) >= self.config.compact_every
-                ):
-                    self.table.compact(min_depth=self.config.compact_every)
-                # snapshot retention policy (expire + orphan GC);
-                # min_age spares a concurrent writer's in-flight
-                # commit dirs (see EngineConfig.vacuum_min_age_seconds).
-                # Skipped when tailing INTO A BRANCH (write-audit-
-                # publish staging): retention is a whole-table op that
-                # must run from the main handle — and expiring main
-                # history out from under an unpublished fork is the
-                # operator's call, not the stager's.
-                if self.config.vacuum_keep_last > 0 and self.table.branch is None:
-                    self.table.vacuum(
-                        keep_last=self.config.vacuum_keep_last,
-                        min_age_seconds=self.config.vacuum_min_age_seconds,
-                    )
-                # fold this batch's merge into the near-dup index so
-                # the NEXT batch's gate sees it (crash here self-heals:
-                # _gate_near_dups re-syncs before probing). The gate's
-                # checkpointed batch signatures ride along so the fold
-                # signs nothing; sigs_version pins them to THIS merge's
-                # commit — any other pending window ignores them.
-                if self._nd_band is not None:
-                    self._sync_dedup_indexes(
-                        sigs=getattr(self, "_last_gate_sigs", None),
-                        sigs_version=self.table.current_version(),
-                    )
-                    self._last_gate_sigs = None
-            tm = _mark("merge_and_quarantine", td)
-            n_env_rejects = by_class.get("reject", 0)
-            n_val_rejects = n_quarantined - n_env_rejects
+    def _resolve_patch(self, live: DataFrame) -> _Resolved:
+        """Patch-mode resolver (``EngineConfig.patch_events``): events
+        may carry partial row images (a ``fields`` mask), so per-key
+        events COMPOSE in (commit_ts, lsn) order (operators/patch.py)
+        instead of last-writer-wins, and validation runs on the
+        RESOLVED post-images — a fragment can't satisfy n_tok ==
+        size(tokens).
 
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            metrics = BatchMetrics(
-                events_seen=sum(by_class.values()),
-                # validation rejects were classified 'apply' upstream
-                events_applied=by_class.get("apply", 0) - n_val_rejects,
-                rejects=n_env_rejects + n_val_rejects,
-                skipped=by_class.get("skip", 0),
-                rows_merged=rows_merged,
-                epochs=new_epochs,
-                wall_ms=wall_ms,
-            )
-            # lineage from the grouping-set rollup — driver-side write
-            lin_rows = [
-                (
-                    # negative producer epochs are unattributable too:
-                    # same fallback namespace as the quarantine rows
-                    int(r["_epoch"])
-                    if r["_epoch"] is not None and int(r["_epoch"]) >= 0
-                    else fallback_epoch,
-                    int(r["_pid"]),
-                    r["_src"],
-                    int(r["_n_events"]),
-                    int(r["_n_events"]) if r["_class"] == "apply" else 0,
-                    int(r["_n_events"]) if r["_class"] == "reject" else 0,
-                    int(r["_n_events"]) if r["_class"] == "skip" else 0,
-                    int(rows_merged),
-                    int(wall_ms),
+        Cost vs the default resolver: the single GROUPING-SETS shuffle
+        becomes a composition shuffle plus one bucket-pruned read of
+        the affected buckets (the price of patch resolution — the same
+        read a COW merge pays anyway). Semantics deltas (documented on
+        the config): validation rejects are per resolved KEY,
+        quarantined as the post-image rendered to JSON; no applied
+        lineage."""
+        from .operators.patch import resolve_patch_batch
+        from .schema import reconcile
+
+        key = self.table.key
+        # additive evolution, patch-style: reconcile the incoming
+        # payload struct against the table up front so a brand-new
+        # column survives resolution (current rows read null for it)
+        # and the merge evolves the table schema
+        tschema = reconcile(
+            self.table.schema,
+            live.schema["payload"].dataType,
+            self.table._aliases_of(self.table.manifest()),
+        )
+        data_cols = [f.name for f in tschema.fields if f.name != key]
+        pcols = set(live.schema["payload"].dataType.names)
+        payload_sel = [
+            F.col(f"payload.{f.name}").alias(f.name)
+            if f.name in pcols
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in tschema.fields
+            if f.name != key
+        ]
+        fields_col = (
+            F.col("fields")
+            if "fields" in live.columns
+            else F.lit(None).cast("array<string>")
+        )
+        # one scan, pinned: every downstream job (rollup, quarantine,
+        # composition) reads the materialized batch
+        flat = live.select(
+            "raw",
+            "event_class",
+            "op",
+            "doc_id",
+            *payload_sel,
+            fields_col.alias("fields"),
+            "commit_ts",
+            "lsn",
+            "batch_epoch",
+            "envelope_fail",
+            F.spark_partition_id().alias("_pid"),
+        ).localCheckpoint(eager=True)
+        src = (
+            F.col("source")
+            if "source" in data_cols
+            else F.lit(None).cast("string")
+        )
+        lin_groups, qs = _collect_fused(
+            flat.groupBy(
+                F.col("batch_epoch").alias("_epoch"),
+                F.col("_pid"),
+                src.alias("_src"),
+                F.col("event_class").alias("_class"),
+            ).agg(F.count(F.lit(1)).alias("_n_events")),
+            # the unattributable envelope rejects, one hash per event
+            flat.filter(
+                (F.col("event_class") == "reject") & _no_marker_epoch()
+            ).agg(
+                F.bit_xor(F.xxhash64("raw")).alias("q_xor"),
+                F.count(F.lit(1)).alias("q_null_n"),
+            ),
+        )
+        if not lin_groups:
+            return _Resolved(lin_groups=lin_groups, pinned=[flat])
+
+        # compose + resolve, then validate the POST-IMAGES
+        apply_ev = flat.filter(F.col("event_class") == "apply").select(
+            "doc_id", "op", "commit_ts", "lsn", *data_cols, "fields",
+            "batch_epoch",
+        )
+        r = resolve_patch_batch(self.table, apply_ev, schema=tschema)
+        v = validate_frame(
+            r["ups"], self.config.rules, self.config.validator
+        ).localCheckpoint(eager=True)
+        is_bad = F.coalesce(F.size(FAIL_COL) > 0, F.lit(False))
+        # envelope rejects plus the failing post-images, the latter as
+        # a FULL-IMAGE ENVELOPE (op/doc_id/payload/commit_ts/lsn/
+        # batch_epoch, provenance = the key's last event in the
+        # window), so reprocess_quarantine can replay it through the
+        # standard parse -> validate -> merge pipeline after a rule fix
+        rejects = flat.filter(F.col("event_class") == "reject").select(
+            "raw",
+            "doc_id",
+            F.array("envelope_fail").alias(FAIL_COL),
+            "batch_epoch",
+        )
+        bad_q = v.filter(is_bad).select(
+            F.to_json(
+                F.struct(
+                    F.lit("update").alias("op"),
+                    F.col(key).alias("doc_id"),
+                    F.struct(*data_cols).alias("payload"),
+                    F.col("_last_commit_ts").alias("commit_ts"),
+                    F.col("_last_lsn").alias("lsn"),
+                    F.col("batch_epoch"),
                 )
-                for r in lin_groups
-            ]
-            write_lineage_rows(lin_rows, self.lineage_path)
-            self._expire_sinks()
-            self._emit_outbox()
-            self._sync_corpus()
-            _mark("sinks", tm)
-            metrics.phase_ms = phases
-            return metrics
-        finally:
-            agg.unpersist()
+            ).alias("raw"),
+            F.col(key).alias("doc_id"),
+            FAIL_COL,
+            # apply-class envelopes always carry a valid epoch
+            # (batch_epoch is a required envelope field and
+            # negatives are envelope-rejected)
+            "batch_epoch",
+        )
+        # the delete-key count and the post-image pass/fail counts
+        (dels,), cnt = _collect_fused(
+            r["dels"].agg(F.count(F.lit(1)).alias("n_dels")),
+            v.agg(
+                F.sum((~is_bad).cast("long")).alias("n_good"),
+                F.sum(is_bad.cast("long")).alias("n_bad"),
+            ),
+        )
+        n_dels = int(dels["n_dels"] or 0)
+        n_good, n_bad = int(cnt["n_good"] or 0), int(cnt["n_bad"] or 0)
+        good = v.filter(~is_bad)
+        return _Resolved(
+            lin_groups=lin_groups,
+            q_xor=qs["q_xor"],
+            q_n=int(qs["q_null_n"] or 0),
+            upserts=good.select(key, *data_cols),
+            deletes=r["dels"],
+            buckets=r["touched"],
+            num_buckets=r["num_buckets"],
+            quarantine=rejects.unionByName(bad_q),
+            profile=(
+                good.select(key, *data_cols, "batch_epoch")
+                if self.config.profile else None
+            ),
+            rows_merged=n_good + n_dels,
+            # per resolved KEY (the whole key's window withheld):
+            # events_applied is then apply events minus bad keys,
+            # exact when one event per key
+            val_rejects=n_bad,
+            phase="compose_resolve_validate",
+            pinned=[flat],
+        )
 
     def _emit_outbox(self) -> None:
         """Continuous outbox (EngineConfig.outbox_dir): emit the
@@ -901,308 +1154,6 @@ class CdcEngine:
         ):
             expire_epoch_partitions(p, cutoff)
 
-    def _apply_batch_patch(
-        self,
-        parsed: DataFrame,
-        defer_boundary: bool = False,
-        extra_epochs: list[int] | None = None,
-    ) -> BatchMetrics:
-        """Patch-mode apply (``EngineConfig.patch_events``): events may
-        carry partial row images (a ``fields`` mask), so per-key events
-        COMPOSE in (commit_ts, lsn) order (operators/patch.py) instead
-        of last-writer-wins, and validation runs on the RESOLVED
-        post-images — a fragment can't satisfy n_tok == size(tokens).
-
-        Same exactly-once machinery as :meth:`apply_batch` (fresh-epoch
-        filter, deferred boundary markers, sinks-before-markers crash
-        ordering, mor auto-compaction, retention). Cost vs the default
-        path: the single GROUPING-SETS shuffle becomes a composition
-        shuffle plus one bucket-pruned read of the affected buckets
-        (the price of patch resolution — the same read a COW merge
-        pays anyway). Semantics deltas (documented on the config):
-        validation rejects are per resolved KEY, quarantined as the
-        post-image rendered to JSON; no applied_lineage."""
-        from .operators.patch import resolve_patch_batch
-
-        t0 = time.monotonic()
-        phases: dict[str, int] = {}
-
-        def _mark(name: str, since: float) -> float:
-            now = time.monotonic()
-            phases[name] = int((now - since) * 1000)
-            return now
-
-        from .schema import reconcile
-
-        rules = self.config.rules
-        key = self.table.key
-        # additive evolution, patch-style: reconcile the incoming
-        # payload struct against the table up front so a brand-new
-        # column survives resolution (current rows read null for it)
-        # and the merge evolves the table schema
-        tschema = reconcile(
-            self.table.schema,
-            parsed.schema["payload"].dataType,
-            self.table._aliases_of(self.table.manifest()),
-        )
-        data_cols = [f.name for f in tschema.fields if f.name != key]
-        ev = classify(parsed, op_whitelist=rules.op_whitelist)
-        live = ev.filter(self._fresh_epoch_filter())
-        pcols = set(live.schema["payload"].dataType.names)
-        payload_sel = [
-            F.col(f"payload.{f.name}").alias(f.name)
-            if f.name in pcols
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in tschema.fields
-            if f.name != key
-        ]
-        fields_col = (
-            F.col("fields")
-            if "fields" in live.columns
-            else F.lit(None).cast("array<string>")
-        )
-        # one scan, pinned: every downstream job (rollup, quarantine,
-        # composition) reads the materialized batch
-        flat = live.select(
-            "raw",
-            "event_class",
-            "op",
-            "doc_id",
-            *payload_sel,
-            fields_col.alias("fields"),
-            "commit_ts",
-            "lsn",
-            "batch_epoch",
-            "envelope_fail",
-            F.spark_partition_id().alias("_pid"),
-        ).localCheckpoint(eager=True)
-        try:
-            src = (
-                F.col("source")
-                if "source" in data_cols
-                else F.lit(None).cast("string")
-            )
-            # ONE collect for the lineage rollup AND the
-            # unattributable-reject XOR (both over the checkpointed
-            # batch) — same round-trip fusion as apply_batch
-            lin_frame = (
-                flat.groupBy(
-                    F.col("batch_epoch").alias("_epoch"),
-                    F.col("_pid"),
-                    src.alias("_src"),
-                    F.col("event_class").alias("_class"),
-                )
-                .agg(F.count(F.lit(1)).alias("_n_events"))
-                .withColumn("_row_kind", F.lit("lin"))
-            )
-            qxor_frame = (
-                flat.filter(
-                    (F.col("event_class") == "reject")
-                    & (F.col("batch_epoch").isNull() | (F.col("batch_epoch") < 0))
-                )
-                .agg(
-                    F.bit_xor(F.xxhash64("raw")).alias("x"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .withColumn("_row_kind", F.lit("qxor"))
-            )
-            all_rows = lin_frame.unionByName(
-                qxor_frame, allowMissingColumns=True
-            ).collect()
-            lin_groups = [r for r in all_rows if r["_row_kind"] == "lin"]
-            qs = next(r for r in all_rows if r["_row_kind"] == "qxor")
-            if not lin_groups:
-                marked = self._marks_for(
-                    sorted(self._already_committed_filtered(extra_epochs)),
-                    defer_boundary,
-                )
-                if marked:
-                    self.table.mark_epochs(marked)
-                return BatchMetrics(
-                    epochs=marked, wall_ms=int((time.monotonic() - t0) * 1000)
-                )
-            by_class: dict[str, int] = {}
-            for r in lin_groups:
-                by_class[r["_class"]] = by_class.get(r["_class"], 0) + r["_n_events"]
-            new_epochs = sorted(
-                {
-                    int(r["_epoch"])
-                    for r in lin_groups
-                    if r["_epoch"] is not None and int(r["_epoch"]) >= 0
-                }
-                | self._already_committed_filtered(extra_epochs)
-            )
-            to_mark = self._marks_for(new_epochs, defer_boundary)
-
-            # envelope rejects -> quarantine; unattributable rows (null
-            # or negative epoch) share a batch-content fallback
-            # partition so identical redelivery overwrites in place
-            # (same construction as apply_batch's XOR scheme)
-            rejects = flat.filter(F.col("event_class") == "reject").select(
-                "raw",
-                "doc_id",
-                F.array("envelope_fail").alias(FAIL_COL),
-                "batch_epoch",
-            )
-            if qs["x"] is not None:
-                combined = (
-                    int(qs["x"]) * 0x9E3779B97F4A7C15 + int(qs["n"])
-                ) % (1 << 63)
-                fallback_epoch = -1 - (combined % (1 << 62))
-            else:
-                fallback_epoch = -1
-            rejects = rejects.withColumn(
-                "batch_epoch",
-                F.when(F.col("batch_epoch") >= 0, F.col("batch_epoch"))
-                .otherwise(F.lit(fallback_epoch)),
-            )
-
-            # compose + resolve, then validate the POST-IMAGES
-            apply_ev = flat.filter(F.col("event_class") == "apply").select(
-                "doc_id", "op", "commit_ts", "lsn", *data_cols, "fields",
-                "batch_epoch",
-            )
-            r = resolve_patch_batch(self.table, apply_ev, schema=tschema)
-            v = validate_frame(
-                r["ups"], rules, self.config.validator
-            ).localCheckpoint(eager=True)
-            is_bad = F.coalesce(F.size(FAIL_COL) > 0, F.lit(False))
-            good = v.filter(~is_bad).select(key, *data_cols)
-            # quarantine the failing post-image as a FULL-IMAGE
-            # ENVELOPE (op/doc_id/payload/commit_ts/lsn/batch_epoch,
-            # provenance = the key's last event in the window), so
-            # reprocess_quarantine can replay it through the standard
-            # parse -> validate -> merge pipeline after a rule fix
-            bad_q = v.filter(is_bad).select(
-                F.to_json(
-                    F.struct(
-                        F.lit("update").alias("op"),
-                        F.col(key).alias("doc_id"),
-                        F.struct(*data_cols).alias("payload"),
-                        F.col("_last_commit_ts").alias("commit_ts"),
-                        F.col("_last_lsn").alias("lsn"),
-                        F.col("batch_epoch"),
-                    )
-                ).alias("raw"),
-                F.col(key).alias("doc_id"),
-                FAIL_COL,
-                # apply-class envelopes always carry a valid epoch
-                # (batch_epoch is a required envelope field and
-                # negatives are envelope-rejected)
-                "batch_epoch",
-            )
-            # fused: post-image pass/fail counts + the delete-key count
-            # in one driver round-trip
-            cnt_rows = (
-                v.agg(
-                    F.sum((~is_bad).cast("long")).alias("n_good"),
-                    F.sum(is_bad.cast("long")).alias("n_bad"),
-                )
-                .withColumn("_row_kind", F.lit("cnt"))
-                .unionByName(
-                    r["dels"]
-                    .agg(F.count(F.lit(1)).alias("n_dels"))
-                    .withColumn("_row_kind", F.lit("dels")),
-                    allowMissingColumns=True,
-                )
-                .collect()
-            )
-            cnt = next(x for x in cnt_rows if x["_row_kind"] == "cnt")
-            n_dels = int(
-                next(x for x in cnt_rows if x["_row_kind"] == "dels")["n_dels"]
-                or 0
-            )
-            n_good, n_bad = int(cnt["n_good"] or 0), int(cnt["n_bad"] or 0)
-            td = _mark("compose_resolve_validate", t0)
-
-            # sinks BEFORE the marker-committing merge (crash ordering
-            # — see apply_batch); skipped when provably empty (reject
-            # count from the rollup, post-image fails from cnt)
-            if by_class.get("reject", 0) or n_bad:
-                write_quarantine(
-                    rejects.unionByName(bad_q),
-                    self.quarantine_path,
-                    self.config.rules,
-                )
-            if self.config.profile and new_epochs:
-                # per-epoch profile of the resolved POST-IMAGES (the
-                # rows about to merge) — same sink semantics as the
-                # default path
-                from .lineage import _write_epoch_partitioned
-                from .operators.profile import profile_events, sketch_events
-
-                _post = v.filter(~is_bad).select(key, *data_cols, "batch_epoch")
-                _write_epoch_partitioned(
-                    profile_events(_post, key_col=key),
-                    self.profile_path,
-                )
-                _write_epoch_partitioned(
-                    sketch_events(_post, columns=(key,)), self.sketch_path
-                )
-            if new_epochs:
-                merge_info = self.table.merge(
-                    good,
-                    r["dels"],
-                    epochs=to_mark,
-                    affected_buckets=r["touched"],
-                    affected_buckets_nb=r["num_buckets"],
-                    mode=self.config.merge_mode,
-                )
-                if (
-                    self.config.merge_mode == "mor"
-                    and self.config.compact_every
-                    and merge_info.get("mor_depth", 0) >= self.config.compact_every
-                ):
-                    self.table.compact(min_depth=self.config.compact_every)
-                if self.config.vacuum_keep_last > 0 and self.table.branch is None:
-                    self.table.vacuum(
-                        keep_last=self.config.vacuum_keep_last,
-                        min_age_seconds=self.config.vacuum_min_age_seconds,
-                    )
-            tm = _mark("merge_and_quarantine", td)
-
-            rows_merged = n_good + n_dels
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            metrics = BatchMetrics(
-                events_seen=sum(by_class.values()),
-                # patch-mode rejects are per resolved KEY (the whole
-                # key's window withheld); events_applied counts the
-                # apply-class events whose key survived — approximated
-                # as apply events minus bad keys (exact when one event
-                # per key)
-                events_applied=by_class.get("apply", 0) - n_bad,
-                rejects=by_class.get("reject", 0) + n_bad,
-                skipped=by_class.get("skip", 0),
-                rows_merged=rows_merged,
-                epochs=new_epochs,
-                wall_ms=wall_ms,
-            )
-            lin_rows = [
-                (
-                    int(r["_epoch"])
-                    if r["_epoch"] is not None and int(r["_epoch"]) >= 0
-                    else fallback_epoch,
-                    int(r["_pid"]),
-                    r["_src"],
-                    int(r["_n_events"]),
-                    int(r["_n_events"]) if r["_class"] == "apply" else 0,
-                    int(r["_n_events"]) if r["_class"] == "reject" else 0,
-                    int(r["_n_events"]) if r["_class"] == "skip" else 0,
-                    int(rows_merged),
-                    int(wall_ms),
-                )
-                for r in lin_groups
-            ]
-            write_lineage_rows(lin_rows, self.lineage_path)
-            self._expire_sinks()
-            self._emit_outbox()
-            self._sync_corpus()
-            _mark("sinks", tm)
-            metrics.phase_ms = phases
-            return metrics
-        finally:
-            flat.unpersist()
-
     # ------------------------------------------------------ quarantine replay
 
     def reprocess_quarantine(self, rules=None) -> dict:
@@ -1257,24 +1208,10 @@ class CdcEngine:
         parsed = parse_envelopes(
             q.select("raw"), self.payload_schema
         )
-        ev = classify(parsed, op_whitelist=rules.op_whitelist)
-        flat = ev.select(
-            "raw", "event_class", "op", "doc_id", F.col("payload.*"),
-            "commit_ts", "lsn", "batch_epoch", "envelope_fail",
-        )
-        meta_cols = (
-            "raw", "event_class", "op", "doc_id",
-            "commit_ts", "lsn", "batch_epoch", "envelope_fail", FAIL_COL,
-        )
-        payload_cols = [c for c in flat.columns if c not in meta_cols]
-        validated = validate_frame(flat, rules, self.config.validator)
-        gated = validated.withColumn(
-            FAIL_COL,
-            F.when(F.col("event_class") == "reject", F.array("envelope_fail"))
-            .when(
-                (F.col("event_class") == "apply") & (F.col("op") != "delete"),
-                F.col(FAIL_COL),
-            ),
+        gated, payload_cols = _gated_events(
+            classify(parsed, op_whitelist=rules.op_whitelist),
+            rules,
+            self.config.validator,
         )
         still_q = (F.col("event_class") != "apply") | F.coalesce(
             F.size(FAIL_COL) > 0, F.lit(False)
@@ -1367,10 +1304,7 @@ class CdcEngine:
         ``format``: "json" (ndjson, optionally compressed) or
         "parquet" (structured staging, ``gen.write_binlog_parquet``);
         auto-sniffed from the directory contents when omitted."""
-        if format is None:
-            format = "parquet" if _looks_parquet(binlog_path) else "json"
-        reader = read_binlog_parquet if format == "parquet" else read_binlog
-        parsed = reader(self.spark, binlog_path, self.payload_schema)
+        parsed = open_binlog(self.spark, binlog_path, self.payload_schema, format)
         return self.apply_batch(parsed)
 
     # --------------------------------------------------------- streaming API
@@ -1391,15 +1325,12 @@ class CdcEngine:
         at-least-once redelivery from the checkpoint converges to
         exactly-once table state (north_star). ``format`` picks the
         wire encoding (json / parquet), auto-sniffed when omitted."""
-        if format is None:
-            format = "parquet" if _looks_parquet(binlog_path) else "json"
-        stream_reader = (
-            read_binlog_parquet_stream if format == "parquet" else read_binlog_stream
-        )
-        parsed = stream_reader(
+        parsed = open_binlog(
             self.spark,
             binlog_path,
             self.payload_schema,
+            format,
+            stream=True,
             max_files_per_trigger=max_files_per_trigger,
         )
         if self.config.suppress_stale:
@@ -1456,28 +1387,20 @@ class CdcEngine:
         processing_time: str,
     ):
         """Shared foreachBatch wiring for every transport (file,
-        parquet, Kafka): per-run pinned fresh-epoch filter (plan
-        literals stay identical across triggers — see apply_batch;
-        patch mode keeps the live filter) and deferred boundary
-        marking (a micro-batch may hold only the FIRST files of its
-        max epoch, so that epoch's marker waits for a later batch or
-        the end-of-run flush — marking it early would swallow the
-        epoch's remaining events in the next trigger)."""
-        pinned = (
-            None if self.config.patch_events else self._fresh_epoch_filter()
-        )
+        parquet, Kafka): the per-run pinned fresh-epoch filter (see
+        :meth:`pinned_fresh_filter`) and deferred boundary marking (a
+        micro-batch may hold only the FIRST files of its max epoch, so
+        that epoch's marker waits for a later batch or the end-of-run
+        flush — marking it early would swallow the epoch's remaining
+        events in the next trigger)."""
+        pinned = self.pinned_fresh_filter()
 
         def _process(batch_df: DataFrame, epoch_id: int) -> None:
             self.apply_batch(batch_df, defer_boundary=True, fresh_filter=pinned)
 
-        writer = parsed.writeStream.foreachBatch(_process).option(
-            "checkpointLocation", checkpoint_path
+        return start_tail(
+            parsed, _process, checkpoint_path, available_now, processing_time
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
 
     def run_stream_kafka(
         self,
@@ -1544,6 +1467,9 @@ class CdcEngine:
         checkpoint_path: str,
         max_files_per_trigger: int | None = None,
     ) -> None:
+        """Drain the change log (availableNow tail), then flush the
+        deferred boundary markers. Calls only ``run_stream`` and
+        ``flush_epoch_markers``: RoutedEngine shares it."""
         q = self.run_stream(
             binlog_path,
             checkpoint_path,

@@ -168,8 +168,7 @@ def test_compact_binlog_non_monotone_key_kept_verbatim(spark, tmp_path):
     assert info["events_in"] == 4 and info["events_out"] == 3
 
     def run(tag, binlog):
-        from dexspark.events import read_binlog, read_binlog_parquet
-        from dexspark.stream import _looks_parquet
+        from dexspark.events import open_binlog
 
         table = LakeTable.create(
             spark, str(tmp_path / f"seq-{tag}"), sequences_schema(), num_buckets=2
@@ -180,8 +179,7 @@ def test_compact_binlog_non_monotone_key_kept_verbatim(spark, tmp_path):
         )
         # canonical replay: one micro-batch per epoch, epoch order —
         # the batching under which the full log's final nm value is [5]
-        reader = read_binlog_parquet if _looks_parquet(binlog) else read_binlog
-        parsed = reader(spark, binlog)
+        parsed = open_binlog(spark, binlog)
         for epoch in (0, 1):
             eng.apply_batch(parsed.filter(F.col("batch_epoch") == epoch))
         return {

@@ -14,7 +14,7 @@ import pyspark.sql.types as T
 import pytest
 
 from dexspark.lake import LakeTable
-from dexspark.operators.patch import apply_patches
+from dexspark.operators.patch import resolve_patch_batch
 from dexspark.schema import sequences_schema
 
 EV_SCHEMA = T.StructType(
@@ -40,6 +40,20 @@ def _table(spark, tmp_path, rows):
     if rows:
         t.merge(spark.createDataFrame(rows, schema=sequences_schema()))
     return t
+
+
+def _apply(table, events, mode="cow", epochs=None):
+    """Resolve a patch batch against the table's current rows, then
+    merge the post-images and delete keys."""
+    r = resolve_patch_batch(table, events)
+    return table.merge(
+        r["ups"].drop("_last_commit_ts", "_last_lsn"),
+        delete_keys=r["dels"],
+        mode=mode,
+        epochs=epochs,
+        affected_buckets=r["touched"],
+        affected_buckets_nb=r["num_buckets"],
+    )
 
 
 def _oracle(initial: dict, events) -> dict:
@@ -71,7 +85,7 @@ def _check(spark, tmp_path, initial_rows, events, mode="cow"):
         r[0]: {"tokens": r[1], "n_tok": r[2], "source": r[3]}
         for r in initial_rows
     }
-    apply_patches(t, spark.createDataFrame(events, EV_SCHEMA), mode=mode)
+    _apply(t, spark.createDataFrame(events, EV_SCHEMA), mode=mode)
     assert _collect_state(t) == _oracle(initial, events)
     return t
 
@@ -172,10 +186,8 @@ def test_two_sequential_batches_compose(spark, tmp_path):
     t = _table(spark, tmp_path, [("d1", [1], 1, "a")])
     b1 = [("d1", "upsert", 10, 1, None, 5, None, ["n_tok"])]
     b2 = [("d1", "upsert", 20, 1, None, None, "q", ["source"])]
-    apply_patches(t, spark.createDataFrame(b1, EV_SCHEMA), epochs=[0])
-    apply_patches(
-        t, spark.createDataFrame(b2, EV_SCHEMA), mode="mor", epochs=[1]
-    )
+    _apply(t, spark.createDataFrame(b1, EV_SCHEMA), epochs=[0])
+    _apply(t, spark.createDataFrame(b2, EV_SCHEMA), mode="mor", epochs=[1])
     got = t.read().collect()[0]
     assert (got["n_tok"], got["source"], got["tokens"]) == (5, "q", [1])
     assert t.is_epoch_committed(0) and t.is_epoch_committed(1)

@@ -266,3 +266,90 @@ def test_patch_mode_refuses_suppress_stale(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="incompatible"):
         eng.run_until_caught_up(b, str(tmp_path / "ck"))
+
+
+def test_patch_mode_refuses_applied_lineage(spark, tmp_path):
+    """Patch mode writes no applied sink (a resolved post-image has no
+    single parent event), so reprocess_quarantine's stale-event guard
+    would be silently off: the engine refuses the combination."""
+    with pytest.raises(ValueError, match="applied_lineage"):
+        _engine(spark, tmp_path, applied_lineage=True)
+
+
+def _full(n, source="web"):
+    return {"tokens": list(range(n)), "n_tok": n, "source": source}
+
+
+def test_full_images_resolve_like_last_writer_wins(spark, tmp_path):
+    """On full-image events both resolvers feed the apply shell the
+    same batch: equal table state, quarantine rows, lineage rows and
+    BatchMetrics counts (phase_ms and wall time aside)."""
+    batches = [
+        [
+            _ev("d1", "insert", 1, 1, 0, _full(1)),
+            _ev("d1", "update", 2, 2, 0, _full(2, "wiki")),  # later wins
+            _ev("d2", "insert", 1, 3, 0, _full(3)),
+            _ev("d3", "insert", 1, 4, 0, _full(1)),
+            _ev("d3", "delete", 3, 5, 0),
+            # envelope rejects with valid epochs: no commit_ts, no lsn
+            json.dumps({"op": "insert", "doc_id": "d4", "lsn": 6,
+                        "batch_epoch": 0, "payload": _full(1)}),
+            json.dumps({"op": "update", "doc_id": "d5", "batch_epoch": 0,
+                        "commit_ts": "2026-01-01 00:00:01",
+                        "payload": _full(2)}),
+            _ev("d6", "compact", 1, 7, 0, _full(1)),  # unknown op: skipped
+        ],
+        [
+            _ev("d2", "delete", 5, 8, 1),
+            _ev("d2", "insert", 6, 9, 1, _full(4, "code")),  # re-insert
+            _ev("d1", "delete", 5, 10, 1),
+            _ev("d7", "delete", 5, 11, 1),  # absent key
+            _ev("d3", "insert", 5, 12, 1, _full(2)),
+            _ev("d3", "update", 5, 13, 1, _full(3, "books")),
+            json.dumps({"op": "delete", "doc_id": "d8", "lsn": 14,
+                        "batch_epoch": 1}),
+        ],
+    ]
+    binlogs = [
+        _write_binlog(tmp_path, lines, f"b{i}") for i, lines in enumerate(batches)
+    ]
+
+    def run(patch_events):
+        name = "patch" if patch_events else "lww"
+        table = LakeTable.create(
+            spark, str(tmp_path / name / "t"), sequences_schema(), num_buckets=4
+        )
+        eng = CdcEngine(
+            spark, table, str(tmp_path / name / "wh"),
+            config=EngineConfig(
+                patch_events=patch_events, vacuum_min_age_seconds=0
+            ),
+        )
+        metrics = []
+        for b in binlogs:
+            m = eng.apply_binlog(b)
+            metrics.append(
+                (m.events_seen, m.events_applied, m.rejects, m.skipped,
+                 m.rows_merged, m.epochs)
+            )
+        quarantine = sorted(
+            (r["raw"], r["doc_id"], tuple(r["fail_reasons"]), r["batch_epoch"])
+            for r in spark.read.parquet(eng.quarantine_path).collect()
+        )
+        lineage = sorted(
+            (
+                tuple(v for c, v in sorted(r.asDict().items()) if c != "wall_ms")
+                for r in spark.read.parquet(eng.lineage_path).collect()
+            ),
+            key=repr,
+        )
+        return _state(table), metrics, quarantine, lineage
+
+    lww, patch = run(False), run(True)
+    assert lww[0] == {
+        "d2": {"tokens": [0, 1, 2, 3], "n_tok": 4, "source": "code"},
+        "d3": {"tokens": [0, 1, 2], "n_tok": 3, "source": "books"},
+    }
+    assert lww[1] == [(8, 5, 2, 1, 3, [0]), (7, 6, 1, 0, 4, [1])]
+    assert len(lww[2]) == 3 and len(lww[3]) > 0
+    assert patch == lww
