@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.window import Window
 
 from .schema import change_event_schema
@@ -496,12 +496,17 @@ def read_binlog_kafka(
 def classify(df: DataFrame, op_whitelist: tuple[str, ...] = ("insert", "update", "delete")) -> DataFrame:
     """Tag each event: 'apply' | 'skip' (blank line / unknown op) |
     'reject' (malformed / missing envelope fields)."""
-    return df.withColumn(
-        "event_class",
+    return df.withColumn("event_class", classify_column(op_whitelist))
+
+
+def classify_column(op_whitelist: tuple[str, ...]) -> Column:
+    """The ``event_class`` expression of :func:`classify`, for callers
+    that build it once and reuse it across batches."""
+    return (
         F.when(F.col("is_blank"), F.lit("skip"))
         .when(F.col("envelope_fail").isNotNull(), F.lit("reject"))
         .when(~F.col("op").isin(*op_whitelist), F.lit("skip"))
-        .otherwise(F.lit("apply")),
+        .otherwise(F.lit("apply"))
     )
 
 

@@ -53,6 +53,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .events import _all_nullable
+from .prepared import Prepared
 from .schema import SchemaEvolutionError, evolution_actions, reconcile
 
 _SNAP_DIR = "_snapshots"
@@ -234,6 +235,9 @@ class LakeTable:
         from collections import OrderedDict
 
         self._mcache: "OrderedDict[int, str]" = OrderedDict()
+        # merge-time projections, rebuilt when a schema or the bucket
+        # count changes (see prepared.py)
+        self._prep = Prepared()
 
     # ------------------------------------------------------------ manifest
 
@@ -592,7 +596,12 @@ class LakeTable:
     # ------------------------------------------------------------ read
 
     def _bucket_col(self, df: DataFrame, key: str, n: int) -> DataFrame:
-        return df.withColumn("_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n)).cast("int"))
+        bucket = self._prep.get(
+            "bucket",
+            (key, n),
+            lambda: F.pmod(F.xxhash64(F.col(key)), F.lit(n)).cast("int"),
+        )
+        return df.withColumn("_bucket", bucket)
 
     def _empty(self, schema: T.StructType) -> DataFrame:
         """Empty frame of ``schema``. ``limit(0)`` lets the optimizer
@@ -661,8 +670,25 @@ class LakeTable:
         identity postdates the file — a column dropped and re-added
         must read null from pre-re-add files even though the bytes are
         still there (Iceberg field-id semantics)."""
+        return df.select(
+            *self._align_cols(
+                [f.name for f in df.schema.fields],
+                schema, aliases, cmeta, file_version,
+            )
+        )
+
+    @staticmethod
+    def _align_cols(
+        names: list[str],
+        schema: T.StructType,
+        aliases: dict[str, str] | None = None,
+        cmeta: dict | None = None,
+        file_version: int | None = None,
+    ) -> list:
+        """:meth:`_align`'s projection of a frame with columns
+        ``names``."""
         cols = []
-        have = {f.name.lower(): f.name for f in df.schema.fields}
+        have = {n.lower(): n for n in names}
         for f in schema.fields:
             src = have.get(f.name.lower())
             if src is None and aliases:
@@ -679,7 +705,7 @@ class LakeTable:
                 cols.append(F.col(src).cast(f.dataType).alias(f.name))
             else:
                 cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return df.select(*cols)
+        return cols
 
     @staticmethod
     def _may_contain(bounds, lo, hi) -> bool:
@@ -1316,25 +1342,29 @@ class LakeTable:
         key, n_buckets = m["key"], m["num_buckets"]
         old_schema = T.StructType.fromJson(m["schema"])
         al = self._aliases_of(m)
-        schema = reconcile(old_schema, upserts.schema, al)
-        evo = evolution_actions(old_schema, upserts.schema, al)
+        in_schema = upserts.schema
+        schema = reconcile(old_schema, in_schema, al)
+        evo = evolution_actions(old_schema, in_schema, al)
         version = self._next_version(m)
 
-        ups = self._bucket_col(
-            self._align(upserts, schema, aliases=al), key, n_buckets
+        ups_cols, del_cols = self._prep.get(
+            "merge_cow",
+            (key, in_schema.json(), schema.json(), al),
+            lambda: (
+                self._align_cols(in_schema.names, schema, aliases=al),
+                # cast to the table key type BEFORE hashing: xxhash64
+                # of an int and of the same value as long differ, so
+                # an unaligned delete frame would bucket to the wrong
+                # file and the delete would be silently missed (the
+                # MOR path _aligns its tombstones; COW must match)
+                [F.col(key).cast(schema[key].dataType).alias(key)],
+            ),
         )
+        ups = self._bucket_col(upserts.select(*ups_cols), key, n_buckets)
         all_keys = ups.select(key, "_bucket")
         if delete_keys is not None:
-            # cast to the table key type BEFORE hashing: xxhash64 of an
-            # int and of the same value as long differ, so an unaligned
-            # delete frame would bucket to the wrong file and the
-            # delete would be silently missed (the MOR path _aligns its
-            # tombstones; COW must match)
-            key_type = schema[key].dataType
             dels = self._bucket_col(
-                delete_keys.select(F.col(key).cast(key_type).alias(key)),
-                key,
-                n_buckets,
+                delete_keys.select(*del_cols), key, n_buckets
             )
             all_keys = all_keys.unionByName(dels)
         all_keys = all_keys.select(key, "_bucket").dropDuplicates([key])
@@ -1476,19 +1506,25 @@ class LakeTable:
         key, n_buckets = m["key"], m["num_buckets"]
         old_schema = T.StructType.fromJson(m["schema"])
         al = self._aliases_of(m)
-        schema = reconcile(old_schema, upserts.schema, al)
-        evo = evolution_actions(old_schema, upserts.schema, al)
+        in_schema = upserts.schema
+        schema = reconcile(old_schema, in_schema, al)
+        evo = evolution_actions(old_schema, in_schema, al)
         version = self._next_version(m)
 
-        ups = self._align(upserts, schema, aliases=al).withColumn(
-            _TOMBSTONE, F.lit(False)
+        ups_cols, tomb_cols = self._prep.get(
+            "merge_mor",
+            (key, in_schema.json(), schema.json(), al),
+            lambda: (
+                self._align_cols(in_schema.names, schema, aliases=al)
+                + [F.lit(False).alias(_TOMBSTONE)],
+                # a tombstone row: the key, every other column null
+                self._align_cols([key], schema)
+                + [F.lit(True).alias(_TOMBSTONE)],
+            ),
         )
-        batch = ups
+        batch = upserts.select(*ups_cols)
         if delete_keys is not None:
-            tombs = self._align(delete_keys.select(key), schema).withColumn(
-                _TOMBSTONE, F.lit(True)
-            )
-            batch = batch.unionByName(tombs)
+            batch = batch.unionByName(delete_keys.select(*tomb_cols))
         batch = self._bucket_col(batch, key, n_buckets)
         written = self._write_commit(batch, version)
         if not written:  # empty change batch: manifest-only commit

@@ -37,7 +37,7 @@ pipeline: rules judge the post-image, not the fragment
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 FIELDS_COL = "fields"
 EPOCH_COL = "batch_epoch"
@@ -136,9 +136,11 @@ def resolve_patch_batch(table, events: DataFrame, schema=None) -> dict:
     read null for them) and the merge evolves the table additively.
     Default: the table's current schema.
 
-    Returns ``{"ups", "dels", "touched", "num_buckets"}``: full
-    post-image upsert rows (one per surviving key), delete keys, and
-    the affected-bucket hint for :meth:`LakeTable.merge`.
+    Returns ``{"ups", "dels", "touched", "num_buckets", "n_dels"}``:
+    full post-image upsert rows (one per surviving key), delete keys,
+    the affected-bucket hint for :meth:`LakeTable.merge`, and the
+    number of delete keys (observed on the checkpoint that
+    materializes the resolution, so counting them runs no job).
     """
     key = table.key
     schema = schema or table.schema
@@ -169,7 +171,10 @@ def resolve_patch_batch(table, events: DataFrame, schema=None) -> dict:
             F.when(F.col(f"_s_{c}"), F.col(f"_v_{c}")).otherwise(base).alias(c)
         )
 
-    j = j.localCheckpoint(eager=True)  # consumed twice (ups + dels)
+    obs = Observation()
+    j = j.observe(
+        obs, F.count(F.when(F.col("_final_delete"), F.lit(1))).alias("n_dels")
+    ).localCheckpoint(eager=True)  # consumed twice (ups + dels)
     extra = [F.col(EPOCH_COL)] if has_epoch else []
     ups = j.filter(~F.col("_final_delete")).select(
         key,
@@ -183,5 +188,11 @@ def resolve_patch_batch(table, events: DataFrame, schema=None) -> dict:
         *extra,
     )
     dels = j.filter(F.col("_final_delete")).select(key)
-    return {"ups": ups, "dels": dels, "touched": touched, "num_buckets": nb}
+    return {
+        "ups": ups,
+        "dels": dels,
+        "touched": touched,
+        "num_buckets": nb,
+        "n_dels": int(obs.get["n_dels"]),
+    }
 

@@ -470,7 +470,21 @@ def j3_key_join(spark, sf_dir):
 # J4 folded into f7_existence_antijoin (r3e) — see section 1.
 
 
-# TPC-H Q1 shape: pricing summary (flagship batch aggregate)
+# TPC-H Q1 shape: pricing summary (flagship batch aggregate). Both
+# engines compute each average as the exact mean of the per-row cents
+# (floor(x*100+0.5), as in Q3), rounded half-up to 4 decimals in
+# integer arithmetic — (200 * cents + n) div (2 * n) — and then divided
+# by 10^4 once. round(avg(double), 4) disagreed at exact ties
+# (19867 / 800 = 24.83375): Spark rounds the decimal rendering up,
+# DuckDB the nearest double down. A DECIMAL avg does not help, since
+# DuckDB's avg(DECIMAL) returns a DOUBLE.
+def _avg_half_up4(c: str):
+    return F.expr(
+        f"(200 * sum(CAST(floor({c} * 100 + 0.5) AS BIGINT)) + count(*))"
+        f" div (2 * count(*)) / 10000"
+    )
+
+
 @query(
     "q1_pricing_summary",
     """
@@ -478,8 +492,10 @@ def j3_key_join(spark, sf_dir):
            round(sum(l_quantity), 2) AS sum_qty,
            round(sum(l_extendedprice), 2) AS sum_base_price,
            round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-           round(avg(l_quantity), 4) AS avg_qty,
-           round(avg(l_extendedprice), 4) AS avg_price,
+           (200 * sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) + count(*))
+               // (2 * count(*)) / 10000 AS avg_qty,
+           (200 * sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) + count(*))
+               // (2 * count(*)) / 10000 AS avg_price,
            count(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '2000-09-02'
@@ -497,8 +513,8 @@ def q1_pricing_summary(spark, sf_dir):
             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
                 "sum_disc_price"
             ),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
+            _avg_half_up4("l_quantity").alias("avg_qty"),
+            _avg_half_up4("l_extendedprice").alias("avg_price"),
             F.count("*").alias("count_order"),
         )
     )

@@ -26,20 +26,29 @@ post-images", and it is one of two resolvers, each returning a
   ONCE; that scan feeds a single grouping-sets aggregate (set 1 =
   per-key dedup, with quarantined/skipped events passing through
   under unique synthetic keys; set 2 = the per-(epoch, partition,
-  source, class) lineage rollup), whose small output is locally
-  checkpointed and fan-consumed by the stats collect, the MERGE
+  source, class) lineage rollup). The checkpoint that materializes
+  the per-key rows OBSERVES the lineage groups and the batch stats
+  (``DataFrame.observe``) in its own result stage, so reading them
+  costs no job; the checkpointed rows are fan-consumed by the MERGE
   inputs and the quarantine write. Shuffle budget: ONE shuffle at
   that aggregate (map-side partial aggregation collapses hot keys
-  before the exchange) and ONE join + bucket-write shuffle at the
-  merge. Validation is whole-stage-codegen Column exprs (or
-  mapInArrow masks when configured); no per-row Python anywhere.
+  before the exchange) and ONE bucket-write shuffle at the merge.
+  Validation is whole-stage-codegen Column exprs (or mapInArrow masks
+  when configured); no per-row Python anywhere.
 * ``_resolve_patch`` (``EngineConfig.patch_events``): partial images
   compose per key in (commit_ts, lsn) order against the affected
   buckets (operators/patch.py), and validation judges the resolved
   post-images, so rejects are per key.
 
+A stream's triggers share one batch schema, so the resolver's Column
+expressions are PREPARED once per stream (prepared.py): the first
+trigger builds them, later triggers only chain frame operations and
+per-batch literals. Building a Column is several Python -> JVM round
+trips; rebuilding the same plan each trigger was most of a small
+trigger's driver time.
+
 Lineage is written driver-side (pyarrow) because its rollup is already
-collected.
+on the driver.
 """
 
 from __future__ import annotations
@@ -49,21 +58,29 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import (
+    Column,
+    DataFrame,
+    Observation,
+    SparkSession,
+    functions as F,
+    types as T,
+)
+from pyspark.util import inheritable_thread_target
 
 from .config import EngineConfig
-from .events import classify, open_binlog, parse_envelopes
+from .events import classify, classify_column, open_binlog, parse_envelopes
 from .lake import LakeTable
 from .lineage import write_applied, write_lineage_rows, write_quarantine
-from .validate import FAIL_COL, validate_frame
+from .prepared import Prepared
+from .validate import FAIL_COL, prepare_validator, validate_frame
 
 
-def _no_marker_epoch():
+def _no_marker_epoch(e: Column) -> Column:
     """Epochs outside the marker space (NULL = malformed line,
     negative = producer bug rejected at classify): their quarantine
     rows are unattributable and use the batch-content fallback
     partition."""
-    e = F.col("batch_epoch")
     return e.isNull() | (e < 0)
 
 
@@ -89,47 +106,169 @@ _META_COLS = (
 )
 
 
-def _gated_events(
-    ev: DataFrame, rules, validator: str, *extra: Column
-) -> tuple[DataFrame, list[str]]:
-    """Flatten classified events (envelope + ``payload.*`` + ``extra``),
-    run the payload rules, and gate ``fail_reasons``: envelope rejects
-    carry their envelope failure; only apply-upserts keep payload-rule
-    failures (deletes have no payload to validate). Returns the gated
-    frame and the payload column names."""
-    flat = ev.select(
-        "raw", "event_class", "op", "doc_id", F.col("payload.*"),
-        "commit_ts", "lsn", "batch_epoch", "envelope_fail", *extra,
+def _flat_cols(*extra: Column) -> list[Column]:
+    """Classified events flattened: envelope + ``payload.*`` +
+    ``extra``."""
+    return [
+        F.col(c) for c in (
+            "raw", "event_class", "op", "doc_id", "payload.*",
+            "commit_ts", "lsn", "batch_epoch", "envelope_fail",
+        )
+    ] + list(extra)
+
+
+def _gated_fail_reasons() -> Column:
+    """``fail_reasons`` gated by event class: envelope rejects carry
+    their envelope failure; only apply-upserts keep payload-rule
+    failures (deletes have no payload to validate)."""
+    return F.when(
+        F.col("event_class") == "reject", F.array("envelope_fail")
+    ).when(
+        (F.col("event_class") == "apply") & (F.col("op") != "delete"),
+        F.col(FAIL_COL),
     )
+
+
+def _gated_events(ev: DataFrame, rules, validator: str) -> tuple[DataFrame, list[str]]:
+    """Flatten classified events, run the payload rules, and gate
+    ``fail_reasons``. Returns the gated frame and the payload column
+    names."""
+    flat = ev.select(*_flat_cols())
     payload_cols = [c for c in flat.columns if c not in _META_COLS]
     gated = validate_frame(flat, rules, validator).withColumn(
-        FAIL_COL,
-        F.when(F.col("event_class") == "reject", F.array("envelope_fail"))
-        .when(
-            (F.col("event_class") == "apply") & (F.col("op") != "delete"),
-            F.col(FAIL_COL),
-        ),
+        FAIL_COL, _gated_fail_reasons()
     )
     return gated, payload_cols
 
 
-def _collect_fused(rows: DataFrame, one: DataFrame) -> tuple[list, object]:
-    """ONE driver round-trip for a small frame's ``rows`` and a
-    one-row aggregate ``one`` over the same materialized batch (e.g.
-    the lineage rollup and the batch stats): the union collapses two
-    per-trigger jobs into one."""
-    out = (
-        rows.withColumn("_row_kind", F.lit("lin"))
-        .unionByName(
-            one.withColumn("_row_kind", F.lit("stats")),
-            allowMissingColumns=True,
+def _batch_stats(nb: int, row, keep: Column) -> list[Column]:
+    """The batch stats over the deduped rows, as aggregate expressions
+    for ``DataFrame.observe``: merged-row count, the affected-bucket
+    set (passed into merge so it skips its own distinct+collect job),
+    the quarantined-event count (exact even for collapsed duplicate
+    groups, via ``_n_events``) and the multiset signature of the
+    unattributable quarantine rows. ``row(name)`` reads a field of a
+    deduped row; ``keep`` is true on the rows that are deduped rows."""
+    is_q = keep & row("_is_q")
+    is_good = keep & ~row("_is_q") & (row("event_class") == "apply")
+    # Negative-epoch rejects are unattributable too: their epoch is in
+    # the fallback namespace, not the marker space.
+    unattributable = is_q & _no_marker_epoch(row("batch_epoch"))
+    n = F.col("_n_events")
+    return [
+        F.sum(is_good.cast("long")).alias("rows_merged"),
+        F.collect_set(
+            F.when(is_good, F.pmod(F.xxhash64(row("doc_id")), F.lit(nb)).cast("int"))
+        ).alias("buckets"),
+        F.sum(F.when(is_q, n).otherwise(F.lit(0))).alias("q_events"),
+        # order-independent full-width signature of the whole
+        # unattributable-row MULTISET: XOR of per-group 64-bit hashes
+        # folding in each group's duplicate count (a distinct-only XOR
+        # would collide {r1,r1,r2} with {r1,r2,r2} — same distincts,
+        # same total), plus the total count
+        F.bit_xor(F.when(unattributable, F.xxhash64(row("raw"), n))).alias("q_xor"),
+        F.sum(F.when(unattributable, n).otherwise(F.lit(0))).alias("q_null_n"),
+    ]
+
+
+class _LwwPlan:
+    """The last-writer-wins resolver's expressions for one batch
+    schema, rule set, validator and bucket count: built by the first
+    trigger that sees them and reused by every later one (see
+    ``CdcEngine._prep``). Per trigger only the frame operations and a
+    fresh Observation remain."""
+
+    def __init__(self, live: DataFrame, rules, validator: str, nb: int):
+        # input-partition provenance, captured at scan time (A4)
+        self.flat = _flat_cols(F.spark_partition_id().alias("_pid"))
+        flat = live.select(*self.flat)
+        payload_cols = [c for c in flat.columns if c not in _META_COLS]
+        self.payload_cols = payload_cols
+        self.validate = prepare_validator(rules, flat, validator)
+        self.gate = _gated_fail_reasons()
+
+        is_q = (F.col("event_class") == "reject") | F.coalesce(
+            F.size(FAIL_COL) > 0, F.lit(False)
         )
-        .collect()
-    )
-    return (
-        [r for r in out if r["_row_kind"] == "lin"],
-        next(r for r in out if r["_row_kind"] == "stats"),
-    )
+        passthrough = is_q | (F.col("event_class") == "skip")
+        # disjoint grouping namespaces: real keys under "d#", synthetic
+        # passthrough keys under "q#" — without the "d#" prefix a
+        # document whose doc_id is literally "q#42" would share a group
+        # with a quarantined event of lsn 42 and one of the two records
+        # would be silently collapsed away by the max_by
+        qkey = F.when(
+            ~passthrough, F.concat(F.lit("d#"), F.col("doc_id"))
+        ).otherwise(
+            F.concat(
+                F.lit("q#"),
+                F.coalesce(
+                    F.col("lsn").cast("string"), F.xxhash64("raw").cast("string")
+                ),
+            )
+        )
+        src = (
+            F.col("source") if "source" in payload_cols
+            else F.lit(None).cast("string")
+        )
+        self.staged = [
+            qkey.alias("_qkey"),
+            F.col("batch_epoch").alias("_epoch"),
+            F.col("_pid"),
+            src.alias("_src"),
+            F.col("event_class").alias("_class"),
+            is_q.alias("_is_q"),
+            # raw (a lazy to_json re-render for well-formed rows) is
+            # materialized + shuffled ONLY for quarantine rows
+            F.when(is_q, F.col("raw")).alias("raw"),
+            *[
+                F.col(c) for c in (
+                    "op", "doc_id", *payload_cols, "commit_ts", "lsn",
+                    "batch_epoch", "event_class", FAIL_COL,
+                )
+            ],
+        ]
+        self.grouping = ["_qkey", "_epoch", "_pid", "_src", "_class"]
+        self.grouping_sets = [["_qkey"], ["_epoch", "_pid", "_src", "_class"]]
+        row_cols = (
+            "_is_q", "raw", "op", "doc_id", *payload_cols, "commit_ts",
+            "lsn", "batch_epoch", "event_class", FAIL_COL,
+        )
+        self.aggs = [
+            F.max_by(F.struct(*row_cols), F.struct("commit_ts", "lsn")).alias("_r"),
+            F.count(F.lit(1)).alias("_n_events"),
+        ]
+        # set 1 rows have a non-null dedup key; set 2 (lineage) rows don't
+        is_dedup = F.col("_qkey").isNotNull()
+        self.lineage = F.collect_list(
+            F.when(
+                ~is_dedup,
+                F.struct("_epoch", "_pid", "_src", "_class", "_n_events"),
+            )
+        ).alias("lineage")
+        # the stats read the aggregate rows (set 1's fields still in
+        # the ``_r`` struct) or, behind the near-dup gate, the gated
+        # per-key rows
+        self.agg_stats = _batch_stats(nb, lambda c: F.col("_r")[c], is_dedup)
+        self.row_stats = _batch_stats(nb, F.col, F.lit(True))
+        self.is_dedup = is_dedup
+        self.latest = [F.col("_r.*"), F.col("_n_events")]
+
+        self.is_q = F.col("_is_q")
+        self.is_good = ~F.col("_is_q") & (F.col("event_class") == "apply")
+        self.is_upsert = self.is_good & (F.col("op") != "delete")
+        self.is_delete = self.is_good & (F.col("op") == "delete")
+        self.doc_id = F.col("doc_id")
+        self.upsert_cols = [F.col(c) for c in ("doc_id", *payload_cols)]
+        self.profile_cols = self.upsert_cols + [F.col("batch_epoch")]
+        self.applied_cols = [
+            F.col(c) for c in ("doc_id", "lsn", "op", "commit_ts", "batch_epoch")
+        ]
+        # re-expand collapsed duplicates (same qkey) so the quarantine
+        # stays one row per rejected event
+        self.explode_events = F.explode(F.sequence(F.lit(1), F.col("_n_events")))
+        self.quarantine_cols = [
+            F.col(c) for c in ("raw", "doc_id", FAIL_COL, "batch_epoch")
+        ]
 
 
 def start_tail(
@@ -189,7 +328,6 @@ class _Resolved:
     profile: DataFrame | None = None
     rows_merged: int = 0
     val_rejects: int = 0
-    phase: str = ""  # phase_ms key of the resolve step
     pinned: list = field(default_factory=list)  # checkpoints to unpersist
 
 
@@ -223,6 +361,9 @@ class CdcEngine:
         # epochs applied but not yet marker-committed (streaming
         # defer_boundary mode; see apply_batch)
         self._deferred_epochs: set[int] = set()
+        # per-stream Column expressions, filled on the first trigger
+        # (see prepared.py)
+        self._prep = Prepared()
         self._corpus = None
         if self.config.corpus_dir:
             from .operators.corpus_sync import CorpusPipeline
@@ -325,20 +466,23 @@ class CdcEngine:
                 min_age_seconds=self.config.vacuum_min_age_seconds,
             )
 
-    def _gate_near_dups(self, latest: DataFrame, payload_cols) -> DataFrame:
+    def _gate_near_dups(
+        self, latest: DataFrame, payload_cols, obs: Observation, stats
+    ) -> DataFrame:
         """Re-classify near-duplicate upserts in ``latest`` as
         quarantine rows (reason ``near_dup:doc:<matched_id>``).
 
         Runs between the batch's dedup aggregate and its stats/merge
         consumers, so every downstream artifact (rows_merged, affected
         buckets, quarantine write, lineage counts) sees the gated
-        classification with no special-casing. The index probe is
-        bucket-pruned O(batch band keys); the index itself is synced
-        from the table changelog FIRST, so a crash that merged a batch
-        but lost the index commit self-heals before the next gate.
-        Quarantined rows get a replayable full-image envelope as their
-        ``raw`` (the patch-mode quarantine contract): an operator who
-        clears the dup via reprocess_quarantine is explicitly
+        classification with no special-casing: the batch ``stats`` are
+        observed into ``obs`` on the gate's own checkpoint. The index
+        probe is bucket-pruned O(batch band keys); the index itself is
+        synced from the table changelog FIRST, so a crash that merged a
+        batch but lost the index commit self-heals before the next
+        gate. Quarantined rows get a replayable full-image envelope as
+        their ``raw`` (the patch-mode quarantine contract): an operator
+        who clears the dup via reprocess_quarantine is explicitly
         overriding the gate.
 
         With ``near_dup_intra_batch`` (default), docs are also gated
@@ -438,6 +582,7 @@ class CdcEngine:
                 F.when(hit, F.lit(1)).otherwise(F.col("_n_events")),
             )
             .drop("_nd_match")
+            .observe(obs, *stats)
             .localCheckpoint(eager=True)
         )
 
@@ -564,16 +709,32 @@ class CdcEngine:
 
         ``fresh_filter``: a PINNED already-committed filter computed
         once at stream start; None uses the live filter. Whether a
-        stream may pin is decided by :meth:`pinned_fresh_filter`."""
+        stream may pin is decided by :meth:`pinned_fresh_filter`.
+
+        Every Spark job a phase starts carries the phase's
+        ``BatchMetrics.phase_ms`` key as its job description (the
+        caller's description is restored on return), and the sink
+        writes run in the caller's job group, so stopping a streaming
+        query cancels them too."""
         t0 = time.monotonic()
         phases: dict[str, int] = {}
+        sc = self.spark.sparkContext
+        prev_description = sc.getLocalProperty("spark.job.description")
 
         def _mark(name: str, since: float) -> float:
             now = time.monotonic()
             phases[name] = int((now - since) * 1000)
             return now
 
-        ev = classify(parsed, op_whitelist=self.config.rules.op_whitelist)
+        if self.config.patch_events:
+            resolve, phase = self._resolve_patch, "compose_resolve_validate"
+        else:
+            resolve, phase = self._resolve_lww, "scan_validate_dedup"
+        ops = self.config.rules.op_whitelist
+        ev = parsed.withColumn(
+            "event_class",
+            self._prep.get("classify", ops, lambda: classify_column(ops)),
+        )
         # Committed epochs are known from the table manifest
         # (driver-side, no scan), so the batch filters them out up
         # front. The filter stays O(1)-sized no matter how many epochs
@@ -588,10 +749,10 @@ class CdcEngine:
         )
         res = None
         try:
-            if self.config.patch_events:
-                res = self._resolve_patch(live)
-            else:
-                res = self._resolve_lww(live)
+            # every job of a phase carries the phase's phase_ms key as
+            # its description, so an event log ties it to the phase
+            sc.setJobDescription(phase)
+            res = resolve(live)
             lin_groups = res.lin_groups
             # markers live in the non-negative epoch space only: NULL
             # epochs (malformed lines) and negative epochs (producer
@@ -617,7 +778,8 @@ class CdcEngine:
             for r in lin_groups:
                 by_class[r["_class"]] = by_class.get(r["_class"], 0) + r["_n_events"]
             n_env_rejects = by_class.get("reject", 0)
-            td = _mark(res.phase, t0)
+            td = _mark(phase, t0)
+            sc.setJobDescription("merge_and_quarantine")
 
             fallback_epoch = _fallback_epoch(res.q_xor, res.q_n)
             # Sink ordering is load-bearing: the quarantine and
@@ -633,7 +795,11 @@ class CdcEngine:
             # landed. The sink writes (independent targets) still
             # overlap each other via driver threads; the merge is
             # serialized after them (measured sink cost: ~10ms/batch,
-            # negligible against the merge).
+            # negligible against the merge). Each thread target
+            # inherits this thread's job group and description, so
+            # the sink jobs stay cancellable with the streaming query
+            # and attributable to this phase.
+            inherit = inheritable_thread_target(self.spark)
             with ThreadPoolExecutor(max_workers=3) as pool:
                 # a batch that quarantined nothing skips the write job
                 # outright — the counts already proved the frame empty,
@@ -646,14 +812,18 @@ class CdcEngine:
                     # batch-content fallback partition: a producer's
                     # negative epoch would otherwise collide with the
                     # fallback namespace across batches
+                    attributable, epoch = self._prep.get(
+                        "quarantine_epoch",
+                        None,
+                        lambda: (F.col("batch_epoch") >= 0, F.col("batch_epoch")),
+                    )
                     quarantined = res.quarantine.withColumn(
                         "batch_epoch",
-                        F.when(F.col("batch_epoch") >= 0, F.col("batch_epoch"))
-                        .otherwise(F.lit(fallback_epoch)),
+                        F.when(attributable, epoch).otherwise(F.lit(fallback_epoch)),
                     )
                     futures.append(
                         pool.submit(
-                            write_quarantine,
+                            inherit(write_quarantine),
                             quarantined,
                             self.quarantine_path,
                             self.config.rules,
@@ -661,7 +831,9 @@ class CdcEngine:
                     )
                 if self.config.applied_lineage and new_epochs:
                     futures.append(
-                        pool.submit(write_applied, res.applied, self.applied_path)
+                        pool.submit(
+                            inherit(write_applied), res.applied, self.applied_path
+                        )
                     )
                 if self.config.profile and new_epochs:
                     # per-epoch data profile of the upserts about to
@@ -673,7 +845,7 @@ class CdcEngine:
 
                     futures.append(
                         pool.submit(
-                            _write_epoch_partitioned,
+                            inherit(_write_epoch_partitioned),
                             profile_events(res.profile),
                             self.profile_path,
                         )
@@ -722,6 +894,7 @@ class CdcEngine:
                     )
                     self._last_gate_sigs = None
             tm = _mark("merge_and_quarantine", td)
+            sc.setJobDescription("sinks")
 
             wall_ms = int((time.monotonic() - t0) * 1000)
             metrics = BatchMetrics(
@@ -761,6 +934,7 @@ class CdcEngine:
             metrics.phase_ms = phases
             return metrics
         finally:
+            sc.setLocalProperty("spark.job.description", prev_description)
             if res is not None:
                 for df in res.pinned:
                     df.unpersist()
@@ -779,167 +953,79 @@ class CdcEngine:
         persistence was measured NOT to pay off (block-cache build
         flat ~13s at any core count; a staging parquet write costs
         more than the scan it saves — see BENCH notes), but the
-        post-aggregate output is tiny (one row per touched key + one
-        per quarantined/skipped event + lineage groups) and is
-        checkpointed for its consumers: stats, merge inputs,
-        quarantine write. Validation rejects are per EVENT."""
-        gated, payload_cols = _gated_events(
-            live,
-            self.config.rules,
-            self.config.validator,
-            # input-partition provenance, captured at scan time (A4)
-            F.spark_partition_id().alias("_pid"),
+        post-aggregate set-1 rows are tiny (one per touched key + one
+        per quarantined/skipped event) and are checkpointed for the
+        merge inputs and the quarantine write. The checkpoint is
+        OBSERVED, not collected: the set-2 lineage groups and the
+        batch stats are aggregated in the checkpoint job's result
+        stage, above its exchange, where Spark applies each task's
+        update exactly once. Behind the near-dup gate the stats ride
+        the gate's checkpoint instead. The expressions are prepared
+        once per (batch schema, rule set, validator, bucket count);
+        a trigger only chains frame operations onto them. Validation
+        rejects are per EVENT."""
+        rules, validator = self.config.rules, self.config.validator
+        nb = self.table.num_buckets
+        p = self._prep.get(
+            "lww",
+            (live.schema.json(), rules, validator, nb),
+            lambda: _LwwPlan(live, rules, validator, nb),
         )
-        is_q = (F.col("event_class") == "reject") | F.coalesce(
-            F.size(FAIL_COL) > 0, F.lit(False)
-        )
-        passthrough = is_q | (F.col("event_class") == "skip")
-        # disjoint grouping namespaces: real keys under "d#", synthetic
-        # passthrough keys under "q#" — without the "d#" prefix a
-        # document whose doc_id is literally "q#42" would share a group
-        # with a quarantined event of lsn 42 and one of the two records
-        # would be silently collapsed away by the max_by
-        qkey = F.when(
-            ~passthrough, F.concat(F.lit("d#"), F.col("doc_id"))
-        ).otherwise(
-            F.concat(
-                F.lit("q#"),
-                F.coalesce(
-                    F.col("lsn").cast("string"), F.xxhash64("raw").cast("string")
-                ),
-            )
-        )
-        src = (
-            F.col("source") if "source" in payload_cols
-            else F.lit(None).cast("string")
-        )
-        staged = gated.select(
-            qkey.alias("_qkey"),
-            F.col("batch_epoch").alias("_epoch"),
-            F.col("_pid"),
-            src.alias("_src"),
-            F.col("event_class").alias("_class"),
-            is_q.alias("_is_q"),
-            # raw (a lazy to_json re-render for well-formed rows) is
-            # materialized + shuffled ONLY for quarantine rows
-            F.when(is_q, F.col("raw")).alias("raw"),
-            "op",
-            "doc_id",
-            *payload_cols,
-            "commit_ts",
-            "lsn",
-            "batch_epoch",
-            "event_class",
-            FAIL_COL,
-        )
-        grouping_cols = ("_qkey", "_epoch", "_pid", "_src", "_class")
-        row_cols = [c for c in staged.columns if c not in grouping_cols]
-        # localCheckpoint (NOT cache): the aggregate output is consumed
-        # by four downstream jobs (lineage collect, stats, merge,
-        # quarantine write) through unions/joins, where Spark 4.1's
-        # cache-plan substitution proved unreliable (measured: the
-        # merge job silently re-ran the full JSON scan+aggregate while
-        # a plain count hit the cache). Checkpointing truncates the
-        # lineage so every consumer reads the materialized blocks by
-        # construction.
-        agg = (
-            staged.groupingSets(
-                [["_qkey"], ["_epoch", "_pid", "_src", "_class"]],
-                *grouping_cols,
-            )
-            .agg(
-                F.max_by(F.struct(*row_cols), F.struct("commit_ts", "lsn")).alias("_r"),
-                F.count(F.lit(1)).alias("_n_events"),
-            )
+        gated = p.validate(live.select(*p.flat)).withColumn(FAIL_COL, p.gate)
+        gate = self._nd_band is not None
+        obs = Observation()
+        # localCheckpoint (NOT cache): the set-1 rows are consumed by
+        # several downstream jobs (merge, quarantine write) through
+        # unions/joins, where Spark 4.1's cache-plan substitution
+        # proved unreliable (measured: the merge job silently re-ran
+        # the full JSON scan+aggregate while a plain count hit the
+        # cache). Checkpointing truncates the lineage so every
+        # consumer reads the materialized blocks by construction.
+        ck = (
+            gated.select(*p.staged)
+            .groupingSets(p.grouping_sets, *p.grouping)
+            .agg(*p.aggs)
+            .observe(obs, p.lineage, *([] if gate else p.agg_stats))
+            .filter(p.is_dedup)
+            .select(*p.latest)
             .localCheckpoint(eager=True)
         )
-        # set 1 rows have a non-null dedup key; set 2 (lineage) rows don't
-        latest = agg.filter(F.col("_qkey").isNotNull()).select(
-            F.col("_r.*"), "_n_events"
-        )
-        if self._nd_band is not None:
-            latest = self._gate_near_dups(latest, payload_cols)
-        is_good = ~F.col("_is_q") & (F.col("event_class") == "apply")
-        # batch stats over the deduped rows: merged-row count, the
-        # affected-bucket set (passed into merge so it skips its own
-        # distinct+collect job), and the quarantined-event count
-        # (exact even for collapsed duplicate groups, via _n_events).
-        nb = self.table.num_buckets
-        stats_frame = latest.agg(
-            F.sum(is_good.cast("long")).alias("rows_merged"),
-            F.collect_set(
-                F.when(
-                    is_good,
-                    F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int"),
-                )
-            ).alias("buckets"),
-            F.sum(
-                F.when(F.col("_is_q"), F.col("_n_events")).otherwise(F.lit(0))
-            ).alias("q_events"),
-            # order-independent full-width signature of the whole
-            # unattributable-row MULTISET: XOR of per-group 64-bit
-            # hashes folding in each group's duplicate count (a
-            # distinct-only XOR would collide {r1,r1,r2} with
-            # {r1,r2,r2} — same distincts, same total), plus the
-            # total count. Negative-epoch rejects are unattributable
-            # too: their epoch is in the fallback namespace, not the
-            # marker space.
-            F.bit_xor(
-                F.when(
-                    F.col("_is_q") & _no_marker_epoch(),
-                    F.xxhash64("raw", "_n_events"),
-                )
-            ).alias("q_xor"),
-            F.sum(
-                F.when(
-                    F.col("_is_q") & _no_marker_epoch(),
-                    F.col("_n_events"),
-                ).otherwise(F.lit(0))
-            ).alias("q_null_n"),
-        )
-        lin_groups, stats = _collect_fused(
-            agg.filter(F.col("_qkey").isNull()).select(
-                "_epoch", "_pid", "_src", "_class", "_n_events"
-            ),
-            stats_frame,
-        )
+        latest = ck
+        stats = obs.get
+        lin_groups = stats["lineage"]
+        if gate:
+            gate_obs = Observation()
+            latest = self._gate_near_dups(
+                latest, p.payload_cols, gate_obs, p.row_stats
+            )
+            stats = gate_obs.get
         n_env_rejects = sum(
             r["_n_events"] for r in lin_groups if r["_class"] == "reject"
         )
-        ups = latest.filter(is_good & (F.col("op") != "delete"))
         return _Resolved(
             lin_groups=lin_groups,
             q_xor=stats["q_xor"],
             q_n=int(stats["q_null_n"] or 0),
-            upserts=ups.select("doc_id", *payload_cols),
-            deletes=latest.filter(is_good & (F.col("op") == "delete")).select(
-                "doc_id"
-            ),
+            upserts=latest.filter(p.is_upsert).select(*p.upsert_cols),
+            deletes=latest.filter(p.is_delete).select(p.doc_id),
             buckets=sorted(stats["buckets"]),
             num_buckets=nb,
             quarantine=(
-                latest.filter(F.col("_is_q"))
-                # re-expand collapsed duplicates (same qkey) so the
-                # quarantine stays one row per rejected event
-                .withColumn(
-                    "_i", F.explode(F.sequence(F.lit(1), F.col("_n_events")))
-                )
-                .select("raw", "doc_id", FAIL_COL, "batch_epoch")
+                latest.filter(p.is_q)
+                .withColumn("_i", p.explode_events)
+                .select(*p.quarantine_cols)
             ),
             applied=(
-                latest.filter(is_good).select(
-                    "doc_id", "lsn", "op", "commit_ts", "batch_epoch"
-                )
+                latest.filter(p.is_good).select(*p.applied_cols)
                 if self.config.applied_lineage else None
             ),
             profile=(
-                ups.select("doc_id", *payload_cols, "batch_epoch")
+                latest.filter(p.is_upsert).select(*p.profile_cols)
                 if self.config.profile else None
             ),
             rows_merged=int(stats["rows_merged"] or 0),
             val_rejects=int(stats["q_events"] or 0) - n_env_rejects,
-            phase="scan_validate_dedup",
-            pinned=[agg],
+            pinned=[ck],
         )
 
     def _resolve_patch(self, live: DataFrame) -> _Resolved:
@@ -985,7 +1071,13 @@ class CdcEngine:
             else F.lit(None).cast("array<string>")
         )
         # one scan, pinned: every downstream job (rollup, quarantine,
-        # composition) reads the materialized batch
+        # composition) reads the materialized batch; the unattributable
+        # envelope rejects' signature (one hash per event) is observed
+        # on the way
+        unattributable = (F.col("event_class") == "reject") & _no_marker_epoch(
+            F.col("batch_epoch")
+        )
+        q_obs = Observation()
         flat = live.select(
             "raw",
             "event_class",
@@ -998,27 +1090,23 @@ class CdcEngine:
             "batch_epoch",
             "envelope_fail",
             F.spark_partition_id().alias("_pid"),
+        ).observe(
+            q_obs,
+            F.bit_xor(F.when(unattributable, F.xxhash64("raw"))).alias("q_xor"),
+            F.count(F.when(unattributable, F.lit(1))).alias("q_null_n"),
         ).localCheckpoint(eager=True)
         src = (
             F.col("source")
             if "source" in data_cols
             else F.lit(None).cast("string")
         )
-        lin_groups, qs = _collect_fused(
-            flat.groupBy(
-                F.col("batch_epoch").alias("_epoch"),
-                F.col("_pid"),
-                src.alias("_src"),
-                F.col("event_class").alias("_class"),
-            ).agg(F.count(F.lit(1)).alias("_n_events")),
-            # the unattributable envelope rejects, one hash per event
-            flat.filter(
-                (F.col("event_class") == "reject") & _no_marker_epoch()
-            ).agg(
-                F.bit_xor(F.xxhash64("raw")).alias("q_xor"),
-                F.count(F.lit(1)).alias("q_null_n"),
-            ),
-        )
+        lin_groups = flat.groupBy(
+            F.col("batch_epoch").alias("_epoch"),
+            F.col("_pid"),
+            src.alias("_src"),
+            F.col("event_class").alias("_class"),
+        ).agg(F.count(F.lit(1)).alias("_n_events")).collect()
+        qs = q_obs.get
         if not lin_groups:
             return _Resolved(lin_groups=lin_groups, pinned=[flat])
 
@@ -1028,10 +1116,16 @@ class CdcEngine:
             "batch_epoch",
         )
         r = resolve_patch_batch(self.table, apply_ev, schema=tschema)
+        is_bad = F.coalesce(F.size(FAIL_COL) > 0, F.lit(False))
+        # the post-image pass/fail counts, observed on the checkpoint
+        v_obs = Observation()
         v = validate_frame(
             r["ups"], self.config.rules, self.config.validator
+        ).observe(
+            v_obs,
+            F.sum((~is_bad).cast("long")).alias("n_good"),
+            F.sum(is_bad.cast("long")).alias("n_bad"),
         ).localCheckpoint(eager=True)
-        is_bad = F.coalesce(F.size(FAIL_COL) > 0, F.lit(False))
         # envelope rejects plus the failing post-images, the latter as
         # a FULL-IMAGE ENVELOPE (op/doc_id/payload/commit_ts/lsn/
         # batch_epoch, provenance = the key's last event in the
@@ -1061,15 +1155,7 @@ class CdcEngine:
             # negatives are envelope-rejected)
             "batch_epoch",
         )
-        # the delete-key count and the post-image pass/fail counts
-        (dels,), cnt = _collect_fused(
-            r["dels"].agg(F.count(F.lit(1)).alias("n_dels")),
-            v.agg(
-                F.sum((~is_bad).cast("long")).alias("n_good"),
-                F.sum(is_bad.cast("long")).alias("n_bad"),
-            ),
-        )
-        n_dels = int(dels["n_dels"] or 0)
+        cnt = v_obs.get
         n_good, n_bad = int(cnt["n_good"] or 0), int(cnt["n_bad"] or 0)
         good = v.filter(~is_bad)
         return _Resolved(
@@ -1085,12 +1171,11 @@ class CdcEngine:
                 good.select(key, *data_cols, "batch_epoch")
                 if self.config.profile else None
             ),
-            rows_merged=n_good + n_dels,
+            rows_merged=n_good + r["n_dels"],
             # per resolved KEY (the whole key's window withheld):
             # events_applied is then apply events minus bad keys,
             # exact when one event per key
             val_rejects=n_bad,
-            phase="compose_resolve_validate",
             pinned=[flat],
         )
 

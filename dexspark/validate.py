@@ -24,7 +24,7 @@ mirroring DecompressFailEventMessage{parent, errorPath, failReason}
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from functools import reduce
 
 import pandas as pd
@@ -341,13 +341,19 @@ def arrow_validate(df: DataFrame, rules: RuleSet) -> DataFrame:
 
     Shows up in the plan as MapInPandas (ArrowEvalPython family), never
     BatchEvalPython — enforced by tests/test_plans.py."""
+    return _prepare_arrow(rules, df)(df)
+
+
+def _prepare_arrow(rules: RuleSet, df: DataFrame) -> Callable[[DataFrame], DataFrame]:
+    """:func:`arrow_validate` compiled for frames of ``df``'s schema."""
     import dataclasses
 
     # "everything except the array rules": replace() cannot drift when
     # a new scalar rule kind is added to RuleSet (a hand-enumerated
     # copy silently dropped new fields in arrow mode).
     scalar_rules = dataclasses.replace(rules, token_range=(), length_equals=())
-    df = df.withColumn("_scalar_fails", fail_reasons_column(scalar_rules, df.schema))
+    scalar_fails = fail_reasons_column(scalar_rules, df.schema)
+    df = df.withColumn("_scalar_fails", scalar_fails)
 
     # ONE spec per RULE, never folded: folding a token_range into a
     # length_equals spec on the same column (a) kept only the LAST
@@ -366,7 +372,7 @@ def arrow_validate(df: DataFrame, rules: RuleSet) -> DataFrame:
         if arr_col in dtypes:
             token_specs.append((None, arr_col, lo, hi))
     if not token_specs:
-        return df.withColumn(FAIL_COL, F.col("_scalar_fails")).drop("_scalar_fails")
+        return lambda frame: frame.withColumn(FAIL_COL, scalar_fails)
 
     # The Arrow UDF only emits boolean mask columns (pure pyarrow/numpy
     # compute, no Python row loop); the fail_reasons array is composed
@@ -399,7 +405,6 @@ def arrow_validate(df: DataFrame, rules: RuleSet) -> DataFrame:
                 arrays, names=names + [f.name for f in mask_fields]
             )
 
-    masked = df.mapInArrow(check_batches, schema=result_schema)
     token_fails = []
     for idx, (len_col, arr_col, lo, hi) in enumerate(token_specs):
         if len_col is not None:
@@ -416,12 +421,28 @@ def arrow_validate(df: DataFrame, rules: RuleSet) -> DataFrame:
                     F.lit(_msg("token_range", arr_col, f"token outside [{lo},{hi})", rules, lo=lo, hi=hi)),
                 )
             )
-    out = masked.withColumn(
-        FAIL_COL,
-        F.array_compact(F.concat(F.col("_scalar_fails"), F.array(*token_fails))),
-    )
+    fails = F.array_compact(F.concat(F.col("_scalar_fails"), F.array(*token_fails)))
     drop = ["_scalar_fails"] + [f.name for f in mask_fields]
-    return out.drop(*drop)
+
+    def apply(frame: DataFrame) -> DataFrame:
+        masked = frame.withColumn("_scalar_fails", scalar_fails).mapInArrow(
+            check_batches, schema=result_schema
+        )
+        return masked.withColumn(FAIL_COL, fails).drop(*drop)
+
+    return apply
+
+
+def prepare_validator(
+    rules: RuleSet, df: DataFrame, mode: str = "jvm"
+) -> Callable[[DataFrame], DataFrame]:
+    """The validation step for frames with ``df``'s schema, compiled
+    once: ``apply(frame)`` appends fail_reasons. A stream applies the
+    same step to every micro-batch of one schema (see prepared.py)."""
+    if mode == "arrow":
+        return _prepare_arrow(rules, df)
+    fails = fail_reasons_column(rules, df.schema)
+    return lambda frame: frame.withColumn(FAIL_COL, fails)
 
 
 def validate_frame(df: DataFrame, rules: RuleSet, mode: str = "jvm") -> DataFrame:
@@ -432,6 +453,4 @@ def validate_frame(df: DataFrame, rules: RuleSet, mode: str = "jvm") -> DataFram
     events (no Arrow IPC at all). "arrow": array checks via mapInArrow
     masks. Both vectorized, both zero per-row Python, equal by test.
     """
-    if mode == "arrow":
-        return arrow_validate(df, rules)
-    return with_fail_reasons(df, rules)
+    return prepare_validator(rules, df, mode)(df)
