@@ -522,8 +522,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--dsir-target",
         help="parquet path of the DSIR target corpus (required with "
-        "--dsir-frac in --prepare-corpus; in the incremental modes it "
-        "is only read until _dsir.json is frozen)",
+        "--dsir-frac in --prepare-corpus, and in --sync-corpus until "
+        "_dsir.json is frozen; the incremental modes read it only "
+        "until then)",
     )
     ap.add_argument(
         "--dsir-buckets",
@@ -884,7 +885,7 @@ def main(argv: list[str] | None = None) -> int:
         # window shards + state-table fold out (operators/corpus_sync)
         from .lake import LakeTable, default_io
         from .operators.corpus import CorpusConfig
-        from .operators.corpus_sync import CorpusPipeline
+        from .operators.corpus_sync import CorpusPipeline, read_frozen_dsir
 
         if not default_io().is_dir(
             os.path.join(args.corpus_src, "_snapshots")
@@ -901,10 +902,29 @@ def main(argv: list[str] | None = None) -> int:
             )
             return 2
         cfg = _corpus_cfg(args)
+        src = LakeTable(spark, args.corpus_src)
+        # the pipeline's state lives on its source table's FileIO; a
+        # resumed pipeline gates under its frozen model, target or not
+        if (
+            cfg.dsir_frac is not None
+            and not args.dsir_target
+            and read_frozen_dsir(src.io, args.sync_corpus) is None
+        ):
+            print(
+                json.dumps(
+                    {
+                        "error": "--dsir-frac needs --dsir-target until "
+                        "a window has frozen the DSIR model (no "
+                        "_dsir.json under --sync-corpus); without one "
+                        "every window would pass ungated"
+                    }
+                )
+            )
+            return 2
         evals = [spark.read.parquet(p) for p in (args.corpus_eval or [])]
         pipe = CorpusPipeline(
             spark,
-            LakeTable(spark, args.corpus_src),
+            src,
             args.sync_corpus,
             eval_sets=evals,
             config=cfg,

@@ -517,10 +517,9 @@ def binlog_epoch_files(path: str) -> dict[int, list[str]]:
     """epoch -> file/dir names for every log entry whose NAME encodes
     its epoch: ``epoch-<E>-*`` files (gen.write_binlog) or
     ``batch_epoch=<E>`` partition dirs (structured parquet logs, the
-    outbox, the dexlake-binlog sink). Entries that don't encode an
-    epoch are ignored — retention never touches what it cannot
-    attribute. Same recognizer as the router's epoch listing
-    (router._epochs_from_listing)."""
+    outbox). Entries that don't encode an epoch are ignored — retention
+    never touches what it cannot attribute. Same recognizer as the
+    router's epoch listing (router._epochs_from_listing)."""
     import re
 
     out: dict[int, list[str]] = {}

@@ -157,6 +157,15 @@ def _retractions_schema(key_type) -> T.StructType:
     )
 
 
+def read_frozen_dsir(io, out_dir: str) -> dict | None:
+    """The DSIR (model, cutoff) pair frozen under ``out_dir``, or None
+    before the first non-empty window has frozen one."""
+    try:
+        return json.loads(io.read_text(os.path.join(out_dir, "_dsir.json")))
+    except FileNotFoundError:
+        return None
+
+
 class CorpusPipeline:
     """Continuous corpus preparation over a source LakeTable.
 
@@ -353,12 +362,6 @@ class CorpusPipeline:
     def _dsir_path(self) -> str:
         return os.path.join(self.out_dir, "_dsir.json")
 
-    def _read_frozen_dsir(self):
-        try:
-            return json.loads(self.io.read_text(self._dsir_path))
-        except FileNotFoundError:
-            return None
-
     def _frozen_dsir(self, accepted: DataFrame, report: dict):
         """Load the persisted DSIR (model, cutoff) pair, or freeze one
         now. The model is the target-vs-pool log-ratio learned with
@@ -373,7 +376,7 @@ class CorpusPipeline:
         at freeze time; an empty window freezes nothing."""
         from .dsir import gumbel_scored, learn_dsir
 
-        frozen = self._read_frozen_dsir()
+        frozen = read_frozen_dsir(self.io, self.out_dir)
         if frozen is not None:
             return frozen
         if self.dsir_target is None:
@@ -408,7 +411,8 @@ class CorpusPipeline:
             self.io.put_if_absent(self._dsir_path, json.dumps(doc))
         except ConcurrentCommitError:
             report.pop("dsir_frozen", None)
-            return self._read_frozen_dsir()  # raced: the frozen pair wins
+            # raced: the frozen pair wins
+            return read_frozen_dsir(self.io, self.out_dir)
         return doc
 
     # -- the fold ---------------------------------------------------

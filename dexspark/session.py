@@ -52,9 +52,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Deterministic timestamps across JVM/pandas/DuckDB comparisons.
         .config("spark.sql.session.timeZone", "UTC")
-        # Python DataSource filter pushdown (dexspark.pyds zone-map
-        # file pruning; Spark 4.1 gates pushFilters behind this conf).
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
         # DEXSPARK_DRIVER_MEM (e.g. "24g") overrides the host-sized default
         .config(

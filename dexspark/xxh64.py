@@ -1,18 +1,19 @@
 """Pure-Python XXH64 matching Spark's ``F.xxhash64`` (seed 42).
 
-The dexlake DataSource plans driver-side in Python, where the JVM's
-xxhash64 is not callable — but bucket pruning for a pushed point
-predicate needs exactly Spark's ``pmod(xxhash64(key), num_buckets)``.
-This module reimplements the XXH64 variants Spark's
-``XxHash64Function`` uses (catalyst hash.scala / XXH64.java — public
-Apache Spark source), byte-for-byte:
+The test suite's Python reference for Spark's ``xxhash64``: the FIM
+gate and cut points (operators/fim.py) and DSIR's hashed n-gram
+features (operators/dsir.py) are hash-derived in the JVM, and
+tests/test_fim.py and tests/test_dsir.py rebuild them in Python with
+this module to compare row for row. It reimplements the XXH64 variants
+Spark's ``XxHash64Function`` uses (catalyst hash.scala / XXH64.java —
+public Apache Spark source), byte-for-byte:
 
 - strings hash their UTF-8 bytes via the general byte-array routine;
 - longs (and ints, which Spark widens through ``hashInt``) use the
   fixed-width fast paths.
 
 Parity with the JVM implementation is pinned by
-tests/test_pyds.py::test_python_xxh64_matches_spark over strings,
+tests/test_fim.py::test_python_xxh64_matches_spark over strings,
 ints, longs, and edge values. All arithmetic is mod 2^64; the result
 is reinterpreted as a SIGNED 64-bit value exactly like Spark's
 LongType output, so ``bucket_of`` reproduces the engine's bucket

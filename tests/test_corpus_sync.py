@@ -1162,3 +1162,46 @@ def test_dsir_skips_until_target_available(spark, tmp_path):
     r2 = pipe2.sync()
     assert isinstance(r2["stages"]["after_dsir"], int)
     assert os.path.exists(os.path.join(out, "_dsir.json"))
+
+
+def test_cli_sync_corpus_dsir_needs_target_until_frozen(
+    spark, tmp_path, capsys
+):
+    """--sync-corpus with --dsir-frac but neither --dsir-target nor a
+    frozen _dsir.json fails fast (exit 2, JSON error, no state written)
+    instead of passing every window ungated; once a window has frozen
+    the model, a resumed run needs no target."""
+    from dexspark import cli
+
+    sparky = "spark query plan shuffle stage executor partition " \
+             "broadcast join aggregate exchange codegen " + _WORDS
+    src = _docs_table(
+        spark, tmp_path, [(f"s{i:02d}", sparky + f" tail{i}") for i in range(4)]
+    )
+    out = str(tmp_path / "corpus")
+    argv = [
+        "--sync-corpus", out,
+        "--corpus-src", src.root,
+        "--corpus-splits", "train=1.0",
+        "--seq-len", "64", "--eos-id", "0",
+        "--dsir-frac", "0.5", "--dsir-buckets", "256",
+    ]
+    assert cli.main(argv) == 2
+    err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert "--dsir-target" in err["error"]
+    assert not os.path.exists(out)
+
+    target = str(tmp_path / "target")
+    spark.createDataFrame(
+        [("t0", sparky + " extra")], "doc_id string, text string"
+    ).write.parquet(target)
+    assert cli.main(argv + ["--dsir-target", target]) == 0
+    r1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert isinstance(r1["stages"]["after_dsir"], int)
+    assert os.path.exists(os.path.join(out, "_dsir.json"))
+
+    # resumed, no target: the frozen model stands in (no new commits,
+    # so a no-op window)
+    assert cli.main(argv) == 0
+    r2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert r2["applied"] is False

@@ -111,3 +111,42 @@ def test_plan_is_pure_jvm(spark):
 def test_bad_mode_rejected(spark):
     with pytest.raises(ValueError, match="psm"):
         fim_transform(_docs(spark), PRE, MID, SUF, mode="pms")
+
+
+def test_python_xxh64_matches_spark(spark):
+    """The pure-Python xxh64 (bucket pruning's foundation) is
+    bit-equal to Spark's xxhash64 for every key dtype the engine
+    buckets on — strings (incl. empty, unicode, >32-byte), longs
+    (incl. negative / extremes) and ints."""
+    from dexspark.xxh64 import bucket_of, xxhash64
+
+    strings = [
+        "", "a", "doc-1", "q#42", "x" * 7, "y" * 8, "z" * 31, "w" * 32,
+        "long-key-" + "0123456789" * 10, "ünïcødé-κλειδί-鍵",
+    ]
+    rows = spark.createDataFrame(
+        [(s,) for s in strings], "k string"
+    ).select("k", F.xxhash64("k").alias("h")).collect()
+    for r in rows:
+        assert xxhash64(r["k"], "string") == r["h"], r["k"]
+
+    longs = [0, 1, -1, 42, 2**31, -(2**31) - 1, 2**63 - 1, -(2**63)]
+    rows = spark.createDataFrame(
+        [(v,) for v in longs], "k long"
+    ).select("k", F.xxhash64("k").alias("h")).collect()
+    for r in rows:
+        assert xxhash64(r["k"], "long") == r["h"], r["k"]
+
+    ints = [0, 1, -1, 1234567, -(2**31), 2**31 - 1]
+    rows = spark.createDataFrame(
+        [(v,) for v in ints], "k int"
+    ).select("k", F.xxhash64("k").alias("h")).collect()
+    for r in rows:
+        assert xxhash64(r["k"], "int") == r["h"], r["k"]
+
+    # bucket_of == pmod(xxhash64, nb) — the engine's bucket expr
+    got = spark.createDataFrame([(s,) for s in strings], "k string").select(
+        "k", F.pmod(F.xxhash64("k"), F.lit(16)).cast("int").alias("b")
+    ).collect()
+    for r in got:
+        assert bucket_of(r["k"], 16, "string") == r["b"]
