@@ -522,9 +522,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--dsir-target",
         help="parquet path of the DSIR target corpus (required with "
-        "--dsir-frac in --prepare-corpus, and in --sync-corpus until "
-        "_dsir.json is frozen; the incremental modes read it only "
-        "until then)",
+        "--dsir-frac in --prepare-corpus, and in --sync-corpus and "
+        "--corpus-out until _dsir.json is frozen; the incremental "
+        "modes read it only until then)",
     )
     ap.add_argument(
         "--dsir-buckets",
@@ -1102,6 +1102,32 @@ def main(argv: list[str] | None = None) -> int:
         )
         print(json.dumps({"through_epoch": args.compact_sketches, **info}))
         return 0
+
+    if args.corpus_out is not None and args.dsir_frac is not None and not args.dsir_target:
+        # the engine's pipeline keeps its state on its source table's
+        # FileIO, one state dir per route; a resumed pipeline gates
+        # under its frozen model, target or not
+        from .operators.corpus_sync import read_frozen_dsir
+
+        if args.route:
+            sources = [
+                (path, os.path.join(args.corpus_out, name))
+                for name, _, path in (spec.partition("=") for spec in args.route)
+            ]
+        else:
+            sources = [(args.table, args.corpus_out)] if args.table else []
+        if any(read_frozen_dsir(LakeTable(spark, t).io, d) is None for t, d in sources):
+            print(
+                json.dumps(
+                    {
+                        "error": "--dsir-frac needs --dsir-target until "
+                        "a window has frozen the DSIR model (no "
+                        "_dsir.json under --corpus-out); without one "
+                        "every window would pass ungated"
+                    }
+                )
+            )
+            return 2
 
     if args.create and args.branch is None and args.table:
         t0 = LakeTable(spark, args.table)

@@ -84,6 +84,23 @@ def _footer_schema(path: str) -> T.StructType:
     return _all_nullable(T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY])))
 
 
+def _q(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(dt: T.DataType) -> str:
+    """``dt`` in SQL type syntax, with struct field names quoted."""
+    if isinstance(dt, T.StructType):
+        fields = ", ".join(f"{_q(f.name)}: {_sql_type(f.dataType)}" for f in dt.fields)
+        return f"STRUCT<{fields}>"
+    if isinstance(dt, T.ArrayType):
+        return f"ARRAY<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{_sql_type(dt.keyType)}, {_sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
 def _json_scalar(v) -> bool:
     """True iff ``v`` round-trips through the JSON manifest with its
     ordering intact (zone-map bounds must survive serialization)."""
@@ -610,11 +627,72 @@ class LakeTable:
         worker."""
         return self.spark.createDataFrame([], schema).limit(0)
 
-    def _scan_commit(self, files: list[str]) -> DataFrame:
-        """Scan one commit's data files. A commit's files come from one
-        Spark write and share its schema, so one footer supplies the
-        read schema and Spark runs no schema-inference job."""
-        return self.spark.read.schema(_footer_schema(files[0])).parquet(*files)
+    def _scan_groups(
+        self,
+        m: dict,
+        schema: T.StructType,
+        dirs: dict[str, list[str]],
+        versions: dict[str, int],
+        mor: bool = False,
+        cond=None,
+    ) -> DataFrame:
+        """Union of ``dirs``' files (commit dir -> absolute paths),
+        aligned to ``schema`` under ``m``'s aliases and column
+        identities, with ONE parquet scan per alignment group.
+
+        A commit's files come from one Spark write, so one footer per
+        commit supplies its schema and Spark runs no schema-inference
+        job. Commits whose footers (``_tombstone`` aside: a missing
+        column null-fills) and projections onto ``schema`` agree share
+        a scan; the projection is one ``selectExpr``, so planning costs
+        a handful of JVM calls per group, not per column and commit.
+        ``versions`` maps each commit dir to its logical version, which
+        decides ``added_at`` suppression (see :meth:`_align`).
+
+        ``mor`` adds ``_tombstone`` (false when absent) and ``_commit``,
+        the logical version of each row's commit dir, read from the
+        row's file path. ``cond`` filters every scan."""
+        al, cm = self._aliases_of(m), m.get("columns_meta") or {}
+        groups: dict[tuple, tuple[T.StructType, dict[str, int], list[str]]] = {}
+        for d, files in dirs.items():
+            v = versions[d]
+            footer = _footer_schema(files[0])
+            data = T.StructType([f for f in footer.fields if f.name != _TOMBSTONE])
+            proj = self._align_sql(data, schema, al, cm, v)
+            g = groups.setdefault((data.json(), proj), (data, {}, []))
+            g[1][d] = v
+            g[2].extend(files)
+        out = None
+        for (_, proj), (data, group_versions, files) in groups.items():
+            exprs = list(proj)
+            if mor:
+                data = T.StructType(
+                    data.fields + [T.StructField(_TOMBSTONE, T.BooleanType(), True)]
+                )
+                exprs += [
+                    f"coalesce({_TOMBSTONE}, false) AS {_TOMBSTONE}",
+                    self._commit_sql(group_versions),
+                ]
+            df = self.spark.read.schema(data).parquet(*files).selectExpr(*exprs)
+            if cond is not None:
+                df = df.filter(cond)
+            out = df if out is None else out.union(df)
+        return out
+
+    @staticmethod
+    def _commit_sql(versions: dict[str, int]) -> str:
+        """``_commit`` of a scan over the files of ``versions``' commit
+        dirs: each row's dir, taken from its file path, mapped to the
+        dir's logical version. A rebased commit's dir NAME carries the
+        version it lost the optimistic race at; ``versions`` holds its
+        true (logical) commit order (see :meth:`_dir_version`)."""
+        if len(set(versions.values())) == 1:
+            return f"{next(iter(versions.values()))} AS _commit"
+        pairs = ", ".join(f"'{d}', {v}" for d, v in sorted(versions.items()))
+        return (
+            f"element_at(map({pairs}), "
+            "regexp_extract(_metadata.file_path, '.*/(commit-[^/]*)/', 1)) AS _commit"
+        )
 
     # ------------------------------------------- column identity (renames)
     # Iceberg tracks columns by FIELD ID so renames are metadata-only
@@ -678,16 +756,16 @@ class LakeTable:
         )
 
     @staticmethod
-    def _align_cols(
+    def _align_sources(
         names: list[str],
         schema: T.StructType,
         aliases: dict[str, str] | None = None,
         cmeta: dict | None = None,
         file_version: int | None = None,
-    ) -> list:
-        """:meth:`_align`'s projection of a frame with columns
-        ``names``."""
-        cols = []
+    ) -> list[str | None]:
+        """Per field of ``schema``, the column of ``names`` that feeds
+        it in :meth:`_align`'s projection, or None where it null-fills."""
+        out: list[str | None] = []
         have = {n.lower(): n for n in names}
         for f in schema.fields:
             src = have.get(f.name.lower())
@@ -697,15 +775,56 @@ class LakeTable:
                         src = have[a_l]
                         break
             added = ((cmeta or {}).get(f.name) or {}).get("added_at", 0)
-            if src is not None and not (
-                file_version is not None and added > file_version
-            ):
-                # F.col resolves case-insensitively under the default
-                # spark.sql.caseSensitive=false
-                cols.append(F.col(src).cast(f.dataType).alias(f.name))
+            if file_version is not None and added > file_version:
+                src = None
+            out.append(src)
+        return out
+
+    @classmethod
+    def _align_cols(
+        cls,
+        names: list[str],
+        schema: T.StructType,
+        aliases: dict[str, str] | None = None,
+        cmeta: dict | None = None,
+        file_version: int | None = None,
+    ) -> list:
+        """:meth:`_align`'s projection of a frame with columns
+        ``names``."""
+        # F.col resolves case-insensitively under the default
+        # spark.sql.caseSensitive=false
+        return [
+            (F.lit(None) if src is None else F.col(src)).cast(f.dataType).alias(f.name)
+            for f, src in zip(
+                schema.fields,
+                cls._align_sources(names, schema, aliases, cmeta, file_version),
+            )
+        ]
+
+    @classmethod
+    def _align_sql(
+        cls,
+        have: T.StructType,
+        schema: T.StructType,
+        aliases: dict[str, str],
+        cmeta: dict,
+        file_version: int,
+    ) -> tuple[str, ...]:
+        """:meth:`_align`'s projection of a frame of schema ``have``,
+        as SQL expressions for one ``selectExpr``. Columns whose type
+        already matches are passed through uncast."""
+        out = []
+        for f, src in zip(
+            schema.fields,
+            cls._align_sources(have.names, schema, aliases, cmeta, file_version),
+        ):
+            if src is None:
+                out.append(f"CAST(NULL AS {_sql_type(f.dataType)}) AS {_q(f.name)}")
+            elif have[src].dataType == f.dataType:
+                out.append(f"{_q(src)} AS {_q(f.name)}")
             else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return cols
+                out.append(f"CAST({_q(src)} AS {_sql_type(f.dataType)}) AS {_q(f.name)}")
+        return tuple(out)
 
     @staticmethod
     def _may_contain(bounds, lo, hi) -> bool:
@@ -734,24 +853,28 @@ class LakeTable:
         (:meth:`tag` — the pinned-dataset provenance read). Default:
         current.
 
-        Files are grouped by commit (a commit's files share one schema)
-        and each group is aligned to the table schema — this is how old
-        int32 files coexist with a widened int64 column. Each group's
-        read schema comes from one file's parquet footer, so building
-        the DataFrame launches no Spark job.
+        Files are grouped by alignment, not by commit: commits whose
+        parquet footers and projections onto the table schema agree
+        share one scan (:meth:`_scan_groups`), and each group is
+        aligned to the table schema with one ``selectExpr`` — this is
+        how old int32 files coexist with a widened int64 column. A
+        commit's read schema comes from one of its files' parquet
+        footer, so building the DataFrame launches no Spark job.
 
         Copy-on-write snapshots read shuffle-free (pure union of
         aligned scans). Buckets carrying merge-on-read deltas
         (``mor_buckets`` in the manifest, tracked PER BUCKET) are
         reconstructed: per key, the row from the LATEST commit wins,
         and tombstone rows (MOR deletes) drop the key — one keyed
-        aggregate over ONLY those buckets' files. Clean buckets join
-        the result through the shuffle-free union path, so at 10^10
-        rows a day of MOR merges touching 1% of buckets costs a
+        aggregate over ONLY those buckets' files, whose ``_commit``
+        order comes from each row's file path mapped through the
+        manifest's logical commit versions. Clean buckets join the
+        result through the shuffle-free union path, so at 10^10 rows a
+        day of MOR merges touching 1% of buckets costs a
         reconstruction shuffle of 1% of the table, not all of it.
         ``compact()`` folds MOR history back into plain files. The
         reconstruction passes the grouping key through as is, so a
-        filter on the key reaches every commit's parquet scan.
+        filter on the key reaches every parquet scan.
 
         ``key_range=(lo, hi)`` additionally drops files whose manifest
         zone map (``file_bounds``, see :meth:`_file_bounds_of`)
@@ -763,18 +886,29 @@ class LakeTable:
         in-range keys. Callers still row-filter (pruning is per-file);
         out-of-range keys may surface with stale winners and MUST be
         filtered, as :meth:`lookup` / :meth:`scan_range` do."""
-        m = self.manifest(version)
+        return self._snapshot(self.manifest(version), buckets, key_range)
+
+    def _snapshot(
+        self,
+        m: dict,
+        buckets: list[int] | None = None,
+        key_range: tuple | None = None,
+        keys: list | None = None,
+    ) -> DataFrame:
+        """:meth:`read` of manifest ``m``. ``keys`` (a point lookup's
+        key values) filters every scan and reconstructs in ONE
+        partition: the rows are bounded by keys x MOR depth, so the
+        lookup runs as one job with no exchange."""
         schema = T.StructType.fromJson(m["schema"])
-        file_lists = m["buckets"]
         wanted = {str(b) for b in buckets} if buckets is not None else None
         fb = m.get("file_bounds", {}) if key_range is not None else {}
         mor_b = self._mor_buckets_of(m)
-        by_commit: dict[str, list[str]] = {}  # MOR buckets' files
-        clean_by_commit: dict[str, list[str]] = {}  # clean buckets' files
-        for b, files in file_lists.items():
+        mor_dirs: dict[str, list[str]] = {}  # MOR buckets' files by commit dir
+        clean_dirs: dict[str, list[str]] = {}  # clean buckets' files
+        for b, files in m["buckets"].items():
             if wanted is not None and b not in wanted:
                 continue
-            target = by_commit if b in mor_b else clean_by_commit
+            target = mor_dirs if b in mor_b else clean_dirs
             for rel in files:
                 if key_range is not None and not self._may_contain(
                     fb.get(rel), *key_range
@@ -782,81 +916,41 @@ class LakeTable:
                     continue
                 commit = rel.split("/")[1]  # data/commit-XXXX/...
                 target.setdefault(commit, []).append(os.path.join(self.root, rel))
-        if not by_commit and not clean_by_commit:
+        if not mor_dirs and not clean_dirs:
             return self._empty(schema)
-        al, cm = self._aliases_of(m), m.get("columns_meta") or {}
+        key = m["key"]
+        cond = None if keys is None else F.col(key).isin(keys)
+        versions = {d: self._dir_version(m, d) for d in (*mor_dirs, *clean_dirs)}
         clean = None
-        if clean_by_commit:
-            parts = [
-                self._align(
-                    self._scan_commit(files),
-                    schema,
-                    aliases=al,
-                    cmeta=cm,
-                    file_version=self._dir_version(m, commit),
-                )
-                for commit, files in clean_by_commit.items()
-            ]
-            clean = parts[0]
-            for p in parts[1:]:
-                clean = clean.unionByName(p)
-        if not by_commit:
+        if clean_dirs:
+            clean = self._scan_groups(m, schema, clean_dirs, versions, cond=cond)
+        if not mor_dirs:
             return clean
         # merge-on-read reconstruction, over ONLY the MOR buckets
-        key = m["key"]
-        schema_t = T.StructType(
-            list(schema.fields) + [T.StructField(_TOMBSTONE, T.BooleanType(), True)]
-        )
-        parts = []
-        # A rebased commit's dir NAME carries the version it lost the
-        # optimistic race at; the manifest's commit_versions map holds
-        # its true (logical) commit order.
-        for commit, files in by_commit.items():
-            df = self._scan_commit(files)
-            tomb = (
-                F.coalesce(F.col(_TOMBSTONE), F.lit(False))
-                if _TOMBSTONE in df.columns
-                else F.lit(False)
-            )
-            version = self._dir_version(m, commit)
-            parts.append(
-                self._align(
-                    df.withColumn(_TOMBSTONE, tomb),
-                    schema_t,
-                    aliases=al,
-                    cmeta=cm,
-                    file_version=version,
-                )
-                .withColumn("_commit", F.lit(version))
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        data_cols = [f.name for f in schema.fields]
+        rows = self._scan_groups(m, schema, mor_dirs, versions, mor=True, cond=cond)
+        if keys is not None:
+            rows = rows.coalesce(1)
+        data = [_q(f.name) for f in schema.fields]
         # Tie-break within one commit: a key appearing in BOTH upserts
         # and delete_keys of the same _merge_mor batch yields an upsert
         # row and a tombstone with the same _commit. Order by
         # (commit, NOT tombstone) so the upsert deterministically wins
         # — matching the COW merge, where the upsert survives because
         # deletes only drop rows absent from the upsert set.
-        winner = F.max_by(
-            F.struct(*data_cols, _TOMBSTONE),
-            F.struct(F.col("_commit"), ~F.col(_TOMBSTONE)),
-        ).alias("_w")
         # The key comes from the grouping column, not from ``_w``: a
         # filter on a grouping column passes through the aggregate and
-        # the union into every commit's parquet scan. That is exact,
-        # because all rows of one key fall into one group.
+        # the union into every parquet scan. That is exact, because all
+        # rows of one key fall into one group.
         recon = (
-            out.groupBy(key)
-            .agg(winner)
-            .filter(~F.col(f"_w.{_TOMBSTONE}"))
-            .select(
-                *[
-                    F.col(key).alias(c) if c == key else F.col(f"_w.{c}").alias(c)
-                    for c in data_cols
-                ]
+            rows.groupBy(key)
+            .agg(
+                F.expr(
+                    f"max_by(struct({', '.join(data)}, {_TOMBSTONE}), "
+                    f"struct(_commit, NOT {_TOMBSTONE})) AS _w"
+                )
             )
+            .filter(f"NOT _w.{_TOMBSTONE}")
+            .selectExpr(*[c if c == _q(key) else f"_w.{c} AS {c}" for c in data])
         )
         # keys are bucket-disjoint (bucket = hash(key) mod n), so the
         # clean-bucket union and the MOR reconstruction never overlap
@@ -869,14 +963,15 @@ class LakeTable:
         writer uses, evaluated on the driver over a local relation (no
         Spark job, and never a reimplementation of xxhash64 in Python,
         which could silently diverge). The snapshot is pruned to that
-        bucket and to the files whose zone map can hold the key, then
-        filtered. The equality passes through the MOR reconstruction
-        aggregate (it filters the grouping key) and the union into
-        every parquet scan's pushed filters, where row-group stats —
-        and the key bloom filter, when the table carries the
-        ``bloom_filter_key`` property — skip row groups that cannot
-        contain it. Building the DataFrame launches no Spark job;
-        collecting it runs only the scan and reconstruction jobs.
+        bucket and to the files whose zone map can hold the key, and
+        the key equality filters each alignment group's parquet scan
+        (see :meth:`read`), where row-group stats — and the key bloom
+        filter, when the table carries the ``bloom_filter_key``
+        property — skip row groups that cannot contain it. The
+        merge-on-read reconstruction then runs in one partition over
+        the key's rows, a few per commit at most. Building the
+        DataFrame launches no Spark job; collecting it runs one job
+        with no exchange.
         """
         return self.lookup_many([value])
 
@@ -885,9 +980,9 @@ class LakeTable:
 
         The probe primitive for batch-vs-index workloads (a
         micro-batch checking itself against a persisted dedup/ANN
-        index). The probe keys go to the JVM as an Arrow-backed local
-        relation, and the writer's own bucket expression is evaluated
-        over it on the driver, with no Spark job. The snapshot is
+        index). The probe keys go to the JVM as a local relation, and
+        the writer's own bucket expression is evaluated over it on the
+        driver, with no Spark job. The snapshot is
         pruned to exactly those buckets plus the probe set's
         [min, max] zone-map window, and the row filter keeps only the
         probed keys. Cost scales with |values| x (table fraction per
@@ -895,43 +990,53 @@ class LakeTable:
         per batch.
 
         ``values`` must be driver-sized (a batch's key set, not a
-        table). Small sets filter via ``isin``, which reaches every
-        parquet scan's pushed filters (row-group stats, plus the key
-        bloom filter when the table carries ``bloom_filter_key``);
-        large sets switch to a broadcast semi-join to keep the filter
-        expression tree bounded.
+        table). Sets of up to 256 keys filter every alignment group's
+        scan via ``isin``, which reaches the parquet scan's pushed
+        filters (row-group stats, plus the key bloom filter when the
+        table carries ``bloom_filter_key``); the surviving rows —
+        bounded by keys x MOR depth — reconstruct in one partition, so
+        the read is one job with no exchange. Larger sets read the
+        pruned snapshot with its parallel reconstruction and filter it
+        with a broadcast semi-join, keeping the filter expression tree
+        bounded.
         """
-        key = self.key
+        m = self.manifest()
+        key = m["key"]
         vals = list(dict.fromkeys(values))  # dedupe, keep determinism
         if not vals:
-            return self.read(buckets=[])
-        key_type = next(f.dataType for f in self.schema.fields if f.name == key)
-        # A pandas frame goes to the JVM through Arrow as a local
-        # relation: the bucket projection below is evaluated on the
-        # driver by the writer's own JVM expression, with no Spark job.
-        import pandas as pd
-
-        probe = self.spark.createDataFrame(
-            pd.DataFrame({key: vals}), T.StructType([T.StructField(key, key_type, True)])
-        )
-        nb = self.num_buckets
-        buckets = sorted(
-            {
-                r[0]
-                for r in probe.select(
-                    F.pmod(F.xxhash64(F.col(key)), F.lit(nb)).cast("int")
-                ).collect()
-            }
-        )
+            return self._snapshot(m, buckets=[])
+        key_type = T.StructType.fromJson(m["schema"])[key].dataType
+        nb = m["num_buckets"]
         rng = None
         if all(_json_scalar(v) and v is not None for v in vals):
             try:
                 rng = (min(vals), max(vals))
             except TypeError:  # mixed types — skip zone-map pruning
                 rng = None
-        snap = self.read(buckets=buckets, key_range=rng)
+        # The probe keys reach the JVM as a local relation — an inline
+        # table of bound literals for a lookup, an Arrow-backed pandas
+        # frame for a large set — so the writer's own bucket expression
+        # is evaluated on the driver, with no Spark job.
         if len(vals) <= 256:
-            return snap.filter(F.col(key).isin(vals))
+            probe = self.spark.sql(
+                f"SELECT CAST(k AS {_sql_type(key_type)}) AS {_q(key)} FROM VALUES "
+                + ", ".join(f"(:k{i})" for i in range(len(vals)))
+                + " AS t(k)",
+                args={f"k{i}": v for i, v in enumerate(vals)},
+            )
+        else:
+            import pandas as pd
+
+            probe = self.spark.createDataFrame(
+                pd.DataFrame({key: vals}),
+                T.StructType([T.StructField(key, key_type, True)]),
+            )
+        buckets = sorted(
+            {r[0] for r in self._bucket_col(probe, key, nb).select("_bucket").collect()}
+        )
+        if len(vals) <= 256:
+            return self._snapshot(m, buckets, rng, keys=vals)
+        snap = self._snapshot(m, buckets, rng)
         return snap.join(F.broadcast(probe), key, "left_semi")
 
     def probe(self, keys: DataFrame) -> DataFrame:
@@ -1304,8 +1409,9 @@ class LakeTable:
     ) -> dict:
         """MERGE: last-writer-wins upsert + key deletes.
 
-        ``upserts`` must contain at most one row per key (run
-        dedup.latest_per_key first) and be alignable to the table schema
+        ``upserts`` must contain at most one row per key (resolve
+        last-writer-wins first, as ``CdcEngine``'s resolver does with
+        one ``max_by`` aggregate) and be alignable to the table schema
         (run schema reconcile first — this method evolves the manifest
         schema additively). ``delete_keys`` is a 1-column (key) frame.
         ``affected_buckets`` is an optional pre-computed bucket hint;
@@ -2609,14 +2715,16 @@ class LakeTable:
             "exact": exact,
         }
 
-    def _commit_files(self, m: dict, version: int) -> list[str]:
+    def _commit_dirs(self, m: dict, version: int) -> dict[str, list[str]]:
         """Absolute paths of the data files ADDED by ``version``'s
-        commit (see :meth:`_added_version`)."""
-        out = []
+        commit (see :meth:`_added_version`), by commit dir."""
+        out: dict[str, list[str]] = {}
         for files in m["buckets"].values():
             for rel in files:
                 if self._added_version(m, rel) == version:
-                    out.append(os.path.join(self.root, rel))
+                    out.setdefault(rel.split("/")[1], []).append(
+                        os.path.join(self.root, rel)
+                    )
         return out
 
     def changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
@@ -2635,7 +2743,11 @@ class LakeTable:
         * ``merge-mor`` — the appended files ARE the change batch;
           read exactly those files, O(change). Tombstones become
           ``delete`` rows (key-only pre-image, like Iceberg equality
-          deletes); everything else is an ``upsert``.
+          deletes); everything else is an ``upsert``. The window's
+          merge-on-read commits are read together: one parquet scan
+          per alignment group (see :meth:`read`), each row's
+          ``_commit_version`` taken from its file path, and one
+          aggregate keyed by (key, ``_commit_version``).
         * ``merge-cow`` / ``overwrite`` — diff parent vs child
           restricted to the buckets whose file lists differ: one
           full-outer join per commit over only the touched buckets
@@ -2658,7 +2770,6 @@ class LakeTable:
         to_v = self.current_version() if to_version is None else to_version
         if from_version > to_v:
             raise ValueError(f"from_version {from_version} > to_version {to_v}")
-        key = self.key
         # Walk PARENT pointers, not a dense range: version numbers are
         # unique but not contiguous (a branch publish skips past the
         # branch-local version space), and the parent chain is the
@@ -2678,12 +2789,22 @@ class LakeTable:
                 f"from_version {from_version} is not an ancestor of {to_v} "
                 f"(the chain passes from v{chain[-1]['version']} to v{v})"
             )
+        fm = self.manifest(to_v)
+        key = fm["key"]
+        fschema = T.StructType.fromJson(fm["schema"])
+        final_schema = T.StructType(
+            list(fschema.fields)
+            + [
+                T.StructField("_change_type", T.StringType(), False),
+                T.StructField("_commit_version", T.IntegerType(), False),
+            ]
+        )
         parts: list[DataFrame] = []
+        mor_dirs: dict[str, list[str]] = {}  # merge-on-read files by commit dir
+        mor_versions: dict[str, int] = {}
         for m in reversed(chain):
             v = m["version"]
             op = m.get("operation", "diff")
-            schema = T.StructType.fromJson(m["schema"])
-            data_cols = [f.name for f in schema.fields]
             if op in ("compact", "rebucket", "merge-noop", "create",
                       "alter-properties", "rename-column", "drop-column"):
                 # physical- or metadata-only: no logical row change.
@@ -2691,93 +2812,81 @@ class LakeTable:
                 # the final schema from the alignment below.)
                 continue
             if op == "merge-mor":
-                files = self._commit_files(m, v)
-                if not files:
-                    continue
-                df = self._scan_commit(files)
-                tomb = (
-                    F.coalesce(F.col(_TOMBSTONE), F.lit(False))
-                    if _TOMBSTONE in df.columns
-                    else F.lit(False)
-                )
-                df = self._align(df.withColumn("_t", tomb), T.StructType(
-                    list(schema.fields) + [T.StructField("_t", T.BooleanType(), True)]
-                ))
-                # Same-commit tie-break, matching read(): a key present
-                # as both upsert and tombstone in ONE merge-mor batch
-                # resolves to the upsert. Emitting both rows would let
-                # a changelog consumer delete a key the snapshot keeps.
-                # One keyed aggregate over O(change) rows.
-                df = (
-                    df.groupBy(key)
-                    .agg(
-                        F.max_by(
-                            F.struct(*[c for c in data_cols if c != key], "_t"),
-                            ~F.col("_t"),
-                        ).alias("_r")
-                    )
-                    .select(key, F.col("_r.*"))
-                )
-                part = df.select(
-                    *data_cols,
-                    F.when(F.col("_t"), F.lit("delete"))
+                for d, files in self._commit_dirs(m, v).items():
+                    mor_dirs[d] = files
+                    mor_versions[d] = v
+                continue
+            # generic parent-vs-child diff over the touched buckets
+            schema = T.StructType.fromJson(m["schema"])
+            data_cols = [f.name for f in schema.fields]
+            pm = self.manifest(int(m.get("parent", v - 1)))
+            touched = sorted(
+                int(b)
+                for b in set(m["buckets"]) | set(pm["buckets"])
+                if m["buckets"].get(b) != pm["buckets"].get(b)
+            )
+            if not touched:
+                continue
+            # rebucket/compact upstream of the parent cannot occur
+            # between a commit and its parent, so bucket numbering
+            # is shared across the diff
+            old = self._align(
+                self.read(buckets=touched, version=pm["version"]), schema
+            )
+            new = self._align(self.read(buckets=touched, version=v), schema)
+            o = old.select(F.struct(*data_cols).alias("_o"), F.col(m["key"]).alias("_k"))
+            n = new.select(F.struct(*data_cols).alias("_n"), F.col(m["key"]).alias("_k"))
+            j = o.join(n, "_k", "full_outer")
+            row = F.coalesce(F.col("_n"), F.col("_o"))
+            part = (
+                j.filter(~F.col("_o").eqNullSafe(F.col("_n")))
+                .select(
+                    *[row.getField(c).alias(c) for c in data_cols],
+                    F.when(F.col("_n").isNull(), F.lit("delete"))
                     .otherwise(F.lit("upsert"))
                     .alias("_change_type"),
                     F.lit(v).alias("_commit_version"),
                 )
-            else:
-                # generic parent-vs-child diff over the touched buckets
-                pm = self.manifest(int(m.get("parent", v - 1)))
-                touched = sorted(
-                    int(b)
-                    for b in set(m["buckets"]) | set(pm["buckets"])
-                    if m["buckets"].get(b) != pm["buckets"].get(b)
+            )
+            # commits before a schema evolution lack the new columns,
+            # and commits before a rename carry the OLD name: align
+            # each part (alias-aware) before the union, or a renamed
+            # column would survive as two half-null columns
+            parts.append(
+                self._align(
+                    part, final_schema, aliases=self._aliases_of(fm),
+                    cmeta=fm.get("columns_meta") or {}, file_version=v,
                 )
-                if not touched:
-                    continue
-                # rebucket/compact upstream of the parent cannot occur
-                # between a commit and its parent, so bucket numbering
-                # is shared across the diff
-                old = self._align(
-                    self.read(buckets=touched, version=pm["version"]), schema
-                )
-                new = self._align(self.read(buckets=touched, version=v), schema)
-                o = old.select(F.struct(*data_cols).alias("_o"), F.col(key).alias("_k"))
-                n = new.select(F.struct(*data_cols).alias("_n"), F.col(key).alias("_k"))
-                j = o.join(n, "_k", "full_outer")
-                row = F.coalesce(F.col("_n"), F.col("_o"))
-                part = (
-                    j.filter(~F.col("_o").eqNullSafe(F.col("_n")))
-                    .select(
-                        *[row.getField(c).alias(c) for c in data_cols],
-                        F.when(F.col("_n").isNull(), F.lit("delete"))
-                        .otherwise(F.lit("upsert"))
-                        .alias("_change_type"),
-                        F.lit(v).alias("_commit_version"),
+            )
+        if mor_dirs:
+            # Files align straight to the final schema (file_version is
+            # the commit's, as for the diffs above). Same-commit
+            # tie-break, matching read(): a key present as both upsert
+            # and tombstone in ONE merge-mor batch resolves to the
+            # upsert. Emitting both rows would let a changelog consumer
+            # delete a key the snapshot keeps.
+            rows = self._scan_groups(fm, fschema, mor_dirs, mor_versions, mor=True)
+            rest = [_q(f.name) for f in fschema.fields if f.name != key]
+            parts.append(
+                rows.groupBy(key, "_commit")
+                .agg(
+                    F.expr(
+                        f"max_by(struct({', '.join(rest + [_TOMBSTONE])}), "
+                        f"NOT {_TOMBSTONE}) AS _r"
                     )
                 )
-            parts.append((v, part))
-        final_schema = T.StructType(
-            list(T.StructType.fromJson(self.manifest(to_v)["schema"]).fields)
-            + [
-                T.StructField("_change_type", T.StringType(), False),
-                T.StructField("_commit_version", T.IntegerType(), False),
-            ]
-        )
+                .selectExpr(
+                    *[
+                        _q(f.name) if f.name == key else f"_r.{_q(f.name)}"
+                        for f in fschema.fields
+                    ],
+                    f"CASE WHEN _r.{_TOMBSTONE} THEN 'delete' ELSE 'upsert' END"
+                    " AS _change_type",
+                    "_commit AS _commit_version",
+                )
+            )
         if not parts:
             return self._empty(final_schema)
-        # commits before a schema evolution lack the new columns, and
-        # commits before a rename carry the OLD name: align each part
-        # (alias-aware) before the union, or a renamed column would
-        # survive as two half-null columns
-        fm = self.manifest(to_v)
-        fal, fcm = self._aliases_of(fm), fm.get("columns_meta") or {}
-        parts = [
-            self._align(
-                p, final_schema, aliases=fal, cmeta=fcm, file_version=pv
-            )
-            for pv, p in parts
-        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

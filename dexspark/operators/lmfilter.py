@@ -182,14 +182,18 @@ def lm_to_dict(lm: BigramLM, max_bigrams: int = 250_000) -> dict:
     additive floor — the same semantics as ``min_count`` pruning. The
     bounded form is what a pipeline freezes at window 1
     (``_lm.json``); an LM too big for the bound should stay a table
-    and be joined, not frozen.
+    and be joined, not frozen. Contexts cannot be cut without changing
+    scores, so an LM with more than ``max_bigrams`` of them raises
+    ``ValueError`` instead of reaching the driver whole.
     """
-    top = (
-        lm.bigram.orderBy(F.col("c2").desc(), "v", "w")
-        .limit(int(max_bigrams))
-        .collect()
-    )
-    ctx = lm.context.collect()
+    n = int(max_bigrams)
+    ctx = lm.context.limit(n + 1).collect()
+    if len(ctx) > n:
+        raise ValueError(
+            f"LM has more than max_bigrams={n} contexts; too big to "
+            "freeze — keep it a table and join it"
+        )
+    top = lm.bigram.orderBy(F.col("c2").desc(), "v", "w").limit(n).collect()
     return {
         "bigram": [[r["v"], r["w"], r["c2"]] for r in top],
         "context": [[r["v"], r["c1"]] for r in ctx],

@@ -1205,3 +1205,48 @@ def test_cli_sync_corpus_dsir_needs_target_until_frozen(
     assert cli.main(argv) == 0
     r2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert r2["applied"] is False
+
+
+def test_cli_corpus_out_dsir_needs_target_until_frozen(
+    spark, tmp_path, capsys
+):
+    """--corpus-out with --dsir-frac but neither --dsir-target nor a
+    frozen _dsir.json fails fast (exit 2, JSON error) before the tail
+    creates or applies anything, instead of packing every window
+    ungated — for one table and for every route's state dir."""
+    from dexspark import cli, gen
+
+    binlog = str(tmp_path / "binlog")
+    gen.write_binlog(
+        gen.change_events(
+            spark, n_events=100, n_docs=20, n_epochs=1, max_len=8,
+            anomaly_pct=0,
+        ),
+        binlog,
+    )
+    out = str(tmp_path / "corpus")
+    common = [
+        "--binlog", binlog,
+        "--checkpoint", str(tmp_path / "ck"),
+        "--warehouse", str(tmp_path / "wh"),
+        "--create", "--num-buckets", "4",
+        "--corpus-out", out,
+        "--corpus-splits", "train=1.0",
+        "--seq-len", "64", "--eos-id", "0",
+        "--dsir-frac", "0.5", "--dsir-buckets", "256",
+    ]
+    table = str(tmp_path / "table")
+    assert cli.main(["--table", table] + common) == 2
+    err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert "--dsir-target" in err["error"] and "--corpus-out" in err["error"]
+    assert not os.path.exists(table) and not os.path.exists(out)
+
+    routes = [
+        "--route", f"a={tmp_path / 'ra'}",
+        "--route", f"b={tmp_path / 'rb'}",
+        "--route-expr", "'a'",
+    ]
+    assert cli.main(routes + common) == 2
+    err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert "--dsir-target" in err["error"]
+    assert not os.path.exists(tmp_path / "ra") and not os.path.exists(out)

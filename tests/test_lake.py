@@ -554,7 +554,9 @@ def test_snapshot_reads_plan_without_jobs(spark, tmp_path):
     assert _jobs_run(spark, lambda: t.lookup_many(["doc-7", "doc-20"]).collect())[1] == total
     plan = t.lookup("doc-7")._jdf.queryExecution().executedPlan().toString()
     scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
-    assert len(scans) == 5  # the overwrite and the four merge-on-read commits
+    # one alignment group: the overwrite and the four merge-on-read
+    # commits share a footer schema (the tombstone column aside)
+    assert len(scans) == 1
     for ln in scans:
         pushed = re.search(r"PushedFilters: \[([^\]]*)\]", ln).group(1)
         assert "EqualTo(doc_id,doc-7)" in pushed, ln
@@ -563,6 +565,49 @@ def test_snapshot_reads_plan_without_jobs(spark, tmp_path):
     # RDD, so running it starts no Python worker
     plan = t.changes(v0 - 1)._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan
+
+
+def test_mor_lookup_scans_once_per_alignment_group(spark, tmp_path):
+    """At merge-on-read depth 4, a lookup plans one parquet scan per
+    alignment group, not per commit. Here there are two groups: the
+    overwrite and two merges that write an int32 ``n_tok``, then two
+    merges after ``n_tok`` widened to int64. The key equality reaches
+    every scan, and the reconstruction runs in one partition, so
+    collecting the lookup is one job with no exchange."""
+    import re
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), sequences_schema(), num_buckets=4)
+    t.overwrite(
+        spark.range(200).select(
+            F.concat(F.lit("doc-"), F.col("id")).alias("doc_id"),
+            F.array(F.col("id").cast("int")).alias("tokens"),
+            F.lit(1).alias("n_tok"),
+            F.lit("s").alias("source"),
+        )
+    )
+    for i in range(4):
+        n_tok = "int" if i < 2 else "bigint"
+        t.merge(
+            spark.createDataFrame(
+                [("doc-7", [i], i, f"m{i}")],
+                f"doc_id string, tokens array<int>, n_tok {n_tok}, source string",
+            ),
+            spark.createDataFrame([(f"doc-{i + 20}",)], "doc_id string"),
+            mode="mor",
+        )
+    assert max(t.mor_buckets().values()) == 4
+    df = t.lookup("doc-7")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 2
+    for ln in scans:
+        pushed = re.search(r"PushedFilters: \[([^\]]*)\]", ln).group(1)
+        assert "EqualTo(doc_id,doc-7)" in pushed, ln
+    assert "Exchange" not in plan
+    rows, jobs = _jobs_run(spark, df.collect)
+    assert [(r["source"], r["n_tok"]) for r in rows] == [("m3", 3)] and jobs == 1
+    rows, jobs = _jobs_run(spark, lambda: t.lookup_many(["doc-7", "doc-21", "doc-5"]).collect())
+    assert sorted(r["doc_id"] for r in rows) == ["doc-5", "doc-7"] and jobs == 1
 
 
 def test_bloom_filter_property_writes_blooms(spark, tmp_path):

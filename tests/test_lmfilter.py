@@ -212,18 +212,33 @@ def test_lm_dict_roundtrip_and_cap(spark):
 
     # capped: keeps exactly the top-k bigrams by (count desc, gram),
     # contexts stay exact, cut mass backs off — equal to a Python
-    # model holding the same surviving bigrams
-    doc = lmfilter.lm_to_dict(lm, max_bigrams=3)
-    assert len(doc["bigram"]) == 3
+    # model holding the same surviving bigrams (5 of 8: the cut falls
+    # among the count-1 ties; the cap may not go below the 5 contexts)
+    doc = lmfilter.lm_to_dict(lm, max_bigrams=5)
+    assert len(doc["bigram"]) == 5
     c2_full, c1, vv = _py_lm(train)
+    assert len(c2_full) == 8 and len(c1) == 5
     order = sorted(c2_full.items(), key=lambda kv: (-kv[1], kv[0]))
-    c2_cap = dict(order[:3])
+    c2_cap = dict(order[:5])
     assert {(v, w) for v, w, _ in doc["bigram"]} == set(c2_cap)
     lm3 = lmfilter.lm_from_dict(spark, doc)
     got = {r["doc_id"]: r["ppl"]
            for r in lmfilter.score_perplexity(_docs(spark, score), lm3).collect()}
     for i, t in enumerate(score):
         assert got[i] == pytest.approx(_py_ppl(t, c2_cap, c1, vv)[1], rel=1e-12)
+
+
+def test_lm_dict_refuses_more_contexts_than_the_cap(spark):
+    """Contexts are serialized whole (cutting one changes scores), so
+    lm_to_dict collects at most max_bigrams + 1 of them and raises
+    past the bound instead of pulling an unbounded table onto the
+    driver."""
+    lm = lmfilter.learn_bigram_lm(_docs(spark, ["a b a b a c", "c a b a d d"]))
+    assert len(lmfilter.lm_to_dict(lm, max_bigrams=5)["context"]) == 5
+    with pytest.raises(ValueError, match="contexts"):
+        lmfilter.lm_to_dict(lm, max_bigrams=4)
+    with pytest.raises(ValueError, match="contexts"):
+        lmfilter.lm_to_dict(lm, max_bigrams=1)
 
 
 def test_plans_python_free_and_split_staged_once(spark):

@@ -3,15 +3,13 @@
 - no row-at-a-time Python (BatchEvalPython) anywhere in the engine's
   plans; only Arrow-vectorized exchange (MapInPandas / ArrowEvalPython)
   — BASELINE.json input_hint "no per-row Python";
-- filter pushdown + column pruning reach the parquet scans;
-- the dedup aggregate keeps map-side partial aggregation.
+- filter pushdown + column pruning reach the parquet scans.
 """
 
 from pyspark.sql import functions as F, types as T
 
 from dexspark import gen
 from dexspark.config import sequences_ruleset
-from dexspark.dedup import latest_per_key
 from dexspark.validate import arrow_validate
 
 
@@ -41,16 +39,6 @@ def test_parquet_filter_pushdown_and_pruning(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(source), EqualTo(source,web)]" in plan
     # column pruning: only the 2 referenced columns in ReadSchema
     assert "ReadSchema: struct<doc_id:string,source:string>" in plan
-
-
-def test_dedup_partial_aggregation(spark):
-    df = spark.createDataFrame(
-        [("a", 1, 1, "x")], "doc_id string, commit_ts int, lsn long, v string"
-    )
-    plan = _plan(latest_per_key(df))
-    # partial aggregate (map-side combine) must sit below the exchange
-    assert "partial_max_by" in plan
-    assert plan.index("Exchange") < plan.index("partial_max_by")
 
 
 def test_parquet_binlog_scan_has_no_json_parse(spark, tmp_path):

@@ -1,14 +1,12 @@
 """Property-based invariants (hypothesis).
 
-Three load-bearing pieces of engine algebra get randomized checks on
-top of the example-based suite:
+Load-bearing pieces of engine algebra get randomized checks on top of
+the example-based suite:
 
 - epoch watermark compaction: (watermark, tail) must represent exactly
   the committed set, regardless of arrival order or batch splits;
 - the rule compiler: a row is clean iff it satisfies every rule — the
   Column-expression compiler agrees with a direct Python evaluation;
-- dedup: the skew-proof max_by aggregate and the two-phase salted
-  plan pick the same winners under arbitrary (commit_ts, lsn) ties.
 """
 
 import pytest
@@ -139,52 +137,9 @@ def test_rule_compiler_matches_python(spark, data):
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
-# ---------------------------------------------------------------- dedup
 # int_field rule note: Spark's try_cast("long") accepts forms Python's
 # int() rejects (e.g. "1.0"? no — but whitespace-padded ints yes), so
 # the alphabet above avoids '.', '+', '-' to keep semantics aligned.
-
-events = st.lists(
-    st.tuples(
-        st.integers(0, 3),      # key (few keys -> forced collisions)
-        st.integers(0, 2),      # commit_ts (coarse -> forced ties)
-        st.integers(0, 50),     # lsn
-        st.integers(0, 999),    # value payload
-    ),
-    min_size=1,
-    max_size=25,
-    unique_by=lambda t: (t[0], t[1], t[2]),  # (key, ts, lsn) unique
-)
-
-
-@pytest.mark.usefixtures("spark")
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(events)
-def test_dedup_plans_agree_and_match_python(spark, data):
-    from dexspark.dedup import latest_per_key, latest_per_key_salted
-
-    df = spark.createDataFrame(
-        data, "doc_id int, commit_ts int, lsn long, v int"
-    )
-    a = {
-        r["doc_id"]: (r["commit_ts"], r["lsn"], r["v"])
-        for r in latest_per_key(df, key="doc_id").collect()
-    }
-    b = {
-        r["doc_id"]: (r["commit_ts"], r["lsn"], r["v"])
-        for r in latest_per_key_salted(df, key="doc_id", salt_buckets=4).collect()
-    }
-    want = {}
-    for k, ts, lsn, v in data:
-        if k not in want or (ts, lsn) > want[k][:2]:
-            want[k] = (ts, lsn, v)
-    assert a == want
-    assert b == want
-
 
 # ------------------------------------------------- duplicate spans
 

@@ -33,11 +33,6 @@ UNREACHED = {
         "query), tested beside csv_ingest and waiting on the same CLI "
         "sub-command"
     ),
-    "dexspark.dedup": (
-        "three equal last-writer-wins forms (window, aggregate, salted); "
-        "the engine's resolver inlines the aggregate form in stream.py, "
-        "so this is a second copy, left for a fold-or-delete change"
-    ),
     "dexspark.xxh64": (
         "pure-Python mirror of Spark's xxhash64, the reference that "
         "tests/test_fim.py and tests/test_dsir.py compare the JVM against"
