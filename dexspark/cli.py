@@ -17,6 +17,12 @@ or locally::
     python -m dexspark.cli --table /tmp/seq --binlog /tmp/binlog \\
         --checkpoint /tmp/ckpt --warehouse /tmp/wh --create
 
+A run does one thing: with no mode flag it tails --binlog into
+--table (or over --route), else it runs the ``MODES`` row its flag
+picks. The row is checked before Spark starts: a missing flag or two
+modes at once exit 2. A mode that cannot run prints ``{"error": ...}``
+and exits 2 (1 for a missing near-dup index).
+
 No ``--master`` handling here: spark-submit/cluster manager owns that.
 The same code runs at N or 4N executors; partitioning is keyed, not
 topology-aware (BASELINE.json north_rule).
@@ -28,7 +34,9 @@ import argparse
 import json
 import os
 import sys
-
+from dataclasses import dataclass
+from functools import cached_property
+from typing import Callable
 
 
 def _corpus_cfg(args):
@@ -69,7 +77,7 @@ def _corpus_cfg(args):
     return CorpusConfig(**kw)
 
 
-def main(argv: list[str] | None = None) -> int:
+def _parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(prog="dexspark", description=__doc__)
     ap.add_argument(
         "--table",
@@ -729,931 +737,575 @@ def main(argv: list[str] | None = None) -> int:
         help="snapshot version (int) or tag name to export "
         "(default: current)",
     )
-    args = ap.parse_args(argv)
-    if args.fileio:
-        import os as _os_fio
-
-        _os_fio.environ["DEXSPARK_FILEIO"] = args.fileio
-    maintenance = (
-        args.compact
-        or args.vacuum
-        or args.rebucket is not None
-        or args.delete_where is not None
-        or args.remap_vocab is not None
-        or args.trim_dup_spans is not None
-        or args.set_property is not None
-        or args.rollback is not None
-        or args.rename_column is not None
-        or args.drop_column is not None
-        or args.create_view is not None
-        or args.refresh_view is not None
+    ap.add_argument(
+        "--validate-csv",
+        metavar="ROOT",
+        help="instead of tailing: classify every file under ROOT by "
+        "suffix (.csv passed / known non-CSV failed / other skipped) "
+        "and validate the passed CSV files under --rules (header and "
+        "row checks, one Spark job per distinct header); prints the "
+        "listing report, per-status file counts, row totals and up to "
+        "100 failing files as JSON. No table",
     )
-    # `is not None`, matching the dispatch below: an EMPTY-STRING
-    # operand (e.g. --lookup "" from an unquoted shell variable) is
-    # still a lookup request, not a fall-through into tailing mode
-    tailing = not (
-        args.history
-        or args.stats
-        or args.lookup is not None
-        or args.changes is not None
-        or args.drift is not None
-        or args.distinct_over is not None
-        or args.compact_sketches is not None
-        or args.quarantine_drift is not None
-        or args.health
-        or args.outbox is not None
-        or args.scan_range is not None
-        or args.compact_binlog is not None
-        or args.expire_binlog is not None
-        or args.reprocess_quarantine
-        or args.reprocess_unrouted
-        or args.routes_status
-        or args.dedup_index_stats
-        or args.rebuild_dedup_index
-        or args.bootstrap_dedup_index
-        or args.tag is not None
-        or args.drop_tag is not None
-        or args.tags
-        or args.create_branch is not None
-        or args.publish_branch is not None
-        or args.drop_branch is not None
-        or args.branches
-        or maintenance
-        or args.export_snapshot is not None
-        or args.pack_corpus is not None
-        or args.prepare_corpus is not None
-        or args.sync_corpus is not None
-        # a bare bootstrap exits after the load; with binlog/checkpoint
-        # /warehouse it continues into the tail, whose own args are
-        # checked at engine construction
-        or args.bootstrap_snapshot is not None
-    )
-    if tailing and not (args.binlog and args.checkpoint and args.warehouse):
-        ap.error("--binlog/--checkpoint/--warehouse are required when tailing")
-    if args.route:
-        if not args.route_expr:
-            ap.error("--route-expr is required with --route")
-        if not tailing and not (
-            args.reprocess_unrouted
-            or args.routes_status
-            or args.expire_binlog is not None
-        ):
-            ap.error("--route only composes with the tailing modes")
-        if (args.reprocess_unrouted or args.routes_status) and not args.warehouse:
-            ap.error(
-                "--warehouse is required with --reprocess-unrouted / "
-                "--routes-status"
-            )
-        if any("=" not in r for r in args.route):
-            ap.error("--route takes NAME=TABLE_PATH")
-    elif (
-        not args.table
-        and args.drift is None
-        and args.distinct_over is None
-        and args.compact_sketches is None
-        and args.quarantine_drift is None
-        # log compaction reads/writes only the binlog — no table
-        and args.compact_binlog is None
-        # corpus preparation reads --corpus-src parquet — no table
-        and args.prepare_corpus is None
-        and args.sync_corpus is None
-    ):
-        ap.error("--table is required (except in --route mode)")
-    if args.prepare_corpus is not None and not args.corpus_src:
-        ap.error("--corpus-src is required with --prepare-corpus")
-    if args.sync_corpus is not None and not args.corpus_src:
-        ap.error("--corpus-src is required with --sync-corpus")
-    if args.drift is not None and not args.warehouse:
-        ap.error("--warehouse is required with --drift")
-    if args.distinct_over is not None and not args.warehouse:
-        ap.error("--warehouse is required with --distinct-over")
-    if args.compact_sketches is not None and not args.warehouse:
-        ap.error("--warehouse is required with --compact-sketches")
-    if args.quarantine_drift is not None and not args.warehouse:
-        ap.error("--warehouse is required with --quarantine-drift")
-    if args.health and not (args.table and args.warehouse):
-        ap.error("--table and --warehouse are required with --health")
-    if (args.reprocess_unrouted or args.routes_status) and not args.route:
-        ap.error("--reprocess-unrouted / --routes-status need --route mode")
-    if args.bootstrap_snapshot is not None and args.snapshot_position is None:
-        # an --export-snapshot dump carries its position in a sidecar
-        import os as _os
+    return ap
 
-        if not _os.path.isfile(
-            _os.path.join(args.bootstrap_snapshot, "_position.json")
-        ):
-            ap.error(
-                "--snapshot-position is required with --bootstrap-snapshot "
-                "(no _position.json sidecar found in the dump)"
-            )
-    if args.compact_binlog and not args.binlog:
-        ap.error("--binlog is required with --compact-binlog")
-    if args.expire_binlog is not None and not (
-        args.binlog and (args.table or args.route)
-    ):
-        ap.error(
-            "--binlog plus --table (or --route mode, which uses the "
-            "MIN route watermark) are required with --expire-binlog"
-        )
-    if args.reprocess_quarantine and not args.warehouse:
-        ap.error("--warehouse is required with --reprocess-quarantine")
-    if (
-        args.dedup_index_stats
-        or args.rebuild_dedup_index
-        or args.bootstrap_dedup_index
-    ) and not args.warehouse:
-        ap.error(
-            "--warehouse is required with --dedup-index-stats / "
-            "--rebuild-dedup-index / --bootstrap-dedup-index (the index "
-            "tables live under it)"
-        )
-    if args.changes and not args.out:
-        ap.error("--out is required with --changes")
 
-    from pyspark.sql import SparkSession
+class ModeError(Exception):
+    """A mode that cannot run as asked: printed as ``{"error": ...}``,
+    exit ``code``."""
 
-    from .config import EngineConfig, RuleSet
+    def __init__(self, message: str, code: int = 2):
+        super().__init__(message)
+        self.code = code
+
+
+def _load_rules(path: str | None):
+    """(RuleSet or None, CSV header checks) from --rules: the reference's
+    codeless schema artifacts (CSV-Schema 1.1 / JSON Schema 2020-12 /
+    custom-poc rule list — rulesets/loaders.py), the shipped rule-set
+    shape {"header": ..., "rules": ...} (silently loading zero rules
+    from it as a flat dict would be a trap), or a flat RuleSet dict."""
+    from .config import RuleSet
+    from .rulesets import load_schema_artifact
+
+    if path is None:
+        return None, {}
+    if not path.endswith(".csvs"):
+        with open(path) as f:
+            doc = json.load(f)
+        if not ("validations" in doc or "$schema" in doc
+                or ("properties" in doc and "rules" not in doc)
+                or isinstance(doc.get("rules"), dict)):
+            return RuleSet.from_dict(doc), {}
+    return load_schema_artifact(path)
+
+
+def _routes(args) -> list[tuple[str, str]]:
+    """--route NAME=TABLE_PATH specs as (name, path) pairs."""
+    return [(n, p) for n, _, p in (s.partition("=") for s in args.route)]
+
+
+def _open_table(spark, path: str, args, branch: str | None = None):
+    """The table (or its ``branch``) at ``path``; --create makes an
+    absent main table first."""
     from .lake import LakeTable
     from .schema import sequences_schema
+
+    t = LakeTable(spark, path, branch=branch)
+    if args.create and branch is None and t.current_version() == 0:
+        t = LakeTable.create(
+            spark, path, sequences_schema(), num_buckets=args.num_buckets
+        )
+    return t
+
+
+class _Run:
+    """One invocation: the flags, the session, and the table and engine
+    config the handlers share, each built once, on first use (a mode
+    that never opens the table never creates it)."""
+
+    def __init__(self, args, spark):
+        self.args, self.spark, self.exit_code = args, spark, 0
+
+    @cached_property
+    def table(self):
+        return _open_table(self.spark, self.args.table, self.args, self.args.branch)
+
+    @cached_property
+    def cfg(self):
+        from .config import EngineConfig
+
+        a = self.args
+        kw = dict(
+            num_buckets=a.num_buckets, applied_lineage=a.applied_lineage,
+            suppress_stale=a.suppress_stale, patch_events=a.patch_events,
+            near_dup_gate=a.near_dup_gate, profile=a.profile_epochs,
+        )
+        unless_default = dict(
+            rules=_load_rules(a.rules)[0], near_dup_min_bands=a.near_dup_min_bands,
+            merge_mode=a.merge_mode, compact_every=a.compact_every,
+            vacuum_keep_last=a.vacuum_keep_last, outbox_dir=a.emit_outbox,
+            sink_retention_epochs=a.sink_retention_epochs,
+        )
+        kw.update((k, v) for k, v in unless_default.items() if v is not None)
+        if a.corpus_out is not None:
+            kw.update(
+                corpus_dir=a.corpus_out, corpus_config=_corpus_cfg(a),
+                corpus_eval_paths=a.corpus_eval,
+                corpus_dsir_target_path=a.dsir_target,
+            )
+        return EngineConfig(**kw)
+
+
+def _version_or_tag(v: str | None):
+    return int(v) if v is not None and v.lstrip("-").isdigit() else v
+
+
+def _rows(df) -> list[dict]:
+    return [r.asDict(recursive=True) for r in df.collect()]
+
+
+def _position(t) -> dict:
+    w, tail = t.epoch_state()
+    return {"table_version": t.current_version(), "epoch_watermark": w,
+            "epoch_tail": tail}
+
+
+def _table_status(run) -> dict:
+    t = run.table
+    return {**_position(t), "committed_epochs": sorted(t.committed_epochs())}
+
+
+def _is_lake_table(path: str) -> bool:
+    """A dexlake table root (it has a _snapshots dir) rather than plain
+    parquet. The sniff goes through the FileIO seam (default_io), not a
+    bare os.path probe: under DEXSPARK_FILEIO=condput/s3 the snapshots
+    live in the object store, and misreading a table root as plain
+    parquet would bypass snapshot isolation and MOR tombstones."""
+    from .lake import default_io
+
+    return default_io().is_dir(os.path.join(path, "_snapshots"))
+
+
+def _need_dsir_target(run, state_dirs: list[str], flag: str) -> None:
+    """Without --dsir-target, --dsir-frac gates only pipelines whose
+    state dir holds a frozen _dsir.json (a resumed pipeline gates under
+    its frozen model, target or not); any other would pass every
+    window ungated."""
+    from .lake import default_io
+    from .operators.corpus_sync import read_frozen_dsir
+
+    if run.args.dsir_frac is None or run.args.dsir_target:
+        return
+    if any(read_frozen_dsir(default_io(), d) is None for d in state_dirs):
+        raise ModeError(
+            "--dsir-frac needs --dsir-target until a window has frozen "
+            f"the DSIR model (no _dsir.json under {flag}); without one "
+            "every window would pass ungated"
+        )
+
+
+def _corpus_inputs(run) -> dict:
+    a, read = run.args, run.spark.read.parquet
+    return dict(
+        config=_corpus_cfg(a),
+        eval_sets=[read(p) for p in a.corpus_eval or []],
+        dsir_target=read(a.dsir_target) if a.dsir_target else None,
+    )
+
+
+def _sync_corpus(run):
+    # incremental corpus prep: changelog window in, appended window
+    # shards + state-table fold out (operators/corpus_sync)
+    from .lake import LakeTable
+    from .operators.corpus_sync import CorpusPipeline
+
+    a = run.args
+    if not _is_lake_table(a.corpus_src):
+        raise ModeError(
+            "--sync-corpus needs --corpus-src to be a dexlake table root "
+            "— the table's changelog drives the incremental fold (use "
+            "--prepare-corpus for plain parquet)"
+        )
+    _need_dsir_target(run, [a.sync_corpus], "--sync-corpus")
+    src = LakeTable(run.spark, a.corpus_src)
+    return CorpusPipeline(run.spark, src, a.sync_corpus, **_corpus_inputs(run)).sync()
+
+
+def _prepare_corpus(run):
+    # documents parquet in, packed training shards out. A table root
+    # closes the loop CDC-maintained table -> training shards: the
+    # table already carries tokens, so prepare_corpus skips the
+    # tokenizer and packs the CDC-merged payload directly.
+    from .lake import LakeTable
+    from .operators.corpus import prepare_corpus
+
+    a = run.args
+    if _is_lake_table(a.corpus_src):
+        src = LakeTable(run.spark, a.corpus_src).read()
+    else:
+        src = run.spark.read.parquet(a.corpus_src)
+    return prepare_corpus(run.spark, src, a.prepare_corpus, **_corpus_inputs(run))
+
+
+def _prepare_dsir_target(args):
+    if args.dsir_frac is not None and not args.dsir_target:
+        return "--dsir-frac needs --dsir-target in --prepare-corpus"
+
+
+def _pack_corpus(run):
+    from .operators.packing import pack_best_fit, pack_sequences
+
+    a, t = run.args, run.table
+    pack = pack_best_fit if a.pack_policy == "bestfit" else pack_sequences
+    pack(
+        t.read(), a.seq_len, eos_id=a.eos_id, pad_id=a.pad_id,
+        id_col=t.manifest().get("key", "doc_id"),
+    ).write.mode("overwrite").parquet(a.pack_corpus)
+    n = run.spark.read.parquet(a.pack_corpus).count()  # footer counts
+    return {"packs": n, "seq_len": a.seq_len, "policy": a.pack_policy,
+            "out": a.pack_corpus}
+
+
+def _validate_csv(run):
+    """listing.py's report over ROOT, plus csv_ingest's bulk validation
+    of the passed files rolled up so the driver collects per-status
+    counts and at most 100 failing files."""
+    import re
+    from urllib.parse import unquote
+
+    from pyspark.sql import functions as F
+
+    from .csv_ingest import bulk_validation_report
+    from .listing import classify_listing, list_files, listing_report
+
+    listing = classify_listing(list_files(run.spark, run.args.validate_csv))
+    listing = listing.localCheckpoint(eager=True)  # one listing feeds both
+    # binaryFile lists file: URIs; the header probe opens local paths
+    passed = listing.filter("status = 'passed'").select("path").collect()
+    paths = [unquote(re.sub("^file:(//)?", "", r["path"])) for r in passed]
+    rules, header = _load_rules(run.args.rules)
+    report = bulk_validation_report(run.spark, paths, rules, **header)
+    counted = ("n_rows", "n_clean", "n_quarantine")
+    ok = report.filter("status = 'ok'")
+    totals = ok.agg(*(F.sum(c).alias(c) for c in counted)).first()
+    failing = report.filter("status != 'ok' OR n_quarantine > 0")
+    return {"listing": listing_report(listing), "csv": {
+        "files": dict(report.groupBy("status").count().collect()),
+        "rows": {c: totals[c] or 0 for c in counted},
+        "failing": _rows(failing.orderBy("file_path").limit(100)),
+    }}
+
+
+def _sink(run, name: str, what: str, hint: str) -> str:
+    path = os.path.join(run.args.warehouse, name)
+    if not os.path.isdir(path):
+        raise ModeError(f"no {what} sink at {path} — {hint}")
+    return path
+
+
+_PROFILE_FIRST = "run the tail with --profile-epochs (or EngineConfig(profile=True))"
+
+
+def _drift(run):
+    # compare two epochs of the profile sink (--profile-epochs)
+    from .operators.profile import drift
+
+    e0, e1 = (int(x) for x in run.args.drift.split(","))
+    path = _sink(run, "profile", "profile", _PROFILE_FIRST + " first; note a "
+                 "fully caught-up rerun applies no batches and writes no profiles")
+    rows = drift(run.spark.read.parquet(path), e0, e1).collect()
+    cols = ("kind", "key", "value_a", "value_b", "abs_diff")
+    return {"epoch_a": e0, "epoch_b": e1, "drift": [
+        {c: r[c] for c in cols}
+        for r in sorted(rows, key=lambda r: (r["kind"], r["key"]))
+    ]}
+
+
+def _distinct_over(run):
+    # union the mergeable HLL sketch sink over an epoch window —
+    # distinct keys over the window with NO table/binlog rescan
+    from .operators.profile import distinct_over, read_sketches
+
+    lo, hi = ((int(x) if x else None) for x in
+              (run.args.distinct_over.split(",") + [""])[:2])
+    path = _sink(run, "profile_sketch", "sketch",
+                 _PROFILE_FIRST + " to write per-epoch distinct sketches first")
+    rows = distinct_over(read_sketches(run.spark, path), lo, hi).collect()
+    return {"epoch_lo": lo, "epoch_hi": hi, "distinct": {
+        r["key"]: {"n_epochs": r["n_epochs"],
+                   "n_distinct": round(r["n_distinct"], 1)}
+        for r in rows
+    }}
+
+
+def _quarantine_drift(run):
+    from .health import quarantine_drift
+
+    e0, e1 = run.args.quarantine_drift.split(",")
+    return quarantine_drift(run.spark, run.args.warehouse, int(e0), int(e1))
+
+
+def _compact_sketches(run):
+    from .operators.profile import compact_sketches
+
+    path = _sink(run, "profile_sketch", "sketch", "nothing to compact "
+                 "(--profile-epochs writes it while tailing)")
+    through = run.args.compact_sketches
+    return {"through_epoch": through, **compact_sketches(run.spark, path, through)}
+
+
+def _health(run):
+    from .health import binlog_lag, trigger_advice, warehouse_health
+
+    a, t = run.args, run.table
+    h = warehouse_health(run.spark, t, a.warehouse)
+    # trigger sizing from the deployment's own lineage history
+    # (O(epochs); null fields when history can't separate the
+    # per-trigger constant — see health.trigger_advice)
+    h["trigger_advice"] = trigger_advice(run.spark, a.warehouse, io=t.io)
+    if a.binlog:
+        # optional consumer-lag section: one O(binlog) scan
+        h["lag"] = binlog_lag(run.spark, t, a.binlog)
+    return h
+
+
+def _bootstrap_snapshot(run):
+    position, data_dir = run.args.snapshot_position, run.args.bootstrap_snapshot
+    sidecar = os.path.join(data_dir, "_position.json")
+    if os.path.isfile(sidecar):
+        # --export-snapshot layout: data under data/, position from
+        # the sidecar unless explicitly overridden
+        with open(sidecar) as fh:
+            side = json.load(fh)
+        if position is None:
+            position = int(side["position"])
+        data_dir = os.path.join(data_dir, "data")
+    v = run.table.bootstrap(run.spark.read.parquet(data_dir), position)
+    return {"bootstrap": {"version": v, "position": position,
+                          "epoch_watermark": run.table.epoch_state()[0]}}
+
+
+def _snapshot_position_known(args):
+    # an --export-snapshot dump carries its position in a sidecar
+    sidecar = os.path.join(args.bootstrap_snapshot, "_position.json")
+    if args.snapshot_position is None and not os.path.isfile(sidecar):
+        return ("--snapshot-position is required with --bootstrap-snapshot "
+                "(no _position.json sidecar found in the dump)")
+
+
+def _tail_after_bootstrap(run):
+    # a bare bootstrap exits after the load; with --binlog/--checkpoint/
+    # --warehouse it continues into the tail
+    a = run.args
+    return _tail(run) if a.binlog and a.checkpoint and a.warehouse else None
+
+
+def _tag(run):
+    name, _, v = run.args.tag.partition("=")
+    return run.table.tag(name, int(v) if v else None)
+
+
+def _create_branch(run):
+    name, _, v = run.args.create_branch.partition("=")
+    return run.table.create_branch(name, _version_or_tag(v or None))
+
+
+def _dropped(drop, name: str) -> dict:
+    drop(name)
+    return {"dropped": name}
+
+
+def _scan_range(run):
+    lo, hi = run.args.scan_range
+    return {"lo": lo, "hi": hi, "rows": _rows(run.table.scan_range(lo, hi))}
+
+
+def _open_dedup_index(run):
+    """The near-dup index pair, opened, never created: stats/rebuild
+    against a warehouse that was never gated must not materialize
+    empty tables."""
+    from .lake import LakeTable
+
+    sig, band = (LakeTable(run.spark, os.path.join(run.args.warehouse, n))
+                 for n in ("dedup_sig", "dedup_band"))
+    if sig.current_version() == 0 or band.current_version() == 0:
+        raise ModeError("no near-dup index under this warehouse (tail with "
+                        "--near-dup-gate first, or --bootstrap-dedup-index)",
+                        code=1)
+    return sig, band
+
+
+def _dedup_index(run):
+    from dataclasses import replace
+
+    from .operators.dedup_index import (
+        index_stats, rebuild_band_index, sync_indexes_from_table,
+    )
     from .stream import CdcEngine
 
-    spark = SparkSession.builder.appName("dexspark-cdc").getOrCreate()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    a, t, out = run.args, run.table, {}
+    if a.bootstrap_dedup_index:
+        # create-if-absent + full-history fold, exactly the engine's own
+        # opener/sync (same schemas, same cursors) — the first gated
+        # micro-batch then starts warm
+        eng = CdcEngine(run.spark, t, a.warehouse,
+                        replace(run.cfg, near_dup_gate=True))
+        eng._sync_dedup_indexes()
+        sig, band = eng._nd_sig, eng._nd_band
+    else:
+        sig, band = _open_dedup_index(run)
+    if a.rebuild_dedup_index:
+        # catch up first so the rebuild reflects the table head
+        sync_indexes_from_table(t, sig, band, text=run.cfg.near_dup_column)
+        out = rebuild_band_index(band, sig)
+    return {**out, **index_stats(t, sig, band)}
 
-    if args.sync_corpus is not None:
-        # incremental corpus prep: changelog window in, appended
-        # window shards + state-table fold out (operators/corpus_sync)
-        from .lake import LakeTable, default_io
-        from .operators.corpus import CorpusConfig
-        from .operators.corpus_sync import CorpusPipeline, read_frozen_dsir
 
-        if not default_io().is_dir(
-            os.path.join(args.corpus_src, "_snapshots")
-        ):
-            print(
-                json.dumps(
-                    {
-                        "error": "--sync-corpus needs --corpus-src to be a "
-                        "dexlake table root — the table's changelog drives "
-                        "the incremental fold (use --prepare-corpus for "
-                        "plain parquet)"
-                    }
-                )
-            )
-            return 2
-        cfg = _corpus_cfg(args)
-        src = LakeTable(spark, args.corpus_src)
-        # the pipeline's state lives on its source table's FileIO; a
-        # resumed pipeline gates under its frozen model, target or not
-        if (
-            cfg.dsir_frac is not None
-            and not args.dsir_target
-            and read_frozen_dsir(src.io, args.sync_corpus) is None
-        ):
-            print(
-                json.dumps(
-                    {
-                        "error": "--dsir-frac needs --dsir-target until "
-                        "a window has frozen the DSIR model (no "
-                        "_dsir.json under --sync-corpus); without one "
-                        "every window would pass ungated"
-                    }
-                )
-            )
-            return 2
-        evals = [spark.read.parquet(p) for p in (args.corpus_eval or [])]
-        pipe = CorpusPipeline(
-            spark,
-            src,
-            args.sync_corpus,
-            eval_sets=evals,
-            config=cfg,
-            dsir_target=(
-                spark.read.parquet(args.dsir_target)
-                if args.dsir_target
-                else None
-            ),
-        )
-        print(json.dumps(pipe.sync()))
-        return 0
+def _remap_vocab(run):
+    from .operators.vocabmap import remap_exprs
 
-    if args.prepare_corpus is not None:
-        # table-less: documents parquet in, packed training shards out
-        from .operators.corpus import CorpusConfig, prepare_corpus
+    with open(run.args.remap_vocab) as fh:
+        mapping = {int(k): int(v) for k, v in json.load(fh).items()}
+    return run.table.rewrite_payload(remap_exprs(mapping, oov=run.args.remap_oov))
 
-        cfg = _corpus_cfg(args)
-        evals = [spark.read.parquet(p) for p in (args.corpus_eval or [])]
-        # --corpus-src may be a plain documents parquet OR a dexlake
-        # table root (sniffed by its _snapshots dir): the latter closes
-        # the loop CDC-maintained table -> training shards — the table
-        # already carries tokens, so prepare_corpus skips the
-        # tokenizer and packs the CDC-merged payload directly. The
-        # sniff goes through the FileIO seam (default_io), not a bare
-        # os.path probe: under DEXSPARK_FILEIO=condput/s3 the
-        # snapshots live in the object store, and misreading a table
-        # root as plain parquet would bypass snapshot isolation and
-        # MOR tombstones.
-        from .lake import LakeTable, default_io
 
-        if default_io().is_dir(os.path.join(args.corpus_src, "_snapshots")):
-            src = LakeTable(spark, args.corpus_src).read()
-        else:
-            src = spark.read.parquet(args.corpus_src)
-        if cfg.dsir_frac is not None and not args.dsir_target:
-            ap.error("--dsir-frac needs --dsir-target in --prepare-corpus")
-        report = prepare_corpus(
-            spark,
-            src,
-            args.prepare_corpus,
-            eval_sets=evals,
-            config=cfg,
-            dsir_target=(
-                spark.read.parquet(args.dsir_target)
-                if args.dsir_target
-                else None
-            ),
-        )
-        print(json.dumps(report))
-        return 0
+def _trim_dup_spans(run):
+    from pyspark.sql import functions as F
 
-    if args.drift is not None:
-        # table-less read-only mode: compare two epochs of the profile
-        # sink (written while tailing with --profile-epochs)
-        import os as _os
+    from .operators.spandedup import remove_duplicate_spans
 
-        from .operators.profile import drift as _drift
+    t, min_len = run.table, run.args.trim_dup_spans
+    trimmed = remove_duplicate_spans(
+        t.read(), text="tokens", min_len=min_len
+    ).withColumn("n_tok", F.size("tokens").cast("int"))
+    n_removed = int(trimmed.agg(F.sum("n_removed_tokens")).collect()[0][0] or 0)
+    if n_removed:
+        t.overwrite(trimmed.drop("n_removed_tokens"))
+    return {"version": t.current_version(), "tokens_removed": n_removed,
+            "min_len": min_len}
 
-        e0, e1 = (int(x) for x in args.drift.split(","))
-        prof_path = _os.path.join(args.warehouse, "profile")
-        if not _os.path.isdir(prof_path):
-            print(
-                json.dumps(
-                    {
-                        "error": "no profile sink at "
-                        + prof_path
-                        + " — run the tail with --profile-epochs (or "
-                        "EngineConfig(profile=True)) first; note a fully "
-                        "caught-up rerun applies no batches and writes "
-                        "no profiles"
-                    }
-                )
-            )
-            return 2
-        prof = spark.read.parquet(prof_path)
-        rows = _drift(prof, e0, e1).collect()
-        print(
-            json.dumps(
-                {
-                    "epoch_a": e0,
-                    "epoch_b": e1,
-                    "drift": [
-                        {
-                            "kind": r["kind"],
-                            "key": r["key"],
-                            "value_a": r["value_a"],
-                            "value_b": r["value_b"],
-                            "abs_diff": r["abs_diff"],
-                        }
-                        for r in sorted(
-                            rows, key=lambda r: (r["kind"], r["key"])
-                        )
-                    ],
-                }
-            )
-        )
-        return 0
 
-    if args.distinct_over is not None:
-        # table-less read-only mode: union the mergeable HLL sketch
-        # sink over an epoch window (--profile-epochs writes it) —
-        # distinct keys over the window with NO table/binlog rescan
-        import os as _os
+def _create_view(run):
+    from .operators.mview import create_agg_view
 
-        from .operators.profile import distinct_over as _distinct, read_sketches
+    a = run.args
+    sums = dict(kv.split(":") for kv in a.view_sums.split(","))
+    v = create_agg_view(run.spark, a.create_view, run.table,
+                        a.view_group.split(","), sums)
+    return {"path": a.create_view, "version": v.current_version()}
 
-        lo_s, hi_s = (args.distinct_over.split(",") + [""])[:2]
-        lo = int(lo_s) if lo_s else None
-        hi = int(hi_s) if hi_s else None
-        sk_path = _os.path.join(args.warehouse, "profile_sketch")
-        if not _os.path.isdir(sk_path):
-            print(
-                json.dumps(
-                    {
-                        "error": "no sketch sink at "
-                        + sk_path
-                        + " — run the tail with --profile-epochs (or "
-                        "EngineConfig(profile=True)) to write per-epoch "
-                        "distinct sketches first"
-                    }
-                )
-            )
-            return 2
-        sk = read_sketches(spark, sk_path)
-        rows = _distinct(sk, lo, hi).collect()
-        print(
-            json.dumps(
-                {
-                    "epoch_lo": lo,
-                    "epoch_hi": hi,
-                    "distinct": {
-                        r["key"]: {
-                            "n_epochs": r["n_epochs"],
-                            "n_distinct": round(r["n_distinct"], 1),
-                        }
-                        for r in rows
-                    },
-                }
-            )
-        )
-        return 0
 
-    if args.quarantine_drift is not None:
-        from .health import quarantine_drift
+def _refresh_view(run):
+    from .lake import LakeTable
+    from .operators.mview import refresh_agg_view
 
-        e0_s, e1_s = args.quarantine_drift.split(",")
-        print(
-            json.dumps(
-                quarantine_drift(spark, args.warehouse, int(e0_s), int(e1_s))
-            )
-        )
-        return 0
+    view = LakeTable(run.spark, run.args.refresh_view)
+    props = view.manifest().get("properties", {})
+    sums = dict(kv.split(":") for kv in props["view.sums"].split(","))
+    return refresh_agg_view(run.table, view, props["view.group_cols"].split(","), sums)
 
-    if args.compact_sketches is not None:
-        import os as _os
 
-        from .operators.profile import compact_sketches as _compact_sk
+def _set_property(run):
+    props = {}
+    for kv in run.args.set_property:
+        k, _, v = kv.partition("=")
+        props[k] = v if v != "" else None
+    return run.table.alter_properties(props)
 
-        if not _os.path.isdir(_os.path.join(args.warehouse, "profile_sketch")):
-            print(
-                json.dumps(
-                    {
-                        "error": "no sketch sink at "
-                        + _os.path.join(args.warehouse, "profile_sketch")
-                        + " — nothing to compact (--profile-epochs "
-                        "writes it while tailing)"
-                    }
-                )
-            )
-            return 2
-        info = _compact_sk(
-            spark,
-            _os.path.join(args.warehouse, "profile_sketch"),
-            args.compact_sketches,
-        )
-        print(json.dumps({"through_epoch": args.compact_sketches, **info}))
-        return 0
 
-    if args.corpus_out is not None and args.dsir_frac is not None and not args.dsir_target:
-        # the engine's pipeline keeps its state on its source table's
-        # FileIO, one state dir per route; a resumed pipeline gates
-        # under its frozen model, target or not
-        from .operators.corpus_sync import read_frozen_dsir
+def _vacuum(run):
+    a = run.args
+    kwargs = {"keep_last": a.keep_last, "dry_run": a.dry_run}
+    if a.min_age_seconds is not None:
+        kwargs["min_age_seconds"] = a.min_age_seconds
+    return run.table.vacuum(**kwargs)
 
-        if args.route:
-            sources = [
-                (path, os.path.join(args.corpus_out, name))
-                for name, _, path in (spec.partition("=") for spec in args.route)
-            ]
-        else:
-            sources = [(args.table, args.corpus_out)] if args.table else []
-        if any(read_frozen_dsir(LakeTable(spark, t).io, d) is None for t, d in sources):
-            print(
-                json.dumps(
-                    {
-                        "error": "--dsir-frac needs --dsir-target until "
-                        "a window has frozen the DSIR model (no "
-                        "_dsir.json under --corpus-out); without one "
-                        "every window would pass ungated"
-                    }
-                )
-            )
-            return 2
 
-    if args.create and args.branch is None and args.table:
-        t0 = LakeTable(spark, args.table)
-        if t0.current_version() == 0:
-            LakeTable.create(
-                spark, args.table, sequences_schema(), num_buckets=args.num_buckets
-            )
-    table = LakeTable(spark, args.table, branch=args.branch) if args.table else None
+def _outbox(run):
+    from .operators.outbox import emit_changes
 
-    rules = None
-    if args.rules:
-        if args.rules.endswith(".csvs"):
-            # the reference's own codeless schema artifacts load
-            # directly (CSV-Schema 1.1 / JSON Schema 2020-12 /
-            # custom-poc rule list — rulesets/loaders.py)
-            from .rulesets import load_schema_artifact
+    return emit_changes(run.table, run.args.outbox)
 
-            rules, _ = load_schema_artifact(args.rules)
-        else:
-            with open(args.rules) as f:
-                doc = json.load(f)
-            if "validations" in doc or "$schema" in doc or (
-                "properties" in doc and "rules" not in doc
-            ):
-                from .rulesets import load_schema_artifact
 
-                rules, _ = load_schema_artifact(args.rules)
-            else:
-                # accept both the flat RuleSet dict and the shipped
-                # rule-set artifact shape ({"header": ..., "rules":
-                # ...}, see dexspark/rulesets/) — silently loading
-                # zero rules from the nested form would be a trap
-                rules = RuleSet.from_dict(
-                    doc["rules"] if isinstance(doc.get("rules"), dict) else doc
-                )
-    cfg_kwargs = dict(
-        num_buckets=args.num_buckets, applied_lineage=args.applied_lineage
-    )
-    if rules is not None:
-        cfg_kwargs["rules"] = rules
-    if args.suppress_stale:
-        cfg_kwargs["suppress_stale"] = True
-    if args.patch_events:
-        cfg_kwargs["patch_events"] = True
-    if args.near_dup_gate:
-        cfg_kwargs["near_dup_gate"] = True
-    if args.profile_epochs:
-        cfg_kwargs["profile"] = True
-    if args.near_dup_min_bands is not None:
-        cfg_kwargs["near_dup_min_bands"] = args.near_dup_min_bands
-    if args.merge_mode is not None:
-        cfg_kwargs["merge_mode"] = args.merge_mode
-    if args.compact_every is not None:
-        cfg_kwargs["compact_every"] = args.compact_every
-    if args.vacuum_keep_last is not None:
-        cfg_kwargs["vacuum_keep_last"] = args.vacuum_keep_last
-    if args.sink_retention_epochs is not None:
-        cfg_kwargs["sink_retention_epochs"] = args.sink_retention_epochs
-    if args.emit_outbox is not None:
-        cfg_kwargs["outbox_dir"] = args.emit_outbox
-    if args.corpus_out is not None:
-        cfg_kwargs["corpus_dir"] = args.corpus_out
-        cfg_kwargs["corpus_config"] = _corpus_cfg(args)
-        cfg_kwargs["corpus_eval_paths"] = args.corpus_eval
-        cfg_kwargs["corpus_dsir_target_path"] = args.dsir_target
-    cfg = EngineConfig(**cfg_kwargs)
+def _changes(run):
+    a, t = run.args, run.table
+    from_v, _, to_s = a.changes.partition(",")
+    to_v = int(to_s) if to_s else None
+    t.changes(int(from_v), to_v).write.mode("overwrite").parquet(a.out)
+    return {"from_version": int(from_v), "to_version": to_v or t.current_version(),
+            "rows": run.spark.read.parquet(a.out).count(), "out": a.out}
 
-    if args.pack_corpus is not None:
-        from .operators.packing import pack_best_fit, pack_sequences
 
-        key = table.manifest().get("key", "doc_id")
-        if args.pack_policy == "bestfit":
-            packed = pack_best_fit(
-                table.read(),
-                args.seq_len,
-                pad_id=args.pad_id,
-                eos_id=args.eos_id,
-                id_col=key,
-            )
-        else:
-            packed = pack_sequences(
-                table.read(),
-                args.seq_len,
-                eos_id=args.eos_id,
-                pad_id=args.pad_id,
-                id_col=key,
-            )
-        packed.write.mode("overwrite").parquet(args.pack_corpus)
-        n = spark.read.parquet(args.pack_corpus).count()  # footer counts
-        print(json.dumps({"packs": n, "seq_len": args.seq_len,
-                          "policy": args.pack_policy,
-                          "out": args.pack_corpus}))
-        return 0
+def _expire_binlog(run):
+    from .events import expire_binlog
+    from .lake import LakeTable
 
-    if args.export_snapshot is not None:
-        ver = args.export_version
-        if ver is not None and ver.lstrip("-").isdigit():
-            ver = int(ver)
-        sidecar = table.export_snapshot(args.export_snapshot, version=ver)
-        print(json.dumps({"export": sidecar}))
-        return 0
+    a = run.args
+    if a.route:
+        # fan-out retention: an epoch is dead only when EVERY route has
+        # applied it — expire under the MIN watermark. A not-yet-created
+        # route has applied nothing: its watermark is the pre-ingest -1.
+        # Needs only each route's epoch_state: no engine, no --warehouse.
+        tables = [LakeTable(run.spark, path) for _, path in _routes(a)]
+        key = "min_epoch_watermark"
+        w = min(t.epoch_state()[0] if t.current_version() else -1 for t in tables)
+    else:
+        key, w = "epoch_watermark", run.table.epoch_state()[0]
+    return {key: w, **expire_binlog(
+        a.binlog, w, keep_epochs=a.expire_binlog, dry_run=a.dry_run)}
 
-    if args.bootstrap_snapshot is not None:
-        import os as _os
 
-        position = args.snapshot_position
-        data_dir = args.bootstrap_snapshot
-        sidecar_path = _os.path.join(data_dir, "_position.json")
-        if _os.path.isfile(sidecar_path):
-            # --export-snapshot layout: data under data/, position
-            # from the sidecar unless explicitly overridden
-            with open(sidecar_path) as fh:
-                side = json.load(fh)
-            if position is None:
-                position = int(side["position"])
-            data_dir = _os.path.join(data_dir, "data")
-        snap = spark.read.parquet(data_dir)
-        v = table.bootstrap(snap, position)
-        print(
-            json.dumps(
-                {
-                    "bootstrap": {
-                        "version": v,
-                        "position": position,
-                        "epoch_watermark": table.epoch_state()[0],
-                    }
-                }
-            )
-        )
-        if not (args.binlog and args.checkpoint and args.warehouse):
-            return 0
+def _compact_binlog(run):
+    # pure binlog-to-binlog maintenance: no engine, no table
+    from .events import compact_binlog
 
-    # metadata / read-only modes: no engine (and no warehouse) needed
-    if args.health:
-        from .health import binlog_lag, trigger_advice, warehouse_health
+    a = run.args
+    return compact_binlog(run.spark, a.binlog, a.compact_binlog, rules=run.cfg.rules)
 
-        h = warehouse_health(spark, table, args.warehouse)
-        # trigger sizing from the deployment's own lineage history
-        # (O(epochs); null fields when history can't separate the
-        # per-trigger constant — see health.trigger_advice)
-        h["trigger_advice"] = trigger_advice(spark, args.warehouse, io=table.io)
-        if args.binlog:
-            # optional consumer-lag section: one O(binlog) scan
-            h["lag"] = binlog_lag(spark, table, args.binlog)
-        print(json.dumps(h))
-        return 0
-    if args.history:
-        print(json.dumps(table.history()))
-        return 0
-    if args.stats:
-        print(json.dumps(table.stats()))
-        return 0
-    if args.tag is not None:
-        name, _, v = args.tag.partition("=")
-        print(json.dumps(table.tag(name, int(v) if v else None)))
-        return 0
-    if args.drop_tag is not None:
-        table.drop_tag(args.drop_tag)
-        print(json.dumps({"dropped": args.drop_tag}))
-        return 0
-    if args.tags:
-        print(json.dumps(table.tags()))
-        return 0
-    if args.create_branch is not None:
-        name, _, v = args.create_branch.partition("=")
-        fork = None if not v else (int(v) if v.isdigit() else v)
-        print(json.dumps(table.create_branch(name, fork)))
-        return 0
-    if args.publish_branch is not None:
-        print(json.dumps(table.publish_branch(args.publish_branch)))
-        return 0
-    if args.drop_branch is not None:
-        table.drop_branch(args.drop_branch)
-        print(json.dumps({"dropped": args.drop_branch}))
-        return 0
-    if args.branches:
-        print(json.dumps(table.branches()))
-        return 0
-    if (
-        args.dedup_index_stats
-        or args.rebuild_dedup_index
-        or args.bootstrap_dedup_index
-    ):
-        import os as _os
 
-        from .operators.dedup_index import (
-            index_stats,
-            rebuild_band_index,
-            sync_indexes_from_table,
-        )
+def _router(run):
+    """One CdcEngine per --route, its sinks under <warehouse>/<NAME>."""
+    from dataclasses import replace
 
-        if args.bootstrap_dedup_index:
-            # create-if-absent + full-history fold, exactly the
-            # engine's own opener/sync (same schemas, same cursors) —
-            # the first gated micro-batch then starts warm
-            from dataclasses import replace
+    from .router import RoutedEngine
+    from .stream import CdcEngine
 
-            from .stream import CdcEngine
+    a, cfg, engines = run.args, run.cfg, {}
+    for name, path in _routes(a):
+        # an outbox dir holds ONE table's cursor and epoch space (epoch
+        # = commit version), and the corpus pipeline's state tables
+        # carry ONE source table's version cursor: routes must not
+        # share either, so both fan out to per-route subdirs
+        own = {f: os.path.join(getattr(cfg, f), name)
+               for f in ("outbox_dir", "corpus_dir") if getattr(cfg, f)}
+        engines[name] = CdcEngine(run.spark, _open_table(run.spark, path, a),
+                                  os.path.join(a.warehouse, name), replace(cfg, **own))
+    return RoutedEngine(run.spark, a.warehouse, engines, a.route_expr,
+                        default=a.route_default)
 
-            eng = CdcEngine(
-                spark, table, args.warehouse,
-                replace(cfg, near_dup_gate=True),
-            )
-            eng._sync_dedup_indexes()
-            sig_t, band_t = eng._nd_sig, eng._nd_band
-        else:
-            # open, never create: stats/rebuild against a warehouse
-            # that was never gated must not materialize empty tables
-            sig_t = LakeTable(spark, _os.path.join(args.warehouse, "dedup_sig"))
-            band_t = LakeTable(spark, _os.path.join(args.warehouse, "dedup_band"))
-            if sig_t.current_version() == 0 or band_t.current_version() == 0:
-                print(
-                    json.dumps(
-                        {
-                            "error": "no near-dup index under this warehouse "
-                            "(tail with --near-dup-gate first, or "
-                            "--bootstrap-dedup-index)"
-                        }
-                    )
-                )
-                return 1
-        out = {}
-        if args.rebuild_dedup_index:
-            # catch up first so the rebuild reflects the table head
-            sync_indexes_from_table(
-                table, sig_t, band_t, text=cfg.near_dup_column
-            )
-            out = rebuild_band_index(band_t, sig_t)
-        out.update(index_stats(table, sig_t, band_t))
-        print(json.dumps(out))
-        return 0
-    if args.lookup is not None:
-        rows = [r.asDict(recursive=True) for r in table.lookup(args.lookup).collect()]
-        print(json.dumps({"key": args.lookup, "rows": rows}, default=str))
-        return 0
-    if args.scan_range:
-        lo, hi = args.scan_range
-        rows = [
-            r.asDict(recursive=True) for r in table.scan_range(lo, hi).collect()
-        ]
-        print(json.dumps({"lo": lo, "hi": hi, "rows": rows}, default=str))
-        return 0
-    if maintenance:
-        out = {}
-        if args.rollback is not None:
-            tgt = args.rollback
-            out["rollback"] = table.rollback(
-                int(tgt) if tgt.lstrip("-").isdigit() else tgt
-            )
-        if args.delete_where is not None:
-            out["delete_where"] = table.delete_where(args.delete_where)
-        if args.remap_vocab is not None:
-            import json as _json
 
-            from .operators.vocabmap import remap_exprs
+def _route_positions(router) -> dict:
+    return {name: _position(eng.table) for name, eng in router.routes.items()}
 
-            with open(args.remap_vocab) as fh:
-                mapping = {int(k): int(v) for k, v in _json.load(fh).items()}
-            out["remap_vocab"] = table.rewrite_payload(
-                remap_exprs(mapping, oov=args.remap_oov)
-            )
-        if args.trim_dup_spans is not None:
-            from pyspark.sql import functions as F
 
-            from .operators.spandedup import remove_duplicate_spans
+def _routes_status(run):
+    router = _router(run)
+    try:
+        unrouted = run.spark.read.parquet(router.unrouted_path).count()
+    except Exception:
+        unrouted = 0
+    pin = None
+    try:
+        with open(router._pin_path) as f:
+            pin = json.load(f)["versions"]
+    except OSError:
+        pass
+    return {"routes": _route_positions(router), "consistent_pin": pin,
+            "unrouted_rows": unrouted}
 
-            state = table.read()
-            trimmed = remove_duplicate_spans(
-                state, text="tokens", min_len=args.trim_dup_spans
-            ).withColumn("n_tok", F.size("tokens").cast("int"))
-            n_removed = int(
-                trimmed.agg(F.sum("n_removed_tokens")).collect()[0][0] or 0
-            )
-            if n_removed:
-                table.overwrite(trimmed.drop("n_removed_tokens"))
-            out["trim_dup_spans"] = {
-                "version": table.current_version(),
-                "tokens_removed": n_removed,
-                "min_len": args.trim_dup_spans,
-            }
-        if args.rebucket is not None:
-            out["rebucket"] = table.rebucket(args.rebucket)
-        if args.compact:
-            out["compact"] = table.compact(max_buckets=args.compact_max_buckets)
-        if args.create_view is not None:
-            from .operators.mview import create_agg_view
 
-            sums = dict(kv.split(":") for kv in args.view_sums.split(","))
-            v = create_agg_view(
-                spark,
-                args.create_view,
-                table,
-                args.view_group.split(","),
-                sums,
-            )
-            out["create_view"] = {"path": args.create_view, "version": v.current_version()}
-        if args.refresh_view is not None:
-            from .operators.mview import refresh_agg_view
+def _engine(run):
+    from .stream import CdcEngine
 
-            view = LakeTable(spark, args.refresh_view)
-            props = view.manifest().get("properties", {})
-            group = props["view.group_cols"].split(",")
-            sums = dict(
-                kv.split(":") for kv in props["view.sums"].split(",")
-            )
-            out["refresh_view"] = refresh_agg_view(table, view, group, sums)
-        if args.rename_column is not None:
-            o, _, n = args.rename_column.partition(":")
-            out["rename_column"] = table.rename_column(o, n)
-        if args.drop_column is not None:
-            out["drop_column"] = table.drop_column(args.drop_column)
-        if args.set_property is not None:
-            props = {}
-            for kv in args.set_property:
-                k, _, v = kv.partition("=")
-                props[k] = v if v != "" else None
-            out["properties"] = table.alter_properties(props)
-        if args.vacuum:
-            kwargs = {"keep_last": args.keep_last, "dry_run": args.dry_run}
-            if args.min_age_seconds is not None:
-                kwargs["min_age_seconds"] = args.min_age_seconds
-            out["vacuum"] = table.vacuum(**kwargs)
-        print(json.dumps(out))
-        return 0
-    if args.outbox is not None:
-        from .operators.outbox import emit_changes
+    return CdcEngine(run.spark, run.table, run.args.warehouse, run.cfg)
 
-        print(json.dumps(emit_changes(table, args.outbox)))
-        return 0
-    if args.changes is not None:
-        parts = args.changes.split(",")
-        from_v = int(parts[0])
-        to_v = int(parts[1]) if len(parts) > 1 else None
-        ch = table.changes(from_v, to_v)
-        ch.write.mode("overwrite").parquet(args.out)
-        print(
-            json.dumps(
-                {
-                    "from_version": from_v,
-                    "to_version": to_v or table.current_version(),
-                    "rows": spark.read.parquet(args.out).count(),
-                    "out": args.out,
-                }
-            )
-        )
-        return 0
 
-    if args.expire_binlog is not None and not args.route:
-        from .events import expire_binlog
-
-        t = LakeTable(spark, args.table, branch=args.branch)
-        w, _tail = t.epoch_state()
-        info = expire_binlog(
-            args.binlog, w, keep_epochs=args.expire_binlog, dry_run=args.dry_run
-        )
-        print(json.dumps({"epoch_watermark": w, **info}))
-        return 0
-
-    if args.compact_binlog is not None:
-        # no engine (and possibly no --warehouse) needed: pure
-        # binlog-to-binlog maintenance
-        from .events import compact_binlog
-
-        info = compact_binlog(
-            spark, args.binlog, args.compact_binlog, rules=cfg.rules
-        )
-        print(json.dumps(info))
-        return 0
-
-    if args.route:
-        import os as _os
-
-        from .router import RoutedEngine
-
-        from dataclasses import replace as _replace
-
-        if args.expire_binlog is not None:
-            # fan-out retention: an epoch is dead only when EVERY
-            # route has applied it — expire under the MIN watermark.
-            # Needs only each route's epoch_state, so no engine (and
-            # no --warehouse) is required.
-            from .events import expire_binlog
-
-            def _route_watermark(path: str) -> int:
-                t = LakeTable(spark, path)
-                if t.current_version() == 0:
-                    # not-yet-created route (e.g. --create on a fresh
-                    # warehouse): it has applied nothing, so its
-                    # watermark is the pre-ingest -1 — nothing expires
-                    return -1
-                return t.epoch_state()[0]
-
-            w = min(
-                _route_watermark(spec.partition("=")[2])
-                for spec in args.route
-            )
-            info = expire_binlog(
-                args.binlog,
-                w,
-                keep_epochs=args.expire_binlog,
-                dry_run=args.dry_run,
-            )
-            print(json.dumps({"min_epoch_watermark": w, **info}))
-            return 0
-
-        routes = {}
-        for spec in args.route:
-            name, _, path = spec.partition("=")
-            rt = LakeTable(spark, path)
-            if args.create and rt.current_version() == 0:
-                rt = LakeTable.create(
-                    spark, path, sequences_schema(), num_buckets=args.num_buckets
-                )
-            # an outbox dir holds ONE table's cursor and epoch space
-            # (epoch = commit version): routes must not share one, so
-            # --emit-outbox fans out to per-route subdirs
-            rcfg = cfg
-            if cfg.outbox_dir:
-                rcfg = _replace(
-                    cfg, outbox_dir=_os.path.join(cfg.outbox_dir, name)
-                )
-            # same isolation rule for the corpus pipeline: its state
-            # tables carry ONE source table's version cursor
-            if cfg.corpus_dir:
-                rcfg = _replace(
-                    rcfg, corpus_dir=_os.path.join(cfg.corpus_dir, name)
-                )
-            routes[name] = CdcEngine(
-                spark, rt, _os.path.join(args.warehouse, name), rcfg
-            )
-        router = RoutedEngine(
-            spark, args.warehouse, routes, args.route_expr,
-            default=args.route_default,
-        )
-        if args.routes_status:
-            status = {}
-            for name, eng in routes.items():
-                w, tl = eng.table.epoch_state()
-                status[name] = {
-                    "table_version": eng.table.current_version(),
-                    "epoch_watermark": w,
-                    "epoch_tail": tl,
-                }
-            try:
-                unrouted = spark.read.parquet(router.unrouted_path).count()
-            except Exception:
-                unrouted = 0
-            pin = None
-            try:
-                with open(router._pin_path) as f:
-                    pin = json.load(f)["versions"]
-            except OSError:
-                pass
-            print(
-                json.dumps(
-                    {
-                        "routes": status,
-                        "consistent_pin": pin,
-                        "unrouted_rows": unrouted,
-                    }
-                )
-            )
-            return 0
-        if args.reprocess_unrouted:
-            print(json.dumps(router.reprocess_unrouted()))
-            return 0
-        if args.batch:
-            router.apply_binlog(args.binlog)
-        elif args.follow:
-            q = router.run_stream(
-                args.binlog,
-                args.checkpoint,
-                available_now=False,
-                processing_time=args.trigger,
-                max_files_per_trigger=args.max_files_per_trigger,
-            )
-            try:
-                q.awaitTermination()
-            finally:
-                router.flush_epoch_markers()
-        else:
-            router.run_until_caught_up(
-                args.binlog,
-                args.checkpoint,
-                max_files_per_trigger=args.max_files_per_trigger,
-            )
-        status = {}
-        for name, eng in routes.items():
-            w, tl = eng.table.epoch_state()
-            status[name] = {
-                "table_version": eng.table.current_version(),
-                "epoch_watermark": w,
-                "epoch_tail": tl,
-            }
-        print(json.dumps({"routes": status}))
-        return 0
-
-    engine = CdcEngine(spark, table, args.warehouse, cfg)
-
-    def _status() -> None:
-        w, tail = table.epoch_state()
-        print(
-            json.dumps(
-                {
-                    "table_version": table.current_version(),
-                    "committed_epochs": sorted(table.committed_epochs()),
-                    "epoch_watermark": w,
-                    "epoch_tail": tail,
-                }
-            )
-        )
-
-    if args.reprocess_quarantine:
-        info = engine.reprocess_quarantine()
-        print(json.dumps(info))
-        _status()
-    elif args.batch:
-        engine.apply_binlog(args.binlog)
-        _status()
-    elif args.follow:
+def _tail(run):
+    """Apply --binlog to the table, or fan it out over --route: as one
+    batch (--batch), forever (--follow), or up to the log's end."""
+    a = run.args
+    if a.corpus_out is not None:  # before the tail creates anything
+        dirs = ([os.path.join(a.corpus_out, n) for n, _ in _routes(a)]
+                if a.route else [a.corpus_out])
+        _need_dsir_target(run, dirs, "--corpus-out")
+    engine = _router(run) if a.route else _engine(run)
+    if a.batch:
+        engine.apply_binlog(a.binlog)
+    elif a.follow:
         q = engine.run_stream(
-            args.binlog,
-            args.checkpoint,
-            available_now=False,
-            processing_time=args.trigger,
-            max_files_per_trigger=args.max_files_per_trigger,
+            a.binlog, a.checkpoint, available_now=False,
+            processing_time=a.trigger, max_files_per_trigger=a.max_files_per_trigger,
         )
         try:
             q.awaitTermination()
@@ -1664,12 +1316,158 @@ def main(argv: list[str] | None = None) -> int:
             engine.flush_epoch_markers()
     else:
         engine.run_until_caught_up(
-            args.binlog,
-            args.checkpoint,
-            max_files_per_trigger=args.max_files_per_trigger,
+            a.binlog, a.checkpoint, max_files_per_trigger=a.max_files_per_trigger
         )
-        _status()
-    return 0
+    return {"routes": _route_positions(engine)} if a.route else _table_status(run)
+
+
+@dataclass(frozen=True)
+class Mode:
+    """One row of the mode table."""
+
+    flag: str | None  # the argparse dest that picks the mode; None = the tail
+    run: Callable[[_Run], dict | None]  # returns the JSON document
+    needs: tuple[str, ...] = ()  # argparse dests that must be set
+    table: bool = True  # needs --table (outside --route mode)
+    route: bool = False  # composes with --route
+    group: str | None = None  # rows of one group run together, in table order
+    key: str | None = None  # the row's key in its group's document
+    then: Callable[[_Run], dict | None] | None = None  # a second document
+    check: Callable | None = None  # args -> usage error message, or None
+
+
+_WH, _MAINT = ("warehouse",), "maintenance"
+
+MODES = (
+    Mode("sync_corpus", _sync_corpus, ("corpus_src",), table=False),
+    Mode("prepare_corpus", _prepare_corpus, ("corpus_src",), table=False,
+         check=_prepare_dsir_target),
+    Mode("validate_csv", _validate_csv, table=False),
+    Mode("drift", _drift, _WH, table=False),
+    Mode("distinct_over", _distinct_over, _WH, table=False),
+    Mode("quarantine_drift", _quarantine_drift, _WH, table=False),
+    Mode("compact_sketches", _compact_sketches, _WH, table=False),
+    Mode("compact_binlog", _compact_binlog, ("binlog",), table=False),
+    Mode("expire_binlog", _expire_binlog, ("binlog",), route=True),
+    Mode("pack_corpus", _pack_corpus),
+    Mode("export_snapshot", lambda run: {"export": run.table.export_snapshot(
+        run.args.export_snapshot, version=_version_or_tag(run.args.export_version))}),
+    Mode("bootstrap_snapshot", _bootstrap_snapshot, then=_tail_after_bootstrap,
+         check=_snapshot_position_known),
+    Mode("health", _health, _WH),
+    Mode("history", lambda run: run.table.history()),
+    Mode("stats", lambda run: run.table.stats()),
+    Mode("tag", _tag),
+    Mode("drop_tag", lambda run: _dropped(run.table.drop_tag, run.args.drop_tag)),
+    Mode("tags", lambda run: run.table.tags()),
+    Mode("create_branch", _create_branch),
+    Mode("publish_branch",
+         lambda run: run.table.publish_branch(run.args.publish_branch)),
+    Mode("drop_branch",
+         lambda run: _dropped(run.table.drop_branch, run.args.drop_branch)),
+    Mode("branches", lambda run: run.table.branches()),
+    Mode("dedup_index_stats", _dedup_index, _WH),
+    Mode("rebuild_dedup_index", _dedup_index, _WH),
+    Mode("bootstrap_dedup_index", _dedup_index, _WH),
+    Mode("lookup", lambda run: {"key": run.args.lookup,
+                                "rows": _rows(run.table.lookup(run.args.lookup))}),
+    Mode("scan_range", _scan_range),
+    # the maintenance group: any of these together, run in this order
+    # and printed as one {name: result} document
+    Mode("rollback", lambda run: run.table.rollback(
+        _version_or_tag(run.args.rollback)), group=_MAINT),
+    Mode("delete_where", lambda run: run.table.delete_where(run.args.delete_where),
+         group=_MAINT),
+    Mode("remap_vocab", _remap_vocab, group=_MAINT),
+    Mode("trim_dup_spans", _trim_dup_spans, group=_MAINT),
+    Mode("rebucket", lambda run: run.table.rebucket(run.args.rebucket), group=_MAINT),
+    Mode("compact", lambda run: run.table.compact(
+        max_buckets=run.args.compact_max_buckets), group=_MAINT),
+    Mode("create_view", _create_view, group=_MAINT),
+    Mode("refresh_view", _refresh_view, group=_MAINT),
+    Mode("rename_column", lambda run: run.table.rename_column(
+        *run.args.rename_column.split(":", 1)), group=_MAINT),
+    Mode("drop_column", lambda run: run.table.drop_column(run.args.drop_column),
+         group=_MAINT),
+    Mode("set_property", _set_property, group=_MAINT, key="properties"),
+    Mode("vacuum", _vacuum, group=_MAINT),
+    Mode("outbox", _outbox),
+    Mode("changes", _changes, ("out",)),
+    Mode("routes_status", _routes_status, ("route", "warehouse"), table=False,
+         route=True),
+    Mode("reprocess_unrouted", lambda run: _router(run).reprocess_unrouted(),
+         ("route", "warehouse"), table=False, route=True),
+    Mode("reprocess_quarantine", lambda run: _engine(run).reprocess_quarantine(),
+         _WH, then=_table_status),
+)
+TAIL = Mode(None, _tail, ("binlog", "checkpoint", "warehouse"), route=True)
+
+
+def _opt(dest: str) -> str:
+    return "--" + dest.replace("_", "-")
+
+
+def _chosen(ap: argparse.ArgumentParser, args) -> list[Mode]:
+    """The rows this run picks (one mode, or one group), checked
+    against the table; any miss is a usage error (exit 2)."""
+    # `is not`, not `in`: 0 == False, and --expire-binlog 0 picks its mode
+    picked = [(m, getattr(args, m.flag)) for m in MODES]
+    rows = [m for m, v in picked if v is not None and v is not False]
+    if len({m.group or m.flag for m in rows}) > 1:
+        ap.error(" and ".join(_opt(m.flag) for m in rows)
+                 + " are separate modes; run them one at a time")
+    rows = rows or [TAIL]
+    if args.route:
+        if not args.route_expr:
+            ap.error("--route-expr is required with --route")
+        if not all(m.route for m in rows):
+            ap.error("--route only composes with the tailing modes")
+        if any("=" not in r for r in args.route):
+            ap.error("--route takes NAME=TABLE_PATH")
+    elif any(m.table for m in rows) and not args.table:
+        ap.error("--table is required (except in --route mode)")
+    for m in rows:
+        missing = [_opt(n) for n in m.needs if not getattr(args, n)]
+        if missing:
+            ap.error(f"{'/'.join(missing)} required "
+                     + (f"with {_opt(m.flag)}" if m.flag else "when tailing"))
+        problem = m.check and m.check(args)
+        if problem:
+            ap.error(problem)
+    return rows
+
+
+def _results(run: _Run, rows: list[Mode]):
+    """The chosen rows' JSON documents, in print order; a ModeError
+    ends the run with an ``{"error": ...}`` document."""
+    try:
+        if rows[0].group:
+            yield {m.key or m.flag: m.run(run) for m in rows}
+        else:
+            yield rows[0].run(run)
+            if rows[0].then:
+                yield rows[0].then(run)
+    except ModeError as e:
+        run.exit_code = e.code
+        yield {"error": str(e)}
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = _parser()
+    args = ap.parse_args(argv)
+    if args.fileio:
+        os.environ["DEXSPARK_FILEIO"] = args.fileio
+    rows = _chosen(ap, args)
+
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.builder.appName("dexspark-cdc").getOrCreate()
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    run = _Run(args, spark)
+    for doc in _results(run, rows):
+        if doc is not None:
+            print(json.dumps(doc, default=str))
+    return run.exit_code
 
 
 if __name__ == "__main__":

@@ -1097,9 +1097,12 @@ class LakeTable:
         version: int,
         n_buckets: int | None = None,
         clustered: bool = False,
+        m: dict | None = None,
     ) -> dict[str, list[str]]:
         """Write ``df`` (which must carry ``_bucket``) under a fresh
         commit dir, one directory per bucket; return bucket -> relpaths.
+        ``m`` is the manifest the caller builds on (default: the head,
+        one more ``_snapshots/`` listing and read).
 
         The dir name carries a per-attempt nonce: a writer that crashed
         after writing data but before publishing its manifest leaves
@@ -1121,10 +1124,12 @@ class LakeTable:
         # per-bucket files — rewrite_payload), so shuffling the whole
         # table again would be pure waste; each task's rows span few
         # buckets and partitionBy's own per-task sort splits them.
+        if m is None:
+            m = self.manifest() if self.current_version() else {}
         if clustered:
             data = df
         else:
-            data = df.repartition(n_buckets or self.num_buckets, "_bucket")
+            data = df.repartition(n_buckets or m["num_buckets"], "_bucket")
         # Optional sort-on-write (table property, the Iceberg
         # write.sort-order idea): order rows by the merge key INSIDE
         # each bucket task so every parquet row group covers a narrow
@@ -1138,7 +1143,6 @@ class LakeTable:
         # doesn't satisfy that — which would destroy the key order.
         # Sorting (_bucket, key) satisfies the writer's requirement,
         # so it keeps our ordering and adds no extra sort.
-        m = self.manifest() if self.current_version() else {}
         props = m.get("properties", {}) or {}
         if props.get("sort_on_write"):
             data = data.sortWithinPartitions("_bucket", m["key"])
@@ -1172,7 +1176,9 @@ class LakeTable:
 
     # --------------------------------------------------- zone maps
 
-    def _file_bounds_of(self, written: dict[str, list[str]]) -> dict[str, list]:
+    def _file_bounds_of(
+        self, written: dict[str, list[str]], m: dict
+    ) -> dict[str, list]:
         """Per-file ``[min, max]`` of the merge key for just-written
         files, read from the parquet FOOTERS (driver-side, one small
         metadata read per file) — Iceberg's per-file column bounds in
@@ -1197,13 +1203,13 @@ class LakeTable:
         (``file_rows``, the Iceberg ``record_count`` manifest stat) —
         zero extra I/O — feeding :meth:`stats`: an exact ``count(*)``
         for clean tables costs one manifest read, no Spark job.
+        ``m`` is the manifest the caller builds on (key, properties).
         Returns ``(bounds, rows)``."""
         rows: dict[str, int] = {}
         try:
             import pyarrow.parquet as pq
         except ImportError:  # pragma: no cover
             return {}, rows
-        m = self.manifest() if self.current_version() else {}
         zone_maps = (m.get("properties") or {}).get("zone_maps") is not False
         key = m.get("key")
         out: dict[str, list] = {}
@@ -1264,8 +1270,8 @@ class LakeTable:
         data = self._bucket_col(
             self._align(df, schema, aliases=al), m["key"], m["num_buckets"]
         )
-        buckets = self._write_commit(data, version)
-        fb, fr = self._file_bounds_of(buckets)
+        buckets = self._write_commit(data, version, m=m)
+        fb, fr = self._file_bounds_of(buckets, m)
         epoch_fields = (
             _epoch_state
             if _epoch_state is not None
@@ -1510,8 +1516,8 @@ class LakeTable:
         survivors = self._bucket_col(self._align(survivors, schema), key, n_buckets)
         new_state = survivors.unionByName(ups)
 
-        written = self._write_commit(new_state, version)
-        new_bounds, new_rows = self._file_bounds_of(written)
+        written = self._write_commit(new_state, version, m=m)
+        new_bounds, new_rows = self._file_bounds_of(written, m)
         touched = [str(b) for b in affected]
 
         def rebuild(base: dict) -> dict:
@@ -1632,7 +1638,7 @@ class LakeTable:
         if delete_keys is not None:
             batch = batch.unionByName(delete_keys.select(*tomb_cols))
         batch = self._bucket_col(batch, key, n_buckets)
-        written = self._write_commit(batch, version)
+        written = self._write_commit(batch, version, m=m)
         if not written:  # empty change batch: manifest-only commit
             mm = self._publish_with_rebase(
                 m["version"], [], lambda base: self._noop_manifest(base, epochs)
@@ -1643,7 +1649,7 @@ class LakeTable:
                 "buckets_appended": 0,
             }
 
-        new_bounds, new_rows = self._file_bounds_of(written)
+        new_bounds, new_rows = self._file_bounds_of(written, m)
         touched = sorted(written)
 
         def rebuild(base: dict) -> dict:
@@ -1839,8 +1845,8 @@ class LakeTable:
         state = self.read(buckets=[int(b) for b in order])
         version = self._next_version(m)
         data = self._bucket_col(self._align(state, schema), m["key"], m["num_buckets"])
-        written = self._write_commit(data, version)
-        new_bounds, new_rows = self._file_bounds_of(written)
+        written = self._write_commit(data, version, m=m)
+        new_bounds, new_rows = self._file_bounds_of(written, m)
         touched = list(order)
 
         def rebuild(base: dict) -> dict:
@@ -1903,8 +1909,8 @@ class LakeTable:
         data = self._bucket_col(
             self._align(state, schema), m["key"], new_num_buckets
         )
-        written = self._write_commit(data, version, n_buckets=new_num_buckets)
-        fb, fr = self._file_bounds_of(written)
+        written = self._write_commit(data, version, n_buckets=new_num_buckets, m=m)
+        fb, fr = self._file_bounds_of(written, m)
         mm = dict(m)
         mm.update(
             version=version,
@@ -1970,8 +1976,8 @@ class LakeTable:
             state = state.withColumn(c, F.expr(e) if isinstance(e, str) else e)
         version = self._next_version(m)
         data = self._bucket_col(self._align(state, schema), m["key"], m["num_buckets"])
-        written = self._write_commit(data, version, clustered=True)
-        fb, fr = self._file_bounds_of(written)
+        written = self._write_commit(data, version, clustered=True, m=m)
+        fb, fr = self._file_bounds_of(written, m)
         mm = dict(m)
         mm.update(
             version=version,

@@ -51,22 +51,26 @@ def classify_listing(listing: DataFrame, pass_suffix: str = ".csv") -> DataFrame
 
 def validate_listing(spark: SparkSession, root: str) -> dict:
     """The interactive entry point: returns the report the reference's
-    HTTP function rendered (counts + per-status file lists capped for
-    driver safety). The example list is capped BEFORE aggregation with
-    a two-phase top-k: first the smallest 100 paths per (status, salt)
-    bucket — 256-way parallel, each task sorting a bounded slice —
-    then the smallest 100 of the <=25,600 survivors per status. No
+    HTTP function rendered (see :func:`listing_report`). One
+    listing/scan feeds BOTH the counts and the example sample — the
+    binaryFile listing is the expensive part on a millions-of-objects
+    container, so it must not run twice."""
+    return listing_report(
+        classify_listing(list_files(spark, root)).localCheckpoint(eager=True)
+    )
+
+
+def listing_report(classified: DataFrame) -> dict:
+    """Counts + per-status file lists of a classified listing, capped
+    for driver safety. The example list is capped BEFORE aggregation
+    with a two-phase top-k: first the smallest 100 paths per (status,
+    salt) bucket — 256-way parallel, each task sorting a bounded slice
+    — then the smallest 100 of the <=25,600 survivors per status. No
     executor ever sorts or buffers the full listing of a
     millions-of-objects container (a single status-partitioned window
     would funnel everything through 3 tasks)."""
     from pyspark.sql import Window
 
-    # One listing/scan feeds BOTH the counts and the example sample —
-    # the binaryFile listing is the expensive part on a
-    # millions-of-objects container, so it must not run twice.
-    classified = classify_listing(list_files(spark, root)).localCheckpoint(
-        eager=True
-    )
     counts = {
         r["status"]: r["n"]
         for r in classified.groupBy("status").agg(F.count("*").alias("n")).collect()

@@ -23,16 +23,6 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 UNREACHED = {
-    "dexspark.csv_ingest": (
-        "the reference's home domain (CSV file ingest + validation), "
-        "exercised by five test files; reaching it needs a CLI "
-        "sub-command, which belongs with the table-driven CLI rework"
-    ),
-    "dexspark.listing": (
-        "the reference's listing validation (its HTTP interactive "
-        "query), tested beside csv_ingest and waiting on the same CLI "
-        "sub-command"
-    ),
     "dexspark.xxh64": (
         "pure-Python mirror of Spark's xxhash64, the reference that "
         "tests/test_fim.py and tests/test_dsir.py compare the JVM against"
