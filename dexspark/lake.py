@@ -66,6 +66,31 @@ class ConcurrentCommitError(RuntimeError):
     pass
 
 
+# The fields a snapshot owns: a successor manifest starts from its
+# base's copies (see LakeTable._successor, which also normalizes the
+# epoch state and recomputes the mor* fields). Everything else in a
+# manifest describes ONE commit (version bookkeeping, the operation,
+# its touched buckets and its provenance: ``restored_from``,
+# ``branch``, ``fork_version``) and is never carried forward.
+_OWNED = (
+    "key",
+    "num_buckets",
+    "schema",
+    "columns_meta",
+    "evolution",
+    "properties",
+    "buckets",
+    "file_bounds",
+    "file_rows",
+    "commit_versions",
+)
+
+# Interveners every commit may rebase over (see
+# LakeTable._publish_with_rebase): compaction rewrites content-equal
+# files, the others change manifest metadata only.
+_CROSSABLE = ("compact", "merge-noop", "alter-properties", "rename-column")
+
+
 # Footer key under which Spark's parquet writer stores the row schema.
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
@@ -344,114 +369,197 @@ class LakeTable:
     # — data files are never rewritten.
     COMMIT_RETRIES = 3
 
-    def _publish_with_rebase(self, parent: int, touched, rebuild) -> dict:
-        """Commit ``rebuild(parent_manifest)``; on losing the
-        optimistic race, rebase onto the latest snapshot when every
+    def _publish_with_rebase(
+        self,
+        parent: int,
+        touched,
+        rebuild,
+        num_buckets: int | None = None,
+        head: dict | None = None,
+    ) -> dict:
+        """Commit ``rebuild(base)``, rebasing onto the latest snapshot
+        when other writers published since ``parent`` and every
         intervening commit is provably non-conflicting, else raise
-        :class:`ConcurrentCommitError`.
-
-        Bucket-level conflict detection (snapshot isolation, the
+        :class:`ConcurrentCommitError`. This is the table's one commit
+        walk: merges, compaction, epoch markers, metadata changes and
+        branch publishes all land through it (snapshot isolation, the
         Iceberg ``commit.retry`` + validation idea — at cluster scale
         the stream tailer races the compact/vacuum maintenance crons,
-        and without this the loser throws away a fully-written batch):
+        and without this the loser throws away a fully-written batch).
 
-        * ``compact`` and ``merge-noop`` interveners are state-identity
-          for every bucket: always safe to rebase over.
-        * ``merge-cow``/``merge-mor`` interveners are safe iff their
-          ``touched`` bucket set is disjoint from ours — our rewrite/
-          append was computed against a state of our buckets that is
-          still current.
-        * ``rebucket``/``overwrite`` (and legacy commits without a
-          ``touched`` field) invalidate the written files: raise, the
-          caller must re-run the merge.
+        ``touched`` are the buckets this commit rewrites or appends
+        to, ``num_buckets`` the bucket space its files were written in
+        (None when it wrote none). The interveners, found by walking
+        parent pointers back to ``parent``, pass one conflict table:
 
-        ``rebuild(base)`` returns a manifest built on ``base``,
-        re-applying the caller's bucket deltas and epoch state; the
-        first attempt is ``rebuild(manifest(parent))`` so all manifest
-        construction lives in one place."""
-        ours = set(touched)
-        mm = rebuild(self.manifest(parent))
+        * ``compact``, ``merge-noop``, ``alter-properties`` and
+          ``rename-column`` are always crossed: compaction rewrites
+          content-equal files, the others change manifest metadata
+          only (a rebuilt merge maps a renamed column's old name
+          through the base's aliases).
+        * ``merge-cow``, ``merge-mor`` and ``publish`` are crossed iff
+          their touched buckets are disjoint from ours AND their
+          ``num_buckets`` is the bucket space our files were written
+          in: a bucket id means nothing across bucket spaces.
+        * Anything else raises — ``overwrite``, ``bootstrap``,
+          ``rebucket``, ``rewrite-payload``, ``rollback``,
+          ``drop-column``, a commit without ``touched`` — as does an
+          intervener vacuum already expired (it cannot be checked).
+          The written files are stale; the caller must re-run.
+
+        ``rebuild(base)`` returns the manifest to commit on ``base``
+        (built by :meth:`_successor`) and may itself refuse a base.
+        The first base is ``head`` when given (a branch publish, whose
+        parent is its fork point: the walk then runs before the first
+        put), else ``parent``'s snapshot. The table-wide rewrites
+        (``overwrite``, ``rebucket``, ``rewrite-payload``,
+        ``rollback``) commit once and never rebase."""
+        ours = {str(b) for b in touched}
+        base = self.manifest(parent) if head is None else head
         for attempt in range(self.COMMIT_RETRIES + 1):
+            # walk PARENT pointers, not a dense range: versions are
+            # unique but not contiguous (publish raises the hwm)
+            v = base["version"]
+            while v > parent:
+                try:
+                    mi = self.manifest(v)
+                except FileNotFoundError:
+                    raise ConcurrentCommitError(
+                        f"cannot rebase: intervening snapshot {v} expired"
+                    ) from None
+                op, t = mi.get("operation", ""), mi.get("touched")
+                if op not in _CROSSABLE and not (
+                    (op.startswith("merge-") or op == "publish")
+                    and t is not None
+                    and num_buckets in (None, mi.get("num_buckets"))
+                    and ours.isdisjoint(str(b) for b in t)
+                ):
+                    raise ConcurrentCommitError(
+                        f"cannot rebase over v{v} ({op or 'unknown'}): bucket "
+                        f"conflict, bucket-space change or table-wide rewrite"
+                    )
+                v = int(mi.get("parent", v - 1))
+            mm = rebuild(base)
             try:
                 self._commit(mm)
                 return mm
             except ConcurrentCommitError:
                 if attempt == self.COMMIT_RETRIES:
                     raise
-                latest = self.manifest()
-                # walk PARENT pointers, not a dense range: versions are
-                # unique but not contiguous (publish raises the hwm)
-                interveners = []
-                v = latest["version"]
-                while v > parent:
-                    try:
-                        mi = self.manifest(v)
-                    except FileNotFoundError:
-                        raise ConcurrentCommitError(
-                            f"cannot rebase: intervening snapshot {v} expired"
-                        ) from None
-                    interveners.append(mi)
-                    v = int(mi.get("parent", v - 1))
-                for mi in interveners:
-                    op = mi.get("operation", "")
-                    # state-identity commits for every bucket's DATA:
-                    # compact rewrites content-equal files, noop and
-                    # alter-properties touch only manifest metadata
-                    if op in ("compact", "merge-noop", "alter-properties"):
-                        continue
-                    t = mi.get("touched")
-                    # a branch publish records exactly the buckets it
-                    # overlaid, so like a merge it is safe to rebase
-                    # over iff those buckets are disjoint from ours
-                    if (
-                        (op.startswith("merge-") or op == "publish")
-                        and t is not None
-                        and ours.isdisjoint(str(b) for b in t)
-                    ):
-                        continue
-                    raise ConcurrentCommitError(
-                        f"cannot rebase merge over v{mi['version']} "
-                        f"({op or 'unknown'}: bucket conflict or table-wide rewrite)"
-                    ) from None
-                parent = latest["version"]
-                mm = rebuild(latest)
+            parent, base = base["version"], self.manifest()
         raise AssertionError("unreachable")
 
-    @staticmethod
-    def _map_commit_version(
-        cv: dict, written: dict, logical: int, buckets: dict | None = None
+    def _successor(
+        self,
+        base: dict,
+        operation: str,
+        touched: list | None,
+        *,
+        written: dict[str, list[str]] | None = None,
+        append: bool = False,
+        files: dict[str, list[str]] | None = None,
+        depth: dict[str, int] | None = None,
+        adds: dict | None = None,
+        epochs=None,
+        schema: T.StructType | None = None,
+        evolution: list[str] | None = None,
+        state: dict | None = None,
+        hwm: int = 0,
+        **fields,
     ) -> dict:
-        """Record ``logical`` as the commit version of ``written``'s
-        data dir when the dir NAME encodes a different (race-lost)
-        version — readers resolve merge order through this map. Entries
-        for dirs no longer referenced by ``buckets`` are dropped so the
-        map stays O(live rebased commits), which is O(races), not
-        O(history)."""
-        out = dict(cv)
-        for files in written.values():
-            d = files[0].split("/")[1]
-            if int(d.split("-")[1]) != logical:
-                out[d] = logical
-            break
-        if buckets is not None and out:
-            live = {rel.split("/")[1] for fs in buckets.values() for rel in fs}
-            out = {d: v for d, v in out.items() if d in live}
-        return out
+        """The manifest ``operation`` commits on ``base``: the one
+        place a successor snapshot is built.
 
-    def _noop_manifest(self, base: dict, epochs) -> dict:
-        """Manifest-only commit recording ``epochs`` (empty change
-        batch): no data changes, so it rebases over anything."""
-        mm = dict(base)
-        mm.pop("committed_epochs", None)
+        It carries forward only what a snapshot owns (``_OWNED``, the
+        epoch state and the per-bucket MOR depth, all taken from
+        ``state``: default ``base``, a rollback's target otherwise) and
+        sets the commit's own fields: ``version`` (one past ``base``'s
+        version high-water mark), ``version_hwm`` (raised to ``hwm``),
+        ``parent``, ``operation``, ``touched`` and the ``mor*`` fields.
+        ``epochs`` fold into the epoch state.
+
+        The bucket layout changes in one of three ways:
+
+        * ``touched=None``: a table-wide rewrite — ``written`` is the
+          whole new layout and every bucket is clean (``touched`` is
+          then left out: the commit conflicts with everything);
+        * ``append``: merge-on-read — ``written``'s files join their
+          buckets' lists, one more delta deep;
+        * otherwise each touched bucket's files become ``files``'
+          (default ``written``; absent: the bucket was emptied), at
+          MOR depth ``depth`` (absent: clean).
+
+        ``written`` are the files this commit wrote, under one commit
+        dir; when the dir's NAME carries another version than the
+        logical one (a rebased commit), ``commit_versions`` maps it,
+        and readers resolve merge order through that map. ``adds``
+        holds the ``file_bounds`` / ``file_rows`` / ``commit_versions``
+        entries of the files the layout gains; all three maps are
+        pruned to what the layout still references, so they stay
+        O(live files).
+
+        ``schema`` (already reconciled) replaces the schema and gives
+        brand-new columns their identity; ``evolution`` actions are
+        logged under the new version. ``fields`` are set last (``key``,
+        ``num_buckets``, ``properties``, ``columns_meta``, or the
+        commit's provenance)."""
+        src = base if state is None else state
         nv = self._next_version(base)
+        mm = {k: src[k] for k in _OWNED if k in src}
+        buckets = dict(src["buckets"])
+        morb = self._mor_buckets_of(src)
+        files = written if files is None else files
+        if touched is None:
+            buckets, morb = dict(files), {}
+        elif files is not None:
+            for b in map(str, touched):
+                if append:
+                    buckets[b] = buckets.get(b, []) + files[b]
+                    morb[b] = morb.get(b, 0) + 1
+                    continue
+                if files.get(b):
+                    buckets[b] = files[b]
+                else:
+                    buckets.pop(b, None)
+                if (depth or {}).get(b):
+                    morb[b] = depth[b]
+                else:
+                    morb.pop(b, None)
+        adds = dict(adds or {})
+        if written:
+            d = next(iter(written.values()))[0].split("/")[1]
+            if int(d.split("-")[1]) != nv:
+                adds["commit_versions"] = {**adds.get("commit_versions", {}), d: nv}
+        live = {rel for fs in buckets.values() for rel in fs}
+        dirs = {rel.split("/")[1] for rel in live}
+        for field, keep in (
+            ("file_bounds", live),
+            ("file_rows", live),
+            ("commit_versions", dirs),
+        ):
+            known = {**src.get(field, {}), **adds.get(field, {})}
+            mm[field] = {k: v for k, v in known.items() if k in keep}
+        if schema is not None:
+            mm["schema"] = schema.jsonValue()
+            mm["columns_meta"] = self._columns_meta_after(src, schema, nv)
+        if evolution:
+            mm["evolution"] = src.get("evolution", []) + [
+                {"version": nv, "actions": list(evolution)}
+            ]
         mm.update(
             version=nv,
-            version_hwm=nv,
+            version_hwm=max(nv, hwm),
             parent=base["version"],
-            operation="merge-noop",
-            touched=[],
-            **self._next_epoch_state(base, epochs),
+            operation=operation,
+            buckets=buckets,
+            mor=bool(morb),
+            mor_depth=max(morb.values(), default=0),
+            mor_buckets=morb,
+            **self._next_epoch_state(src, epochs),
         )
+        if touched is not None:
+            mm["touched"] = list(touched)
+        mm.update(fields)
         return mm
 
     # ------------------------------------------------------------ properties
@@ -932,7 +1040,7 @@ class LakeTable:
             rows = rows.coalesce(1)
         data = [_q(f.name) for f in schema.fields]
         # Tie-break within one commit: a key appearing in BOTH upserts
-        # and delete_keys of the same _merge_mor batch yields an upsert
+        # and delete_keys of the same merge-on-read batch yields an upsert
         # row and a tombstone with the same _commit. Order by
         # (commit, NOT tombstone) so the upsert deterministically wins
         # — matching the COW merge, where the upsert survives because
@@ -1204,15 +1312,17 @@ class LakeTable:
         zero extra I/O — feeding :meth:`stats`: an exact ``count(*)``
         for clean tables costs one manifest read, no Spark job.
         ``m`` is the manifest the caller builds on (key, properties).
-        Returns ``(bounds, rows)``."""
+        Returns the ``adds`` of :meth:`_successor`: ``file_bounds``
+        and ``file_rows`` of the written files."""
         rows: dict[str, int] = {}
+        out: dict[str, list] = {}
+        adds = {"file_bounds": out, "file_rows": rows}
         try:
             import pyarrow.parquet as pq
         except ImportError:  # pragma: no cover
-            return {}, rows
+            return adds
         zone_maps = (m.get("properties") or {}).get("zone_maps") is not False
         key = m.get("key")
-        out: dict[str, list] = {}
         for files in written.values():
             for rel in files:
                 try:
@@ -1236,20 +1346,7 @@ class LakeTable:
                         out[rel] = [mn, mx]
                 except (StopIteration, OSError, KeyError, TypeError):
                     continue
-        return out, rows
-
-    @staticmethod
-    def _merged_bounds(
-        base: dict, buckets: dict, new_bounds: dict, field: str = "file_bounds"
-    ) -> dict:
-        """Manifest per-file stat map (``file_bounds`` / ``file_rows``)
-        after a commit: prior entries plus the new files', pruned to
-        exactly the files ``buckets`` still references — stays O(live
-        files), same order as the buckets map itself."""
-        known = dict(base.get(field, {}))
-        known.update(new_bounds)
-        live = {rel for fs in buckets.values() for rel in fs}
-        return {rel: b for rel, b in known.items() if rel in live}
+        return adds
 
     def overwrite(
         self,
@@ -1270,36 +1367,25 @@ class LakeTable:
         data = self._bucket_col(
             self._align(df, schema, aliases=al), m["key"], m["num_buckets"]
         )
-        buckets = self._write_commit(data, version, m=m)
-        fb, fr = self._file_bounds_of(buckets, m)
-        epoch_fields = (
-            _epoch_state
-            if _epoch_state is not None
-            else self._next_epoch_state(m, epochs)
+        written = self._write_commit(data, version, m=m)
+        # a full overwrite replaces every data file: any pending
+        # merge-on-read history is gone with them, so reads must NOT
+        # pay (or worse, apply) the MOR reconstruction — an
+        # overwritten frame containing duplicate keys would be
+        # silently collapsed to one row per key instead of read back
+        # verbatim. A table-wide layout is clean (see _successor).
+        return self._commit(
+            self._successor(
+                m,
+                _operation,
+                None,
+                written=written,
+                adds=self._file_bounds_of(written, m),
+                epochs=epochs,
+                schema=schema,
+                **(_epoch_state or {}),
+            )
         )
-        m.pop("committed_epochs", None)
-        m.update(
-            version=version,
-            version_hwm=version,
-            parent=m["version"],
-            operation=_operation,
-            schema=schema.jsonValue(),
-            columns_meta=self._columns_meta_after(m, schema, version),
-            buckets=buckets,
-            file_bounds=fb,
-            file_rows=fr,
-            # a full overwrite replaces every data file: any pending
-            # merge-on-read history is gone with them, so reads must
-            # NOT pay (or worse, apply) the MOR reconstruction — an
-            # overwritten frame containing duplicate keys would be
-            # silently collapsed to one row per key instead of read
-            # back verbatim.
-            mor=False,
-            mor_depth=0,
-            mor_buckets={},
-            **epoch_fields,
-        )
-        return self._commit(m)
 
     def bootstrap(self, df: DataFrame, position: int) -> int:
         """Initial-snapshot load with a binlog-position handoff.
@@ -1400,7 +1486,9 @@ class LakeTable:
         parent = self.current_version()
         return int(
             self._publish_with_rebase(
-                parent, [], lambda base: self._noop_manifest(base, epochs)
+                parent,
+                [],
+                lambda base: self._successor(base, "merge-noop", [], epochs=epochs),
             )["version"]
         )
 
@@ -1446,24 +1534,102 @@ class LakeTable:
           change batch rewrites nothing instead of every touched
           bucket). Modes interleave freely commit-by-commit.
 
-        Returns {"version", "rows_written", "buckets_rewritten"}.
+        Both modes share the rest: the schema reconcile, the
+        manifest-only ``merge-noop`` commit of an empty batch, and one
+        rebuild on :meth:`_successor` that :meth:`_publish_with_rebase`
+        re-runs on the latest snapshot after a lost race.
+
+        Returns {"version", "buckets_rewritten" | "buckets_appended",
+        "evolution"} (``mor`` adds "mor_depth"); an empty batch
+        returns {"version", "rows_written": 0, ...: 0}.
         """
-        if mode == "mor":
-            return self._merge_mor(upserts, delete_keys, epochs)
         m = self.manifest()
-        key, n_buckets = m["key"], m["num_buckets"]
+        n_buckets = m["num_buckets"]
         old_schema = T.StructType.fromJson(m["schema"])
         al = self._aliases_of(m)
-        in_schema = upserts.schema
-        schema = reconcile(old_schema, in_schema, al)
-        evo = evolution_actions(old_schema, in_schema, al)
+        schema = reconcile(old_schema, upserts.schema, al)
+        evo = evolution_actions(old_schema, upserts.schema, al)
         version = self._next_version(m)
+        mor = mode == "mor"
+        if mor:
+            written = self._mor_write(m, upserts, delete_keys, schema, al, version)
+            touched, count = sorted(written), "buckets_appended"
+        else:
+            # the caller's bucket hint is only valid in THIS manifest's
+            # bucket space: a rebucket that landed after the caller
+            # computed it silently invalidates every id
+            hint = affected_buckets
+            if affected_buckets_nb not in (None, n_buckets):
+                hint = None
+            touched, written = self._cow_write(
+                m, upserts, delete_keys, schema, al, version, hint
+            )
+            count = "buckets_rewritten"
+        if not touched:  # empty change batch: a manifest-only commit
+            mm = self._publish_with_rebase(
+                m["version"],
+                [],
+                lambda base: self._successor(base, "merge-noop", [], epochs=epochs),
+            )
+            return {"version": mm["version"], "rows_written": 0, count: 0}
+        # corruption guard: every written bucket must be one we
+        # declared touched, or the manifest would silently drop the
+        # stray bucket's rows (possible only if the bucket hint was
+        # computed in a different bucket space — see the docs above)
+        stray = sorted(set(written) - set(touched))
+        if stray:
+            raise ConcurrentCommitError(
+                f"merge wrote buckets {stray} outside its declared "
+                f"touched set (stale affected_buckets hint after a "
+                f"concurrent rebucket?) — aborting instead of "
+                f"dropping their rows"
+            )
+        adds = self._file_bounds_of(written, m)
 
+        def rebuild(base: dict) -> dict:
+            # re-reconcile on the base: a rebase may cross another
+            # merge's additive evolution or a rename (old names map
+            # through the base's aliases)
+            al2 = self._aliases_of(base)
+            bschema = T.StructType.fromJson(base["schema"])
+            return self._successor(
+                base,
+                "merge-mor" if mor else "merge-cow",
+                touched,
+                written=written,
+                append=mor,
+                adds=adds,
+                epochs=epochs,
+                schema=reconcile(bschema, schema, al2),
+                evolution=evolution_actions(bschema, schema, al2),
+            )
+
+        mm = self._publish_with_rebase(m["version"], touched, rebuild, n_buckets)
+        out = {"version": mm["version"], count: len(touched), "evolution": evo}
+        if mor:
+            out["mor_depth"] = mm["mor_depth"]
+        return out
+
+    def _cow_write(
+        self,
+        m: dict,
+        upserts: DataFrame,
+        delete_keys: DataFrame | None,
+        schema: T.StructType,
+        al: dict,
+        version: int,
+        hint: list[int] | None,
+    ) -> tuple[list[str], dict[str, list[str]]]:
+        """Copy-on-write half of :meth:`merge`: rewrite every bucket
+        holding a changed key (survivors plus upserts) under a fresh
+        commit dir. Returns (touched buckets, written files); no
+        bucket is touched when the batch changes no key."""
+        key, n_buckets = m["key"], m["num_buckets"]
         ups_cols, del_cols = self._prep.get(
             "merge_cow",
-            (key, in_schema.json(), schema.json(), al),
+            (key, upserts.schema.json(), schema.json(), al),
             lambda: (
-                self._align_cols(in_schema.names, schema, aliases=al),
+                self._align_cols(upserts.schema.names, schema, aliases=al),
                 # cast to the table key type BEFORE hashing: xxhash64
                 # of an int and of the same value as long differ, so
                 # an unaligned delete frame would bucket to the wrong
@@ -1485,29 +1651,18 @@ class LakeTable:
         # and rewritten. The distinct-bucket list is tiny (<= num_buckets)
         # so collecting it to the driver is scale-safe. Callers that
         # already aggregated the change set (CdcEngine) pass the bucket
-        # list in, saving this job's round trip — but the hint is only
-        # valid in THIS manifest's bucket space: a rebucket that landed
-        # after the caller computed it silently invalidates every id.
-        if affected_buckets is not None and (
-            affected_buckets_nb is None or affected_buckets_nb == n_buckets
-        ):
-            affected = list(affected_buckets)
+        # list in, saving this job's round trip.
+        if hint is not None:
+            affected = list(hint)
         else:
             affected = [
                 r["_bucket"] for r in all_keys.select("_bucket").distinct().collect()
             ]
         if not affected:
-            mm = self._publish_with_rebase(
-                m["version"], [], lambda base: self._noop_manifest(base, epochs)
-            )
-            return {
-                "version": mm["version"],
-                "rows_written": 0,
-                "buckets_rewritten": 0,
-            }
+            return [], {}
 
         current = self._bucket_col(
-            self._align(self.read(buckets=affected), schema), key, n_buckets
+            self._align(self._snapshot(m, buckets=affected), schema), key, n_buckets
         )
         # Survivors: current rows of affected buckets whose key is NOT in
         # the change set. Anti-join on the key; AQE broadcasts the change
@@ -1515,69 +1670,38 @@ class LakeTable:
         survivors = current.join(all_keys.select(key), on=key, how="left_anti")
         survivors = self._bucket_col(self._align(survivors, schema), key, n_buckets)
         new_state = survivors.unionByName(ups)
+        return [str(b) for b in affected], self._write_commit(new_state, version, m=m)
 
-        written = self._write_commit(new_state, version, m=m)
-        new_bounds, new_rows = self._file_bounds_of(written, m)
-        touched = [str(b) for b in affected]
-
-        def rebuild(base: dict) -> dict:
-            logical = self._next_version(base)
-            # corruption guard: every written bucket must be one we
-            # declared touched, or the manifest would silently drop the
-            # stray bucket's rows (possible only if the bucket hint was
-            # computed in a different bucket space — see merge() docs)
-            stray = sorted(set(written) - set(touched))
-            if stray:
-                raise ConcurrentCommitError(
-                    f"merge wrote buckets {stray} outside its declared "
-                    f"touched set (stale affected_buckets hint after a "
-                    f"concurrent rebucket?) — aborting instead of "
-                    f"dropping their rows"
-                )
-            al2 = self._aliases_of(base)
-            schema2 = reconcile(T.StructType.fromJson(base["schema"]), schema, al2)
-            evo2 = evolution_actions(T.StructType.fromJson(base["schema"]), schema, al2)
-            buckets = dict(base["buckets"])
-            for bs in touched:
-                if bs in written:
-                    buckets[bs] = written[bs]
-                else:
-                    buckets.pop(bs, None)  # bucket emptied by deletes
-            # a COW rewrite materializes reconstructed state for its
-            # buckets: they leave the MOR set (reads go shuffle-free)
-            morb = self._mor_buckets_of(base)
-            for bs in touched:
-                morb.pop(bs, None)
-            mm = dict(base)
-            mm.pop("committed_epochs", None)
-            mm.update(
-                version=logical,
-                version_hwm=logical,
-                parent=base["version"],
-                operation="merge-cow",
-                mor=bool(morb),
-                mor_depth=max(morb.values(), default=0),
-                mor_buckets=morb,
-                schema=schema2.jsonValue(),
-                columns_meta=self._columns_meta_after(base, schema2, logical),
-                buckets=buckets,
-                file_bounds=self._merged_bounds(base, buckets, new_bounds),
-                file_rows=self._merged_bounds(base, buckets, new_rows, "file_rows"),
-                touched=touched,
-                commit_versions=self._map_commit_version(
-                    base.get("commit_versions", {}), written, logical, buckets
-                ),
-                evolution=base.get("evolution", []) + [{"version": logical, "actions": evo2}] if evo2 else base.get("evolution", []),
-                **self._next_epoch_state(base, epochs),
-            )
-            return mm
-
-        mm = self._publish_with_rebase(m["version"], touched, rebuild)
-        return {
-            "version": mm["version"],
-            "buckets_rewritten": len(touched),
-            "evolution": evo,
-        }
+    def _mor_write(
+        self,
+        m: dict,
+        upserts: DataFrame,
+        delete_keys: DataFrame | None,
+        schema: T.StructType,
+        al: dict,
+        version: int,
+    ) -> dict[str, list[str]]:
+        """Merge-on-read half of :meth:`merge`: append the change batch
+        (upserts + delete tombstones) as new bucket files under a
+        fresh commit dir; no existing file is read or rewritten.
+        Returns the written files (empty for an empty batch)."""
+        key = m["key"]
+        ups_cols, tomb_cols = self._prep.get(
+            "merge_mor",
+            (key, upserts.schema.json(), schema.json(), al),
+            lambda: (
+                self._align_cols(upserts.schema.names, schema, aliases=al)
+                + [F.lit(False).alias(_TOMBSTONE)],
+                # a tombstone row: the key, every other column null
+                self._align_cols([key], schema)
+                + [F.lit(True).alias(_TOMBSTONE)],
+            ),
+        )
+        batch = upserts.select(*ups_cols)
+        if delete_keys is not None:
+            batch = batch.unionByName(delete_keys.select(*tomb_cols))
+        batch = self._bucket_col(batch, key, m["num_buckets"])
+        return self._write_commit(batch, version, m=m)
 
     def delete_where(self, condition, mode: str = "mor") -> dict:
         """Predicate delete: remove every current row matching
@@ -1604,95 +1728,6 @@ class LakeTable:
         out = self.merge(empty, delete_keys=keys, mode=mode)
         out["keys_deleted"] = n
         return out
-
-    def _merge_mor(
-        self,
-        upserts: DataFrame,
-        delete_keys: DataFrame | None,
-        epochs: list[int] | None,
-    ) -> dict:
-        """Merge-on-read MERGE: append the change batch (upserts +
-        delete tombstones) as new bucket files; no existing file is
-        read or rewritten. See :meth:`merge` for when to pick this."""
-        m = self.manifest()
-        key, n_buckets = m["key"], m["num_buckets"]
-        old_schema = T.StructType.fromJson(m["schema"])
-        al = self._aliases_of(m)
-        in_schema = upserts.schema
-        schema = reconcile(old_schema, in_schema, al)
-        evo = evolution_actions(old_schema, in_schema, al)
-        version = self._next_version(m)
-
-        ups_cols, tomb_cols = self._prep.get(
-            "merge_mor",
-            (key, in_schema.json(), schema.json(), al),
-            lambda: (
-                self._align_cols(in_schema.names, schema, aliases=al)
-                + [F.lit(False).alias(_TOMBSTONE)],
-                # a tombstone row: the key, every other column null
-                self._align_cols([key], schema)
-                + [F.lit(True).alias(_TOMBSTONE)],
-            ),
-        )
-        batch = upserts.select(*ups_cols)
-        if delete_keys is not None:
-            batch = batch.unionByName(delete_keys.select(*tomb_cols))
-        batch = self._bucket_col(batch, key, n_buckets)
-        written = self._write_commit(batch, version, m=m)
-        if not written:  # empty change batch: manifest-only commit
-            mm = self._publish_with_rebase(
-                m["version"], [], lambda base: self._noop_manifest(base, epochs)
-            )
-            return {
-                "version": mm["version"],
-                "rows_written": 0,
-                "buckets_appended": 0,
-            }
-
-        new_bounds, new_rows = self._file_bounds_of(written, m)
-        touched = sorted(written)
-
-        def rebuild(base: dict) -> dict:
-            logical = self._next_version(base)
-            al2 = self._aliases_of(base)
-            schema2 = reconcile(T.StructType.fromJson(base["schema"]), schema, al2)
-            evo2 = evolution_actions(T.StructType.fromJson(base["schema"]), schema, al2)
-            buckets = dict(base["buckets"])
-            morb = self._mor_buckets_of(base)
-            for b, files in written.items():
-                buckets[b] = buckets.get(b, []) + files
-                morb[b] = morb.get(b, 0) + 1
-            mm = dict(base)
-            mm.pop("committed_epochs", None)
-            mm.update(
-                version=logical,
-                version_hwm=logical,
-                parent=base["version"],
-                operation="merge-mor",
-                schema=schema2.jsonValue(),
-                columns_meta=self._columns_meta_after(base, schema2, logical),
-                buckets=buckets,
-                file_bounds=self._merged_bounds(base, buckets, new_bounds),
-                file_rows=self._merged_bounds(base, buckets, new_rows, "file_rows"),
-                mor=True,
-                mor_depth=max(morb.values(), default=0),
-                mor_buckets=morb,
-                touched=touched,
-                commit_versions=self._map_commit_version(
-                    base.get("commit_versions", {}), written, logical, buckets
-                ),
-                evolution=base.get("evolution", []) + [{"version": logical, "actions": evo2}] if evo2 else base.get("evolution", []),
-                **self._next_epoch_state(base, epochs),
-            )
-            return mm
-
-        mm = self._publish_with_rebase(m["version"], touched, rebuild)
-        return {
-            "version": mm["version"],
-            "buckets_appended": len(written),
-            "mor_depth": mm["mor_depth"],
-            "evolution": evo,
-        }
 
     # Safe default orphan age: a commit dir younger than this is
     # assumed to belong to an IN-FLIGHT writer (data written, manifest
@@ -1842,43 +1877,20 @@ class LakeTable:
             return {"version": m["version"], "compacted": False}
         schema = T.StructType.fromJson(m["schema"])
         # MOR reconstruction over ONLY the candidate buckets' files
-        state = self.read(buckets=[int(b) for b in order])
+        state = self._snapshot(m, buckets=[int(b) for b in order])
         version = self._next_version(m)
         data = self._bucket_col(self._align(state, schema), m["key"], m["num_buckets"])
         written = self._write_commit(data, version, m=m)
-        new_bounds, new_rows = self._file_bounds_of(written, m)
+        adds = self._file_bounds_of(written, m)
         touched = list(order)
-
-        def rebuild(base: dict) -> dict:
-            logical = self._next_version(base)
-            bmap = dict(base["buckets"])
-            bmorb = self._mor_buckets_of(base)
-            for b in touched:
-                if b in written:
-                    bmap[b] = written[b]
-                else:
-                    bmap.pop(b, None)  # bucket fully tombstoned away
-                bmorb.pop(b, None)
-            mm = dict(base)
-            mm.update(
-                version=logical,
-                version_hwm=logical,
-                parent=base["version"],
-                operation="compact",
-                buckets=bmap,
-                file_bounds=self._merged_bounds(base, bmap, new_bounds),
-                file_rows=self._merged_bounds(base, bmap, new_rows, "file_rows"),
-                mor=bool(bmorb),
-                mor_depth=max(bmorb.values(), default=0),
-                mor_buckets=bmorb,
-                touched=touched,
-                commit_versions=self._map_commit_version(
-                    base.get("commit_versions", {}), written, logical, bmap
-                ),
-            )
-            return mm
-
-        mm = self._publish_with_rebase(m["version"], touched, rebuild)
+        mm = self._publish_with_rebase(
+            m["version"],
+            touched,
+            lambda base: self._successor(
+                base, "compact", touched, written=written, adds=adds
+            ),
+            m["num_buckets"],
+        )
         return {
             "version": mm["version"],
             "compacted": True,
@@ -1904,28 +1916,22 @@ class LakeTable:
         if new_num_buckets == m["num_buckets"]:
             return {"version": m["version"], "rebucketed": False}
         schema = T.StructType.fromJson(m["schema"])
-        state = self.read()
+        state = self._snapshot(m)
         version = self._next_version(m)
         data = self._bucket_col(
             self._align(state, schema), m["key"], new_num_buckets
         )
         written = self._write_commit(data, version, n_buckets=new_num_buckets, m=m)
-        fb, fr = self._file_bounds_of(written, m)
-        mm = dict(m)
-        mm.update(
-            version=version,
-            version_hwm=version,
-            parent=m["version"],
-            operation="rebucket",
-            num_buckets=new_num_buckets,
-            buckets=written,
-            file_bounds=fb,
-            file_rows=fr,
-            mor=False,
-            mor_depth=0,
-            mor_buckets={},
+        self._commit(
+            self._successor(
+                m,
+                "rebucket",
+                None,
+                written=written,
+                adds=self._file_bounds_of(written, m),
+                num_buckets=new_num_buckets,
+            )
         )
-        self._commit(mm)
         return {
             "version": version,
             "rebucketed": True,
@@ -1971,27 +1977,21 @@ class LakeTable:
         unknown = set(exprs) - names
         if unknown:
             raise ValueError(f"unknown columns: {sorted(unknown)}")
-        state = self.read()
+        state = self._snapshot(m)
         for c, e in exprs.items():
             state = state.withColumn(c, F.expr(e) if isinstance(e, str) else e)
         version = self._next_version(m)
         data = self._bucket_col(self._align(state, schema), m["key"], m["num_buckets"])
         written = self._write_commit(data, version, clustered=True, m=m)
-        fb, fr = self._file_bounds_of(written, m)
-        mm = dict(m)
-        mm.update(
-            version=version,
-            version_hwm=version,
-            parent=m["version"],
-            operation="rewrite-payload",
-            buckets=written,
-            file_bounds=fb,
-            file_rows=fr,
-            mor=False,
-            mor_depth=0,
-            mor_buckets={},
+        self._commit(
+            self._successor(
+                m,
+                "rewrite-payload",
+                None,
+                written=written,
+                adds=self._file_bounds_of(written, m),
+            )
         )
-        self._commit(mm)
         return {
             "version": version,
             "rewritten_columns": sorted(exprs),
@@ -2021,17 +2021,7 @@ class LakeTable:
                     merged.pop(k, None)
                 else:
                     merged[k] = v
-            mm = dict(base)
-            nv = self._next_version(base)
-            mm.update(
-                version=nv,
-                version_hwm=nv,
-                parent=base["version"],
-                operation="alter-properties",
-                properties=merged,
-                touched=[],
-            )
-            return mm
+            return self._successor(base, "alter-properties", [], properties=merged)
 
         mm = self._publish_with_rebase(m["version"], [], rebuild)
         return {"version": mm["version"], "properties": mm["properties"]}
@@ -2077,21 +2067,15 @@ class LakeTable:
             entry = cm.pop(old_c, {"added_at": 0, "aliases": []})
             entry["aliases"] = sorted(set(entry.get("aliases", [])) | {old_c})
             cm[new] = entry
-            nv = self._next_version(base)
-            mm = dict(base)
-            mm.update(
-                version=nv,
-                version_hwm=nv,
-                parent=base["version"],
-                operation="rename-column",
-                schema=T.StructType(fields).jsonValue(),
+            return self._successor(
+                base,
+                "rename-column",
+                [],
+                schema=T.StructType(fields),
+                evolution=[f"rename {old_c} -> {new}"],
                 columns_meta=cm,
                 key=(new if base["key"] == old_c else base["key"]),
-                evolution=base.get("evolution", [])
-                + [{"version": nv, "actions": [f"rename {old_c} -> {new}"]}],
-                touched=[],
             )
-            return mm
 
         mm = self._publish_with_rebase(m["version"], [], rebuild)
         return {"version": mm["version"], "key": mm["key"]}
@@ -2118,22 +2102,14 @@ class LakeTable:
                 for k, v in (base.get("columns_meta") or {}).items()
                 if k != c
             }
-            nv = self._next_version(base)
-            mm = dict(base)
-            mm.update(
-                version=nv,
-                version_hwm=nv,
-                parent=base["version"],
-                operation="drop-column",
-                schema=T.StructType(
-                    [f for f in bschema.fields if f.name != c]
-                ).jsonValue(),
+            return self._successor(
+                base,
+                "drop-column",
+                [],
+                schema=T.StructType([f for f in bschema.fields if f.name != c]),
+                evolution=[f"drop column {c}"],
                 columns_meta=cm,
-                evolution=base.get("evolution", [])
-                + [{"version": nv, "actions": [f"drop column {c}"]}],
-                touched=[],
             )
-            return mm
 
         mm = self._publish_with_rebase(m["version"], [], rebuild)
         return {"version": mm["version"]}
@@ -2177,20 +2153,16 @@ class LakeTable:
                 "noop": True,
             }
         target = self.manifest(version)  # raises if expired
-        mm = dict(target)
-        mm.pop("committed_epochs", None)
-        nv = self._next_version(head)
-        mm.update(
-            version=nv,
-            version_hwm=nv,
-            parent=head["version"],
-            operation="rollback",
-            restored_from=version,
-            touched=sorted(
+        mm = self._successor(
+            head,
+            "rollback",
+            sorted(
                 int(b)
                 for b in set(head["buckets"]) | set(target["buckets"])
                 if head["buckets"].get(b) != target["buckets"].get(b)
             ),
+            state=target,
+            restored_from=version,
         )
         self._commit(mm)
         return {
@@ -2351,25 +2323,23 @@ class LakeTable:
         conditional put that exposes its data. Nothing is rewritten:
         the branch's files are already in the shared data directory.
 
-        Main may have MOVED since the fork: publish rebases over any
-        intervening commit that is data-identity (``compact``,
-        ``merge-noop``, ``alter-properties`` — main's latest
-        properties win) or a merge whose touched buckets are DISJOINT
-        from the buckets the branch changed — the published manifest
-        then overlays exactly the branch-owned buckets (with their MOR
-        state, zone maps and row counts) onto main's head, reconciles
-        the schemas additively, and folds the branch's staged epochs
-        into main's watermark. Live traffic in other buckets is never
-        lost, which is what makes WAP usable on a busy table — and a
-        publish that loses the conditional put to a non-conflicting
-        commit retries with the same optimistic budget as merges
-        (another branch's disjoint publish rebases the same way). A
-        conflicting intervener (same-bucket merge or publish,
-        rebucket, overwrite, rollback — or the branch itself changed
-        the bucket count) still refuses: the audited state was
-        computed against data that changed under it — re-stage. The
-        branch is left in place (re-publishable, inspectable);
-        ``drop_branch`` when done."""
+        Main may have MOVED since the fork: the publish commits through
+        :meth:`_publish_with_rebase` with the fork as its parent and
+        the buckets the branch changed as its touched set, so it
+        crosses exactly the interveners a merge crosses (that method's
+        docstring holds the table; a branch that changed the bucket
+        count crosses no merge or publish). The published manifest
+        then overlays the branch-owned buckets (with their MOR state,
+        zone maps and row counts) onto main's head, reconciles the
+        schemas additively (main's latest properties win), and folds
+        the branch's staged epochs into main's watermark. Live traffic
+        in other buckets is never lost, which is what makes WAP usable
+        on a busy table. A conflicting intervener refuses: the audited
+        state was computed against data that changed under it —
+        re-stage. Branch-side renames or drops publish only as a
+        fast-forward (main unmoved since the fork). The branch is left
+        in place (re-publishable, inspectable); ``drop_branch`` when
+        done."""
         if self.branch is not None:
             raise ValueError("publish_branch must run on the main table")
         ref = json.loads(self.io.read_text(self._branch_ref_path(name)))
@@ -2391,9 +2361,9 @@ class LakeTable:
             for b in set(bhead["buckets"]) | set(fork_m["buckets"])
             if bhead["buckets"].get(b) != fork_m["buckets"].get(b)
         }
-        # a branch-side bucket-count change makes the bucket spaces
-        # incomparable: only a fast-forward (untouched main) is safe
-        space_changed = bhead.get("num_buckets") != fork_m.get("num_buckets")
+        files = {b: bhead["buckets"][b] for b in owned if b in bhead["buckets"]}
+        bmorb = self._mor_buckets_of(bhead)
+        touched = sorted(int(b) for b in owned)
         # staged epochs relative to the fork (over-approximation is
         # fine: _next_epoch_state is idempotent for already-committed
         # epochs; the spans are O(staged batches + reorder window))
@@ -2403,81 +2373,30 @@ class LakeTable:
         bbase = int(bhead.get("epoch_base", -1))
         staged = set(range(fw + 1, bw + 1)) | set(btail)
         staged |= set(range(bbase + 1, fbase + 1))
+        bschema = T.StructType.fromJson(bhead["schema"])
         # Branch-side column-identity changes (rename/drop) cannot be
         # merged into a moved main by name-based reconcile — head still
-        # has the old column, so the renamed one would duplicate. They
-        # publish only as a FAST-FORWARD (main unmoved since fork:
-        # adopt the branch schema wholesale); otherwise refuse with a
-        # re-stage error. Main-side renames under an unrenamed branch
-        # need no policy: head's aliases map the branch's old names.
-        fork_fields = {
-            f.name for f in T.StructType.fromJson(fork_m["schema"]).fields
-        }
-        b_fields = {f.name for f in T.StructType.fromJson(bhead["schema"]).fields}
+        # has the old column, so the renamed one would duplicate.
+        # Main-side renames under an unrenamed branch need no policy:
+        # head's aliases map the branch's old names.
+        fork_names = T.StructType.fromJson(fork_m["schema"]).names
         identity_changed = bool(
             self._aliases_of(bhead) != self._aliases_of(fork_m)
-            or (fork_fields - b_fields)
+            or set(fork_names) - set(bschema.names)
         )
-        # optimistic retry, same budget as merges: losing the put to a
-        # non-conflicting commit (the tailer merging another bucket)
-        # re-reads main and rebuilds — the rebase is manifest-only
-        for attempt in range(self.COMMIT_RETRIES + 1):
-            head = self.manifest()
-            interveners = []
-            v = head["version"]
-            while v > fork:  # parent-pointer walk: versions are not dense
-                mi = self.manifest(v)
-                interveners.append(mi)
-                v = int(mi.get("parent", v - 1))
-            for mi in interveners:
-                op = mi.get("operation", "")
-                if op in (
-                    "compact",
-                    "merge-noop",
-                    "alter-properties",
-                    # a main-side RENAME is metadata-only and the
-                    # publish reconcile maps the branch's old names
-                    # through head's aliases; a main-side DROP stays a
-                    # conflict — re-adding the column from the branch
-                    # side would resurrect main's dropped bytes
-                    "rename-column",
-                ):
-                    continue
-                t = mi.get("touched")
-                if (
-                    # another branch's publish records exactly its
-                    # overlaid buckets, so like a merge it conflicts
-                    # iff it touched one of ours (and kept the bucket
-                    # space unchanged)
-                    (op.startswith("merge-") or op == "publish")
-                    and t is not None
-                    and not space_changed
-                    and mi.get("num_buckets") == fork_m.get("num_buckets")
-                    and owned.isdisjoint(str(b) for b in t)
-                ):
-                    continue
-                raise ConcurrentCommitError(
-                    f"cannot publish branch {name!r}: main's "
-                    f"v{mi['version']} ({op or 'unknown'}) conflicts with "
-                    f"the staged buckets — the audited state is stale; "
-                    f"re-stage the branch"
-                )
-            # merged state: main head + the branch's owned buckets
+
+        def rebuild(head: dict) -> dict:
             if head["version"] == fork:
                 # fast-forward: adopt the branch schema + column
                 # identity wholesale (covers branch-side rename/drop)
-                schema = T.StructType.fromJson(bhead["schema"])
+                schema, key = bschema, bhead["key"]
                 evo = [
                     a
                     for e in bhead.get("evolution", [])
                     if int(e["version"]) > fork
                     for a in e.get("actions", [])
                 ]
-                pcm = {
-                    k: dict(v)
-                    for k, v in (bhead.get("columns_meta") or {}).items()
-                }
-                pkey = bhead["key"]
+                cm = bhead.get("columns_meta") or {}
             elif identity_changed:
                 raise ConcurrentCommitError(
                     f"cannot publish branch {name!r}: it renamed or "
@@ -2486,103 +2405,59 @@ class LakeTable:
                     f"branch from main's head)"
                 )
             else:
+                hschema = T.StructType.fromJson(head["schema"])
                 pal = {**self._aliases_of(head), **self._aliases_of(bhead)}
-                schema = reconcile(
-                    T.StructType.fromJson(head["schema"]),
-                    T.StructType.fromJson(bhead["schema"]),
-                    pal,
-                )
-                evo = evolution_actions(
-                    T.StructType.fromJson(head["schema"]),
-                    T.StructType.fromJson(bhead["schema"]),
-                    pal,
-                )
+                schema = reconcile(hschema, bschema, pal)
+                evo = evolution_actions(hschema, bschema, pal)
                 # column identity: main's entries win; branch-added
                 # columns keep the added_at of their branch commit
                 # (their data dirs carry branch-local version numbers)
-                pcm = {
-                    k: dict(v)
+                cm = {
+                    k: v
                     for k, v in {
                         **(bhead.get("columns_meta") or {}),
                         **(head.get("columns_meta") or {}),
                     }.items()
-                    if k in {f.name for f in schema.fields}
+                    if k in schema.names
                 }
-                pkey = head["key"]
-            buckets = dict(head["buckets"])
-            morb = self._mor_buckets_of(head)
-            bmorb = self._mor_buckets_of(bhead)
-            for b in owned:
-                if b in bhead["buckets"]:
-                    buckets[b] = bhead["buckets"][b]
-                else:
-                    buckets.pop(b, None)
-                if b in bmorb:
-                    morb[b] = bmorb[b]
-                else:
-                    morb.pop(b, None)
-            live = {rel.split("/")[1] for fs in buckets.values() for rel in fs}
-            cv = {
-                d: v
-                for d, v in {
-                    **head.get("commit_versions", {}),
-                    **bhead.get("commit_versions", {}),
-                }.items()
-                if d in live
-            }
-            # the publish allocates DENSELY from head (same next number
+                key = head["key"]
+            # the publish allocates DENSELY from head (the next number
             # every concurrent writer derives, so the conditional put
             # serializes them) and raises the version high-water mark
             # past the branch-local version space: branch data dirs
             # carry their branch-local version numbers in their names
             # (MOR merge order within a bucket resolves through those),
-            # so no later commit may reuse one of them — future
-            # allocations skip the range, making version numbers unique
-            # but not dense; readers walk parent pointers, never assume
-            # v-1 exists
-            nv = self._next_version(head)
-            mm = dict(head)
-            mm.pop("committed_epochs", None)
-            mm.update(
-                version=nv,
-                version_hwm=max(nv, bhead_v),
-                parent=head["version"],
-                operation="publish",
+            # so no later commit may reuse one of them
+            return self._successor(
+                head,
+                "publish",
+                touched,
+                files=files,
+                depth={b: bmorb[b] for b in files if b in bmorb},
+                adds={
+                    k: bhead.get(k, {})
+                    for k in ("file_bounds", "file_rows", "commit_versions")
+                },
+                epochs=sorted(staged),
+                schema=schema,
+                evolution=evo,
+                hwm=bhead_v,
+                key=key,
+                columns_meta={k: dict(v) for k, v in cm.items()},
+                num_buckets=bhead["num_buckets"],
                 branch=name,
                 fork_version=fork,
-                key=pkey,
-                schema=schema.jsonValue(),
-                columns_meta=pcm,
-                buckets=buckets,
-                num_buckets=bhead["num_buckets"],
-                mor=bool(morb),
-                mor_depth=max(morb.values(), default=0),
-                mor_buckets=morb,
-                file_bounds=self._merged_bounds(
-                    head, buckets, bhead.get("file_bounds", {})
-                ),
-                file_rows=self._merged_bounds(
-                    head, buckets, bhead.get("file_rows", {}), "file_rows"
-                ),
-                commit_versions=cv,
-                evolution=head.get("evolution", [])
-                + ([{"version": nv, "actions": evo}] if evo else []),
-                touched=sorted(int(b) for b in owned),
-                **self._next_epoch_state(head, sorted(staged)),
             )
-            try:
-                self._commit(mm)
-            except ConcurrentCommitError:
-                if attempt == self.COMMIT_RETRIES:
-                    raise
-                continue
-            return {
-                "version": mm["version"],
-                "branch": name,
-                "published_from": bhead_v,
-                "noop": False,
-            }
-        raise AssertionError("unreachable")
+
+        mm = self._publish_with_rebase(
+            fork, touched, rebuild, bhead["num_buckets"], head=self.manifest()
+        )
+        return {
+            "version": mm["version"],
+            "branch": name,
+            "published_from": bhead_v,
+            "noop": False,
+        }
 
     # ------------------------------------------------------------ changelog
 

@@ -247,6 +247,7 @@ def pack_best_fit(
     pieces = short_docs.select(
         F.col(id_col).cast("string").alias("doc_id"),
         F.coalesce(F.col(tokens_col), F.array()).alias("tokens"),
+        F.lit(0).alias("chunk_idx"),
     )
     # always union the (possibly empty) chunked side: the filter
     # prunes it at scan time, and skipping a driver-side isEmpty()
@@ -256,13 +257,16 @@ def pack_best_fit(
     ).select(
         F.col(id_col).cast("string").alias("doc_id"),
         F.col(tokens_col).alias("tokens"),
+        "chunk_idx",
     )
     pieces = pieces.unionByName(chunked)
     if sort_within_partitions:
-        # decreasing length = the "D" in FFD; doc_id breaks ties so
-        # the order (hence the packing) is deterministic
+        # decreasing length = the "D" in FFD; (doc_id, chunk_idx)
+        # break ties, so the order (hence the packing) is
+        # deterministic and equal-length chunks of one document pack
+        # in chunk order
         pieces = pieces.sortWithinPartitions(
-            F.size("tokens").desc(), "doc_id"
+            F.size("tokens").desc(), "doc_id", "chunk_idx"
         )
 
     def pack_batchwise(batches: Iterator) -> Iterator:
@@ -282,7 +286,8 @@ def pack_best_fit(
             flat = tokens.values.to_numpy(zero_copy_only=False).astype(np.int64)
             offs = np.asarray(tokens.offsets).astype(np.int64)
             lens = (offs[1:] - offs[:-1]) + per_doc
-            # stable sort keeps the upstream doc_id tiebreak binding
+            # stable sort keeps the upstream (doc_id, chunk_idx)
+            # tiebreak binding
             order = np.argsort(-lens, kind="stable")
             bins: list[list] = []  # [remaining, [row_idx, ...]]
             for i in order:

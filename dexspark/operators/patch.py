@@ -37,7 +37,7 @@ pipeline: rules judge the post-image, not the fragment
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F, types as T
 
 FIELDS_COL = "fields"
 EPOCH_COL = "batch_epoch"
@@ -118,7 +118,7 @@ def compose_events(
     return composed.select(*cols)
 
 
-def resolve_patch_batch(table, events: DataFrame, schema=None) -> dict:
+def resolve_patch_batch(table, events: DataFrame, schema=None, head=None) -> dict:
     """Compose one batch of patch events per key and resolve them
     against the table's current rows.
 
@@ -136,20 +136,24 @@ def resolve_patch_batch(table, events: DataFrame, schema=None) -> dict:
     read null for them) and the merge evolves the table additively.
     Default: the table's current schema.
 
+    ``head``: the table manifest to resolve against (default: the
+    table's head, read once here).
+
     Returns ``{"ups", "dels", "touched", "num_buckets", "n_dels"}``:
     full post-image upsert rows (one per surviving key), delete keys,
     the affected-bucket hint for :meth:`LakeTable.merge`, and the
     number of delete keys (observed on the checkpoint that
     materializes the resolution, so counting them runs no job).
     """
-    key = table.key
-    schema = schema or table.schema
+    m = table.manifest() if head is None else head
+    key = m["key"]
+    schema = schema or T.StructType.fromJson(m["schema"])
     data_cols = [f.name for f in schema.fields if f.name != key]
     composed = compose_events(events, key, data_cols)
     has_epoch = EPOCH_COL in composed.columns
 
     # resolve against current rows, reading only the affected buckets
-    nb = table.num_buckets
+    nb = m["num_buckets"]
     touched = [
         r["_bucket"]
         for r in table._bucket_col(composed.select(key), key, nb)
@@ -157,7 +161,7 @@ def resolve_patch_batch(table, events: DataFrame, schema=None) -> dict:
         .distinct()
         .collect()
     ]
-    old = table._align(table.read(buckets=touched), schema).join(
+    old = table._align(table._snapshot(m, buckets=touched), schema).join(
         composed.select(key), key, "left_semi"
     )
     old = old.select(key, *[F.col(c).alias(f"_old_{c}") for c in data_cols])

@@ -588,7 +588,7 @@ class CdcEngine:
 
     # ------------------------------------------------------------ one batch
 
-    def _fresh_epoch_filter(self) -> F.Column:
+    def _fresh_epoch_filter(self, head: dict | None = None) -> F.Column:
         """Already-committed filter, O(1)-sized for any stream
         lifetime: the committed set is exactly (base, watermark] | tail
         (see apply_batch's commentary). Epochs AT OR BELOW the seeded
@@ -598,9 +598,10 @@ class CdcEngine:
         filter would drop). Negative epochs are kept too: they are
         never committed as markers (the watermark space is
         non-negative; negatives are the quarantine's fallback partition
-        namespace), so a watermark comparison must not swallow them."""
-        watermark, tail = self.table.epoch_state()
-        base = self.table.epoch_base()
+        namespace), so a watermark comparison must not swallow them.
+        ``head``: the manifest whose epochs count as committed
+        (default: the table's head)."""
+        base, watermark, tail = self._epoch_state(head)
         if watermark < 0 and not tail:
             return F.lit(True)
         e = F.col("batch_epoch")
@@ -609,15 +610,22 @@ class CdcEngine:
             committed = committed | e.isin(tail)
         return e.isNull() | (e < 0) | ~committed
 
-    def _already_committed_filtered(self, extra_epochs) -> set[int]:
-        """The non-negative ``extra_epochs`` not yet committed on this
-        table: a redelivered extra that is already marked must not fold
-        back in (harmless for state, but it would trigger a pointless
-        noop commit when the route's own batch slice is empty)."""
+    def _epoch_state(self, head: dict | None) -> tuple[int, int, list[int]]:
+        """(base, watermark, tail) of ``head`` (default: the table's
+        head): the committed epochs are (base, watermark] | tail."""
+        m = self.table.manifest() if head is None else head
+        w, tail = LakeTable._epoch_state_of(m)
+        return int(m.get("epoch_base", -1)), w, tail
+
+    def _already_committed_filtered(self, extra_epochs, head: dict) -> set[int]:
+        """The non-negative ``extra_epochs`` not yet committed in
+        ``head``: a redelivered extra that is already marked must not
+        fold back in (harmless for state, but it would trigger a
+        pointless noop commit when the route's own batch slice is
+        empty)."""
         if not extra_epochs:
             return set()
-        w, tail = self.table.epoch_state()
-        base = self.table.epoch_base()
+        base, w, tail = self._epoch_state(head)
         tail_s = set(tail)
         return {
             int(e)
@@ -730,6 +738,11 @@ class CdcEngine:
             resolve, phase = self._resolve_patch, "compose_resolve_validate"
         else:
             resolve, phase = self._resolve_lww, "scan_validate_dedup"
+        # the table head, read once per batch: the committed-epoch
+        # filter, the marker set and the resolver's key, schema and
+        # bucket space all come from this one manifest (on an object
+        # store every head read is a LIST request)
+        head = self.table.manifest()
         ops = self.config.rules.op_whitelist
         ev = parsed.withColumn(
             "event_class",
@@ -745,14 +758,14 @@ class CdcEngine:
         # literals after a year of micro-batches).
         live = ev.filter(
             fresh_filter if fresh_filter is not None
-            else self._fresh_epoch_filter()
+            else self._fresh_epoch_filter(head)
         )
         res = None
         try:
             # every job of a phase carries the phase's phase_ms key as
             # its description, so an event log ties it to the phase
             sc.setJobDescription(phase)
-            res = resolve(live)
+            res = resolve(live, head)
             lin_groups = res.lin_groups
             # markers live in the non-negative epoch space only: NULL
             # epochs (malformed lines) and negative epochs (producer
@@ -763,7 +776,7 @@ class CdcEngine:
                     for r in lin_groups
                     if r["_epoch"] is not None and int(r["_epoch"]) >= 0
                 }
-                | self._already_committed_filtered(extra_epochs)
+                | self._already_committed_filtered(extra_epochs, head)
             )
             to_mark = self._marks_for(new_epochs, defer_boundary)
             if not lin_groups:  # empty binlog or every epoch already committed
@@ -939,7 +952,7 @@ class CdcEngine:
                 for df in res.pinned:
                     df.unpersist()
 
-    def _resolve_lww(self, live: DataFrame) -> _Resolved:
+    def _resolve_lww(self, live: DataFrame, head: dict) -> _Resolved:
         """Last-writer-wins resolver (the default): validate every
         event, then keep each key's latest (commit_ts, lsn) image.
 
@@ -965,7 +978,7 @@ class CdcEngine:
         a trigger only chains frame operations onto them. Validation
         rejects are per EVENT."""
         rules, validator = self.config.rules, self.config.validator
-        nb = self.table.num_buckets
+        nb = head["num_buckets"]
         p = self._prep.get(
             "lww",
             (live.schema.json(), rules, validator, nb),
@@ -1028,7 +1041,7 @@ class CdcEngine:
             pinned=[ck],
         )
 
-    def _resolve_patch(self, live: DataFrame) -> _Resolved:
+    def _resolve_patch(self, live: DataFrame, head: dict) -> _Resolved:
         """Patch-mode resolver (``EngineConfig.patch_events``): events
         may carry partial row images (a ``fields`` mask), so per-key
         events COMPOSE in (commit_ts, lsn) order (operators/patch.py)
@@ -1046,15 +1059,15 @@ class CdcEngine:
         from .operators.patch import resolve_patch_batch
         from .schema import reconcile
 
-        key = self.table.key
+        key = head["key"]
         # additive evolution, patch-style: reconcile the incoming
         # payload struct against the table up front so a brand-new
         # column survives resolution (current rows read null for it)
         # and the merge evolves the table schema
         tschema = reconcile(
-            self.table.schema,
+            T.StructType.fromJson(head["schema"]),
             live.schema["payload"].dataType,
-            self.table._aliases_of(self.table.manifest()),
+            LakeTable._aliases_of(head),
         )
         data_cols = [f.name for f in tschema.fields if f.name != key]
         pcols = set(live.schema["payload"].dataType.names)
@@ -1115,7 +1128,7 @@ class CdcEngine:
             "doc_id", "op", "commit_ts", "lsn", *data_cols, "fields",
             "batch_epoch",
         )
-        r = resolve_patch_batch(self.table, apply_ev, schema=tschema)
+        r = resolve_patch_batch(self.table, apply_ev, schema=tschema, head=head)
         is_bad = F.coalesce(F.size(FAIL_COL) > 0, F.lit(False))
         # the post-image pass/fail counts, observed on the checkpoint
         v_obs = Observation()

@@ -149,3 +149,49 @@ def test_rebucket_conflict_raises(spark, tmp_path):
     with pytest.raises(ConcurrentCommitError):
         loser.merge(_up(spark, doc_b, "B"), mode="mor")
     assert LakeTable(spark, root).num_buckets == 16
+
+
+def test_merge_refuses_a_publish_that_changed_the_bucket_space(spark, tmp_path):
+    """A branch ``rebucket(8)`` of a 4-bucket table, published as a
+    fast-forward, wins the race against a merge into a bucket that is
+    empty in both bucket spaces. The touched sets are disjoint, but
+    the merge's files were bucketed for 4 buckets: it must not be
+    filed under the 8-bucket manifest."""
+    root = str(tmp_path / "t")
+    t = _seed(spark, root, n=1, num_buckets=4)  # one row: doc-0
+    # a key outside doc-0's 4-bucket; hash mod 8 reduces to hash mod 4,
+    # so its 8-bucket is empty after the rebucket as well
+    (first, _), (doc, _) = _docs_in_distinct_buckets(spark, 4)
+    assert first == "doc-0"
+    t.create_branch("wide")
+    LakeTable(spark, root, branch="wide").rebucket(8)
+
+    winner = LakeTable(spark, root)
+    race = lambda: winner.publish_branch("wide")  # noqa: E731
+    loser = LakeTable(spark, root, io=RacingIO(race))
+    with pytest.raises(ConcurrentCommitError, match="cannot rebase"):
+        loser.merge(_up(spark, doc, "late"), mode="mor", epochs=[0])
+    t = LakeTable(spark, root)
+    assert t.num_buckets == 8 and t.manifest()["operation"] == "publish"
+    assert {r["doc_id"] for r in t.read().collect()} == {"doc-0"}
+
+
+def test_merge_rebases_over_a_rename(spark, tmp_path):
+    """A merge raced by ``rename_column`` rebases: its files carry the
+    old name, which the renamed column's alias resolves on read."""
+    root = str(tmp_path / "t")
+    _seed(spark, root, n=20)
+    (doc_a, _), _ = _docs_in_distinct_buckets(spark)
+
+    winner = LakeTable(spark, root)
+    race = lambda: winner.rename_column("source", "src")  # noqa: E731
+    loser = LakeTable(spark, root, io=RacingIO(race))
+    info = loser.merge(_up(spark, doc_a, "B"), epochs=[0])  # cow
+
+    assert info["version"] == 4  # create 1, overwrite 2, rename 3
+    t = LakeTable(spark, root)
+    rows = {r["doc_id"]: r for r in t.read().collect()}
+    assert sorted(t.read().columns) == ["doc_id", "n_tok", "src", "tokens"]
+    assert rows[doc_a]["src"] == "B" and len(rows) == 20
+    assert {r["src"] for d, r in rows.items() if d != doc_a} == {"s"}
+    assert t.is_epoch_committed(0)

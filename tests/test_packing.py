@@ -271,6 +271,24 @@ def test_best_fit_chunks_oversized_docs(spark):
     assert Counter(all_real) == Counter(list(range(25)) + [1, 2] + [3])
 
 
+def test_best_fit_packs_equal_chunks_in_chunk_order(spark):
+    """A document three capacities long chunks into three equal
+    pieces that tie on (length, doc_id); chunk_idx breaks the tie, so
+    the packs follow the document's token order."""
+    from dexspark.operators.packing import pack_best_fit
+
+    df = spark.createDataFrame(
+        [("long", list(range(30))), ("s", [7])], "doc_id string, tokens array<int>"
+    ).coalesce(1)
+    packs = sorted(
+        pack_best_fit(df, seq_len=10, eos_id=None).collect(),
+        key=lambda r: int(r["pack_id"].split("-")[1]),
+    )
+    long_packs = [r for r in packs if r["docs"] == ["long"]]
+    assert [r["tokens"] for r in long_packs] == [
+        list(range(i, i + 10)) for i in (0, 10, 20)
+    ]
+
 def test_best_fit_empty_null_docs_and_determinism(spark):
     from dexspark.operators.packing import pack_best_fit
 
